@@ -587,22 +587,31 @@ object Demo {
   }
 
   /** demo.search: embed prompt, retrieve top-k over the store —
-    * exact scan by default, LSH-index-backed with ann="lsh" (the index
-    * path carries the chunk dir's file fingerprint, so a re-import
-    * triggers a rebuild rather than serving a stale index). */
+    * exact scan by default, index-backed with ann="lsh"/"ivf"/"pq".
+    *
+    * The chunk table is read through a store handle
+    * ([[graft.store.AnnIndexes.open]]): it is resolved once per
+    * (session, path, fingerprint), and every later request reuses it,
+    * so a request pays no file listing and no schema-inference job.
+    * The fingerprint (the chunk files' names and lengths, one listing
+    * walk per request) is the staleness key: a re-import or compaction
+    * changes it, and the request opens a fresh handle and, for the ANN
+    * modes, a fresh index path (a rebuild rather than a stale index).
+    * The result is a lazy top-k; [[Rag.aggregateChunkText]] collects
+    * it as one Spark job. */
   def search(spark: SparkSession, store: String, prompt: String,
       topK: Int, threshold: Double, dim: Int,
       ann: String = "exact",
       embedder: Option[graft.functions.Embedder] = None): DataFrame = {
     require(threshold >= -1.0 && threshold <= 1.0,
       s"similarity threshold must be in [-1,1], got $threshold")
-    val chunks = spark.read.parquet(s"$store/chunks")
+    val fp = graft.store.AnnIndexes.fingerprint(spark, s"$store/chunks")
+    val chunks = graft.store.AnnIndexes.open(spark, s"$store/chunks", fp)
     // the query must be embedded by the SAME embedder that built the
     // store (one driver-side call for a service embedder)
     val q = embedder
       .map(_.embed(prompt).map(_.toDouble))
       .getOrElse(Rag.embedQuery(prompt, dim))
-    lazy val fp = graft.store.AnnIndexes.fingerprint(spark, s"$store/chunks")
     // re-imports change the fingerprint → a new index dir; AFTER the
     // new index is built (searchChunksAnn* materialize eagerly), sweep
     // the obsolete COMPLETED siblings of the same kind and dim so the

@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.types._
@@ -264,6 +265,39 @@ case class L2Normalize(child: Expression) extends UnaryExpression
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
+/** query_vector: the one vector a top-k search compares every row
+  * against, as a compact leaf. A `typedLit` of the same array renders
+  * all of its elements wherever the plan is printed, and Spark prints
+  * the plan at every SQL-execution start and AQE update; this leaf
+  * prints as `query_vector(<dim>d#<hash>)` and reaches generated code
+  * as one reference object. It reads back exactly the doubles a
+  * literal would hold, so every score is bit-identical. Equality and
+  * hash compare the array contents, so two searches with one vector
+  * are one expression to the optimizer. Not foldable: constant folding
+  * would turn it back into the literal. */
+case class QueryVector(values: Array[Double]) extends LeafExpression {
+  @transient private lazy val data: ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(values)
+
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def eval(input: InternalRow): Any = data
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    ExprCode.forNonNullValue(JavaCode.global(
+      ctx.addReferenceObj("queryVector", data, classOf[ArrayData].getName),
+      dataType))
+
+  override def equals(other: Any): Boolean = other match {
+    case q: QueryVector => java.util.Arrays.equals(values, q.values)
+    case _ => false
+  }
+  override def hashCode: Int = java.util.Arrays.hashCode(values)
+  override def toString: String = f"query_vector(${values.length}d#$hashCode%08x)"
+  override def sql: String = toString
+}
+
 /** Column-level API + SQL registration for the vector kernel. */
 object VectorFunctions {
   import GraftShim.{column => col, expression => expr}
@@ -276,6 +310,7 @@ object VectorFunctions {
   def l2_distance(a: Column, b: Column): Column = col(L2Distance(expr(a), expr(b)))
   def l2_norm(a: Column): Column = col(L2Norm(expr(a)))
   def l2_normalize(a: Column): Column = col(L2Normalize(expr(a)))
+  def query_vector(v: Array[Double]): Column = col(QueryVector(v))
 
   /** Register as SQL functions on a session (usable from spark.sql). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -174,14 +174,16 @@ object Ivf {
         .collect()
         .map(r => r.getSeq[Double](1).toArray))
 
-  /** ANN search: top-k within the query's `nprobe` nearest cells. */
+  /** ANN search: top-k within the query's `nprobe` nearest cells, of
+    * the rows whose similarity is at least `threshold`. */
   def search(
       indexed: DataFrame, embCol: String, queryVec: Array[Double],
       model: IvfModel, k: Int, nprobe: Int,
-      tieBreak: Seq[String] = Seq.empty): DataFrame = {
+      tieBreak: Seq[String] = Seq.empty,
+      threshold: Double = -1.0): DataFrame = {
     val cells = model.rankCells(l2n(queryVec)).take(nprobe).toSeq
     Similarity.topK(
       indexed.filter(col("ivf_cell").isin(cells: _*)),
-      embCol, queryVec, k, threshold = -1.0, tieBreak = tieBreak)
+      embCol, queryVec, k, threshold = threshold, tieBreak = tieBreak)
   }
 }

@@ -31,7 +31,8 @@ object Similarity {
     * Similarity is rounded to `roundTo` decimals before filter/sort so
     * results are reproducible bit-for-bit across engines and partition
     * orders (raw doubles differ in the last ulp across accumulation
-    * orders). Ties break on `tieBreak`. */
+    * orders). Ties break on `tieBreak`. The query vector is bound as
+    * one [[graft.functions.QueryVector]], not an array literal. */
   def topK(
       df: DataFrame,
       embCol: String,
@@ -40,8 +41,8 @@ object Similarity {
       threshold: Double = -1.0,
       tieBreak: Seq[String] = Seq.empty,
       roundTo: Int = 6): DataFrame = {
-    val sim = round(
-      VectorFunctions.cosine_similarity(col(embCol), typedLit(queryVec)), roundTo)
+    val sim = round(VectorFunctions.cosine_similarity(
+      col(embCol), VectorFunctions.query_vector(queryVec)), roundTo)
     df.withColumn("similarity", sim)
       .filter(col("similarity") >= threshold)
       .orderBy(desc("similarity") +: tieBreak.map(asc): _*)
@@ -314,7 +315,7 @@ object Similarity {
     * references only the two partition columns, so the parquet scan is
     * partition-pruned to the probe buckets; candidates found by more
     * than one table are deduplicated by `idCol` before the exact
-    * cosine top-k. */
+    * cosine top-k of the candidates at or above `threshold`. */
   def lshTopKFromIndex(
       index: DataFrame,
       idCol: String,
@@ -326,7 +327,8 @@ object Similarity {
       probes: Int = 1,
       seed: Long = 42L,
       roundTo: Int = 6,
-      tieBreak: Seq[String] = Seq.empty): DataFrame = {
+      tieBreak: Seq[String] = Seq.empty,
+      threshold: Double = -1.0): DataFrame = {
     val dim = queryVec.length
     val candCond = (0 until tables).map { t =>
       val qSig = signatureOf(hyperplanes(bits, dim, seed + t), queryVec)
@@ -334,7 +336,7 @@ object Similarity {
         col("lsh_bucket").isin(probeBuckets(qSig, bits, probes): _*)
     }.reduce(_ || _)
     topK(index.filter(candCond).dropDuplicates(idCol),
-      embCol, queryVec, k, threshold = -1.0, tieBreak = tieBreak,
+      embCol, queryVec, k, threshold = threshold, tieBreak = tieBreak,
       roundTo = roundTo)
   }
 

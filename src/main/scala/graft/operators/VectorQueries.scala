@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{Embedding, VectorFunctions}
+import graft.store.AnnIndexes
 
 /** Driver-checked similarity-search queries over the embeddings table
   * (SURVEY.md §2.2 R1–R7; §2.8 Class B promoted to oracle checks).
@@ -47,22 +48,15 @@ object VectorQueries {
 
   /** Fingerprint cached per dataset dir: the recursive listing is an
     * index-registration cost, not a per-query cost (driver testdata is
-    * immutable within a run). */
+    * immutable within a run). Every index path carries it, and it is
+    * the key the queries open their index handles with
+    * ([[graft.store.AnnIndexes.open]]), so a search never re-walks an
+    * index's partition dirs. */
   private val embFps =
     scala.collection.concurrent.TrieMap.empty[String, String]
   private def embFp(s: SparkSession, dir: String): String =
     embFps.getOrElseUpdate(dir,
       graft.store.AnnIndexes.fingerprint(s, s"$dir/embeddings.parquet"))
-
-  /** Per-path cached index DataFrame: reusing the same plan keeps the
-    * resolved InMemoryFileIndex, so repeat queries skip re-listing the
-    * partition dirs — the metastore-catalog analogue (a cluster
-    * deployment registers the index as a table; file listing is paid
-    * at registration, not per query). */
-  private val indexDfs =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  private def readIndex(s: SparkSession, path: String): DataFrame =
-    indexDfs.getOrElseUpdate(path, s.read.parquet(path))
 
   /** Build-once multi-table LSH index over the embeddings table. */
   def lshIndex(s: SparkSession, dir: String): String = {
@@ -574,7 +568,8 @@ object VectorQueries {
     // inlined hyperplanes (see lshTopKSql); pruning spec'd in ScalaTest.
     "v6_lsh_topk" -> ((s, dir) => {
       Similarity.lshTopKFromIndex(
-          readIndex(s, lshIndex(s, dir)), "vec_id", "embedding",
+          AnnIndexes.open(s, lshIndex(s, dir), embFp(s, dir)),
+          "vec_id", "embedding",
           probeVec, k = 10, bits = LshBits, tables = LshTables,
           probes = 1, seed = 42L, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
@@ -587,7 +582,7 @@ object VectorQueries {
     // the inlined codebook (ivfTopKSql); pruning spec'd in ScalaTest.
     "v7_ivf_topk" -> ((s, dir) => {
       val (path, model) = ivfIndex(s, dir)
-      Ivf.search(readIndex(s, path), "embedding",
+      Ivf.search(AnnIndexes.open(s, path, embFp(s, dir)), "embedding",
           probeVec, model, k = 10, nprobe = 4, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
     }),
@@ -602,7 +597,8 @@ object VectorQueries {
       val queries = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
       Similarity.lshTopKBatchFromIndex(
-          readIndex(s, lshIndex(s, dir)), queries, "qid", "qv",
+          AnnIndexes.open(s, lshIndex(s, dir), embFp(s, dir)),
+          queries, "qid", "qv",
           "vec_id", "embedding", k = 5, dim = Dim,
           bits = LshBits, tables = LshTables, seed = 42L)
         .orderBy(asc("query_id"), desc("similarity"), asc("neighbor_id"))
@@ -616,8 +612,8 @@ object VectorQueries {
     // v9 stays asserted in ScalaTest.
     "v11_pq_topk" -> ((s, dir) => {
       val (path, model) = pqIndex(s, dir)
-      Pq.search(readIndex(s, path), "vec_id", "embedding", probeVec,
-          model, topK = 10, refine = 4)
+      Pq.search(AnnIndexes.open(s, path, embFp(s, dir)),
+          "vec_id", "embedding", probeVec, model, topK = 10, refine = 4)
         .select("vec_id", "l2_dist")
     }),
 
@@ -628,8 +624,8 @@ object VectorQueries {
     // inlined centroids/codebooks (ivfPqTopKSql); file-pruning spec'd.
     "v12_ivfpq_topk" -> ((s, dir) => {
       val (path, (coarse, fine)) = ivfPqIndex(s, dir)
-      Pq.searchIvfPq(readIndex(s, path), "vec_id", "embedding", probeVec,
-          coarse, fine, topK = 10, nprobe = 4)
+      Pq.searchIvfPq(AnnIndexes.open(s, path, embFp(s, dir)),
+          "vec_id", "embedding", probeVec, coarse, fine, topK = 10, nprobe = 4)
         .select("vec_id", "l2_dist")
     }),
 
@@ -645,8 +641,9 @@ object VectorQueries {
     "v20_lsh_recall" -> ((s, dir) => {
       recallVs(
         Similarity.lshTopKFromIndex(
-          readIndex(s, lshIndex(s, dir)), "vec_id", "embedding",
-          probeVec, k = RecallK, bits = LshBits, tables = LshTables,
+          AnnIndexes.open(s, lshIndex(s, dir), embFp(s, dir)),
+          "vec_id", "embedding", probeVec, k = RecallK, bits = LshBits,
+          tables = LshTables,
           probes = 1, seed = 42L, tieBreak = Seq("vec_id")),
         exactCosineTopK(s, dir))
     }),
@@ -654,24 +651,26 @@ object VectorQueries {
     "v21_ivf_recall" -> ((s, dir) => {
       val (path, model) = ivfIndex(s, dir)
       recallVs(
-        Ivf.search(readIndex(s, path), "embedding", probeVec, model,
-          k = RecallK, nprobe = RecallNprobe, tieBreak = Seq("vec_id")),
+        Ivf.search(AnnIndexes.open(s, path, embFp(s, dir)),
+          "embedding", probeVec, model, k = RecallK, nprobe = RecallNprobe,
+          tieBreak = Seq("vec_id")),
         exactCosineTopK(s, dir))
     }),
 
     "v22_pq_recall" -> ((s, dir) => {
       val (path, model) = pqIndex(s, dir)
       recallVs(
-        Pq.search(readIndex(s, path), "vec_id", "embedding", probeVec,
-          model, topK = RecallK, refine = 4),
+        Pq.search(AnnIndexes.open(s, path, embFp(s, dir)),
+          "vec_id", "embedding", probeVec, model, topK = RecallK, refine = 4),
         exactL2TopK(s, dir))
     }),
 
     "v23_ivfpq_recall" -> ((s, dir) => {
       val (path, (coarse, fine)) = ivfPqIndex(s, dir)
       recallVs(
-        Pq.searchIvfPq(readIndex(s, path), "vec_id", "embedding",
-          probeVec, coarse, fine, topK = RecallK, nprobe = RecallNprobe),
+        Pq.searchIvfPq(AnnIndexes.open(s, path, embFp(s, dir)),
+          "vec_id", "embedding", probeVec, coarse, fine, topK = RecallK,
+          nprobe = RecallNprobe),
         exactL2TopK(s, dir))
     }),
 

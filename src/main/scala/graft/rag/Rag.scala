@@ -1,12 +1,14 @@
 package graft.rag
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{Embedding, VectorFunctions}
 import graft.ingest.Chunker
 import graft.operators.Similarity
-import graft.store.Catalog
+import graft.store.{AnnIndexes, Catalog}
 
 /** RAG retrieval + prompt assembly (SURVEY.md §2.5 G1–G5) over a chunk
   * store, plus the end-to-end import pipeline (§3.1's Spark
@@ -145,9 +147,8 @@ object Rag {
         tmp, tables = tables, bits = bits)
     }
     Similarity.lshTopKFromIndex(
-        spark.read.parquet(indexPath), "id", "embedding", queryVec, topK,
-        bits = bits, tables = tables, tieBreak = Seq("id"))
-      .filter(col("similarity") >= threshold)
+      AnnIndexes.open(spark, indexPath), "id", "embedding", queryVec, topK,
+      bits = bits, tables = tables, tieBreak = Seq("id"), threshold = threshold)
   }
 
   /** IVF variant of `searchChunksAnn`: cell-partitioned index + codebook
@@ -176,10 +177,9 @@ object Rag {
     val model = ivfStoreModels.getOrElseUpdate(indexPath,
       graft.operators.Ivf.loadModel(spark, s"$indexPath/_model"))
     graft.operators.Ivf.search(
-        spark.read.parquet(indexPath), "embedding", queryVec, model,
-        k = topK, nprobe = math.min(nprobe, model.nlist),
-        tieBreak = Seq("id"))
-      .filter(col("similarity") >= threshold)
+      AnnIndexes.open(spark, indexPath), "embedding", queryVec, model,
+      k = topK, nprobe = math.min(nprobe, model.nlist),
+      tieBreak = Seq("id"), threshold = threshold)
   }
 
   private val pqStoreModels =
@@ -228,7 +228,7 @@ object Rag {
     val model = pqStoreModels.getOrElseUpdate(indexPath,
       graft.operators.Pq.loadModel(spark, s"$indexPath/_model"))
     val lut = model.adcTable(queryVec)
-    val cands = spark.read.parquet(indexPath)
+    val cands = AnnIndexes.open(spark, indexPath)
       .withColumn("adc",
         graft.operators.Pq.adcScoreCol(col("pq_code"), lut, model.k))
       .orderBy(asc("adc"), asc("id"))
@@ -239,33 +239,61 @@ object Rag {
   }
 
   /** G3: fold the ordered top-k into one context string (reference
-    * `cli/generate_text.py:68-85`). Executed as an ordered
-    * array_sort(collect_list(struct))) aggregation — deterministic
-    * without a driver loop; k is small so the single group is fine. */
+    * `cli/generate_text.py:68-85`). The hits' k projected rows —
+    * `-similarity`, `id`, `chunk_text` and the coalesced
+    * `title`/`author`/`publication_date` — are collected, then sorted
+    * and formatted on the driver exactly as the Spark expression
+    * `array_join(transform(array_sort(collect_list(struct(...))),
+    * format_string(...)), "\n\n")` would: struct fields compare in
+    * order with nulls first, doubles as Spark SQL compares them
+    * (-0.0 equals 0.0, NaN is largest), strings by UTF-8 bytes; the
+    * excerpt is formatted with `Locale.US`, a null text renders as
+    * "null", and no hits give "". A projection over a top-k search
+    * plans as one `TakeOrderedAndProject` collect: one Spark job and
+    * one stage, where a single-row aggregation would add a shuffle, a
+    * stage and a job for k rows. */
   def aggregateChunkText(hits: DataFrame): String = {
     // tolerate stores without source metadata joined in
     val withMeta = Seq("title", "author", "publication_date")
       .foldLeft(hits)((d, c) =>
         if (d.columns.contains(c)) d else d.withColumn(c, lit(null: String)))
-    val assembled = withMeta
-      .agg(
-        array_join(
-          transform(
-            array_sort(collect_list(struct(
-              (-col("similarity")).as("neg_sim"),
-              col("id").as("id"),
-              col("chunk_text").as("txt"),
-              coalesce(col("title"), lit("unknown")).as("title"),
-              coalesce(col("author"), lit("unknown")).as("author"),
-              coalesce(col("publication_date").cast("string"), lit("unknown"))
-                .as("pub")))),
-            h => format_string(
-              "Excerpt from \"%s\", by %s, published in %s: >>> %s <<<",
-              h.getField("title"), h.getField("author"), h.getField("pub"),
-              h.getField("txt"))),
-          "\n\n"))
-      .head()
-    if (assembled.isNullAt(0)) "" else assembled.getString(0)
+    withMeta
+      .select(
+        (-col("similarity")).cast("double"),
+        col("id").cast("long"),
+        col("chunk_text"),
+        coalesce(col("title"), lit("unknown")),
+        coalesce(col("author"), lit("unknown")),
+        coalesce(col("publication_date").cast("string"), lit("unknown")))
+      .collect()
+      .map(r => (
+        if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0)),
+        if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)),
+        r.getString(2), r.getString(3), r.getString(4), r.getString(5)))
+      .sorted(excerptOrder)
+      .map { case (_, _, text, title, author, pub) =>
+        String.format(java.util.Locale.US,
+          "Excerpt from \"%s\", by %s, published in %s: >>> %s <<<",
+          title, author, pub, text)
+      }
+      .mkString("\n\n")
+  }
+
+  private def nullsFirst[T <: AnyRef](cmp: (T, T) => Int): Ordering[T] =
+    (x, y) =>
+      if (x eq null) { if (y eq null) 0 else -1 }
+      else if (y eq null) 1
+      else cmp(x, y)
+
+  /** Spark SQL's ascending struct ordering over the fields
+    * [[aggregateChunkText]] sorts by. */
+  private val excerptOrder = {
+    val strings = nullsFirst[String]((x, y) =>
+      UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y)))
+    Ordering.Tuple6(
+      nullsFirst[java.lang.Double]((x, y) => SQLOrderingUtil.compareDoubles(x, y)),
+      nullsFirst[java.lang.Long]((x, y) => x.compareTo(y)),
+      strings, strings, strings, strings)
   }
 
   /** G4: conditional prompt template (reference

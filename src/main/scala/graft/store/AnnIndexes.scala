@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once materialization for ANN indexes (LSH bucket tables, IVF
   * cell tables, MinHash signature tables).
@@ -20,6 +20,12 @@ import org.apache.spark.sql.SparkSession
   * partition discovery, so the marker and any `_model` sidecar dir can
   * live inside the index root. A half-built index (no marker) is
   * deleted and rebuilt.
+  *
+  * Searches read indexes and chunk stores through [[open]]: one
+  * resolved DataFrame per table path, keyed on the table's
+  * [[fingerprint]], so repeat requests skip listing and schema
+  * inference and a rewritten table is never served from a stale
+  * listing.
   */
 object AnnIndexes {
 
@@ -38,19 +44,51 @@ object AnnIndexes {
   def fingerprint(spark: SparkSession, tablePath: String): String = {
     val p = new org.apache.hadoop.fs.Path(tablePath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // recursive: partitioned tables append files inside partition
+    // dirs, which a top-level listing would not see. A plain
+    // listStatus walk, not listFiles: on the local filesystem every
+    // LocatedFileStatus that listFiles builds forks an `ls -ld` for
+    // its permissions, which the fingerprint never reads.
+    def files(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
     if (!fs.exists(p)) "absent"
     else {
-      // recursive: partitioned tables append files inside partition
-      // dirs, which a top-level listing would not see
-      val it = fs.listFiles(p, true)
-      val names = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val s = it.next()
-        names += s"${s.getPath.toUri.getPath.stripPrefix(tablePath)}:${s.getLen}"
-      }
+      val names = files(p).map(s =>
+        s"${s.getPath.toUri.getPath.stripPrefix(tablePath)}:${s.getLen}")
       f"${scala.util.hashing.MurmurHash3.stringHash(names.sorted.mkString("|"))}%08x"
     }
   }
+
+  /** One open handle per table path: the session, the table's
+    * [[fingerprint]] when it was opened, and the resolved DataFrame. */
+  private final case class Handle(
+      spark: SparkSession, fingerprint: String, df: DataFrame)
+
+  private val handles =
+    scala.collection.concurrent.TrieMap.empty[String, Handle]
+
+  /** The parquet table at `path`, resolved once per (session, path,
+    * fingerprint) and reused by every later request. Reusing the
+    * DataFrame keeps its resolved file index and schema, so a request
+    * pays neither the file listing nor the footer-reading schema
+    * inference job of a fresh `spark.read.parquet` — the
+    * metastore-catalog analogue (a cluster deployment registers the
+    * table; listing is paid at registration, not per query). The
+    * fingerprint is the staleness key: a re-import, compaction or
+    * index rebuild changes the file names or lengths under `path`, and
+    * the next request opens a fresh handle in place of the old one. */
+  def open(spark: SparkSession, path: String, fingerprint: String): DataFrame =
+    handles.get(path) match {
+      case Some(h) if (h.spark eq spark) && h.fingerprint == fingerprint => h.df
+      case _ =>
+        val df = spark.read.parquet(path)
+        handles(path) = Handle(spark, fingerprint, df)
+        df
+    }
+
+  /** [[open]] keyed on the table's current [[fingerprint]]. */
+  def open(spark: SparkSession, path: String): DataFrame =
+    open(spark, path, fingerprint(spark, path))
 
   /** Cross-process-safe build-once: the closure writes into a private
     * temp dir which is renamed into place only when complete (marker
