@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...},
-  * followed by one non-contract provenance line (per-trial times and
-  * loadavg samples) so a truncated capture can never eat the headline.
+  * followed by one non-contract provenance line (failed queries,
+  * per-trial times and loadavg samples) so a truncated capture can
+  * never eat the headline. A failed query is timed -1, makes the total
+  * -1 and the exit status 1.
   *
   * Each query is run three times and the fastest run reported: the
   * first run pays JVM/codegen warmup that a long-lived cluster
@@ -57,9 +59,9 @@ object Bench {
     "a37_scd2_asof", // SCD2 via as-of union-sort (vs a35's interval join)
     "m1_media_features", // batched binary decode plumbing
     "m4_image_decode", // REAL ImageIO PNG encode+decode roundtrip
-    // g1 is the headline's measured floor (round-8 decomposition,
-    // tools.ProfileG1b at sf0.1, warm minima): pairs build 1.45 s +
-    // ~0.9 s fixed (degree/weight build, N, top-100) + ~0.75 s per
+    // g1 is the headline's measured floor (round-8 decomposition at
+    // sf0.1, warm minima): pairs build 1.45 s + ~0.9 s fixed
+    // (degree/weight build, N, top-100) + ~0.75 s per
     // rank iteration — each iteration is ONE broadcast join + ONE agg
     // shuffle, i.e. local-mode stage latency, not algorithmic waste
     // (round 7 already measured hinted shuffle/merge variants 1.2-1.3×
@@ -218,16 +220,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.quietBoundedWindowWarnings()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.session(s"local[$cpus]", cpus)
 
     def timeOnce(name: String): Double = {
       // drop persisted intermediates between runs: queries that share
@@ -300,7 +294,11 @@ object Bench {
       .map { case (k, _, _, ls) =>
         "\"" + k + "\":" + ls.map(x => f"$x%.2f").mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    // a failed query has no time, so the headline has none either: the
+    // total carries the same -1 sentinel as the failed query's entry
+    // (never the smaller sum of the survivors) and the run exits 1
+    val failed = results.collect { case (k, v, _, _) if v < 0 => k }
+    val total = if (failed.nonEmpty) -1.0 else results.map(_._2).sum
     // explicit provenance for every bench-only shape override: a reader
     // of the JSON can see which timed entries differ from the declared,
     // oracle-checked query (the override's containment in the declared
@@ -315,7 +313,9 @@ object Bench {
     // provenance moves to a SECOND, non-contract line so a truncated
     // capture can never eat the headline again.
     println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","overrides":$ov,"loadavg_1m_start":$loadStart%.2f,"loadavg_1m_end":$loadEnd%.2f,"java_procs":${javaProcs()}}""")
-    println(f"""{"metric":"headline_provenance","loadavg_per_query":$loads,"loadavg_per_trial":$trialLoads,"trials":$ts}""")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    println(f"""{"metric":"headline_provenance","failed":$failedJson,"loadavg_per_query":$loads,"loadavg_per_trial":$trialLoads,"trials":$ts}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

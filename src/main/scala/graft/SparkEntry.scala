@@ -9,7 +9,7 @@ import graft.operators.{EventQueries, GraphQueries, PipelineQueries, RelationalQ
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the full declared operator inventory; each entry with a
-  * matching `oracleSql` is hash-checked against DuckDB by the driver
+  * matching `oracles` entry is hash-checked against DuckDB by the driver
   * (CORRECTNESS_r{N}.json); entries without oracle SQL get a rows-only
   * check and are additionally covered by ScalaTest golden/property
   * specs.
@@ -34,16 +34,24 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.queries ++ VectorQueries.queries ++
       TextQueries.queries ++ PipelineQueries.queries ++
       EventQueries.queries ++ GraphQueries.queries
 
   /** For each key in queries, equivalent SQL runnable by DuckDB on the
-    * same parquet tables. Omitted for non-SQL-expressible ops → driver
-    * records a weaker rows-only check. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracleSql ++ VectorQueries.oracleSql ++
+    * same parquet tables, as a function of the corpus `(spark, dir)`
+    * and nothing else: a constant for most queries, derived from the
+    * corpus (a trained model, an emitted pair set, an alphabet) by the
+    * query's own deterministic builders for the rest. Omitted for
+    * non-SQL-expressible ops, and None for a degenerate corpus → the
+    * driver records a weaker rows-only check. */
+  lazy val oracles: Map[String, (SparkSession, String) => Option[String]] =
+    (RelationalQueries.oracleSql ++ VectorQueries.oracleSql ++
       TextQueries.oracleSql ++ EventQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ GraphQueries.oracleSql
+      PipelineQueries.oracleSql ++ GraphQueries.oracleSql)
+      .map { case (name, sql) =>
+        name -> ((_: SparkSession, _: String) => Some(sql)) } ++
+      VectorQueries.corpusOracles ++ TextQueries.corpusOracles ++
+      PipelineQueries.corpusOracles
 }

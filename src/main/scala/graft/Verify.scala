@@ -6,23 +6,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
 
   /** Run each selected query against `sfDir`, write its result to
-    * `outDir/<name>`, then dump `SparkEntry.oracleSql` as
-    * `outDir/oracle_sql.json` (AFTER the queries ran — the v21-family
-    * inlined-constant oracles are stashed at query time). Shared by
-    * [[main]] (the driver's gate) and the in-suite Unicode fixture
-    * gate (UnicodeFixtureGateSpec), so the CI gate exercises the REAL
-    * dump path, not a parallel reimplementation. */
+    * `outDir/<name>`, then write the selected queries' oracles (from
+    * `SparkEntry.oracles`, evaluated on `sfDir`) as
+    * `outDir/oracle_sql.json`. Shared by [[main]] (the driver's gate)
+    * and the in-suite Unicode fixture gate (UnicodeFixtureGateSpec),
+    * so the CI gate exercises the REAL dump path, not a parallel
+    * reimplementation. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       only: Set[String] = Set.empty): Unit = {
     new java.io.File(outDir).mkdirs()
-    // dump-time oracle stashes survive across dump() calls in one JVM:
-    // without this reset, a targeted dump that EXCLUDES a stashed query
-    // would emit that query's oracle from the PREVIOUS dump's corpus
-    // (advisor, round 12) — oracles must come only from queries that
-    // ran in THIS dump
-    graft.operators.TextQueries.resetOracleStashes()
-    graft.operators.VectorQueries.resetOracleStashes()
-    graft.operators.PipelineQueries.resetOracleStashes()
     // retired-recipe sidecars (superseded store prefixes) are garbage
     // the moment the recipe bumps — sweep them here so they never
     // accumulate across rounds; temp-dir-keyed sidecars from PREVIOUS
@@ -34,9 +26,9 @@ object Verify {
     // sequential by design: concurrent submission of the heavy queries
     // (pairwise joins + embedding pipelines) thrashes a single local
     // JVM (measured >4× slower than sequential at sf0.01)
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -61,7 +53,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // evaluated after the queries ran, so corpus-derived oracles reuse
+    // the sidecars their queries built (run order changes only cost)
+    val json = SparkEntry.oracles
+      .filter { case (name, _) => selected.contains(name) }
+      .flatMap { case (name, oracle) => oracle(spark, sfDir).map(name -> _) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }
@@ -72,15 +68,8 @@ object Verify {
     // iteration on one query without the ~70-query sweep)
     val only: Set[String] = rest.headOption
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.quietBoundedWindowWarnings()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Tables.session(s"local[$cpus]", cpus)
     dump(spark, sfDir, outDir, only)
     spark.stop()
   }

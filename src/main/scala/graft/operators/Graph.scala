@@ -1010,7 +1010,7 @@ object GraphQueries {
         |    / (4 * m_edges * m_edges), 6) AS modularity
         | FROM mm, ag, ia""".stripMargin.replaceAll("\n", ""))))
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     // g9: the 4 Bellman–Ford relaxation rounds unrolled as CTEs over
     // the order-count-weighted symmetric edge list; integer costs, so
     // distances are exact sums in both engines.

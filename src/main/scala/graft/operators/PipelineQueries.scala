@@ -810,7 +810,6 @@ object PipelineQueries {
     // (its arithmetic is pinned corpus-wide by v1/v4/v5's oracles
     // over the same cosine machinery).
     "r1_rag_retrieval" -> ((s, dir) => {
-      lastRagCtx = Some((s, dir))
       // balanced (round 18): same rationale as r3 — embed in the scan
       val chunks = Rag.buildChunks(
         Tables.balanced(Tables.load(s, dir, "documents")
@@ -1345,7 +1344,6 @@ object PipelineQueries {
     // a persisted store the legs share the parquet scan instead and
     // no cache is needed).
     "r3_hybrid_retrieval" -> ((s, dir) => {
-      lastRagCtx = Some((s, dir))
       // balanced (round 18): chunk+embed run inside the scan
       // projection, and the documents table is one local file — the
       // shared cache's materialization otherwise embeds on 1-3 cores
@@ -1414,7 +1412,6 @@ object PipelineQueries {
     // excerpt's chunk text in SQL and reassembles the full template
     // string — the entire G1–G4 assembly is cross-engine-verified.
     "r2_rag_prompt" -> ((s, dir) => {
-      lastRagCtx = Some((s, dir))
       import s.implicits._
       val chunks = Rag.buildChunks(
         Tables.load(s, dir, "documents").select("doc_id", "text"),
@@ -1425,15 +1422,6 @@ object PipelineQueries {
       Seq(prompt).toDF("prompt")
     }),
   )
-
-  /** Set by the r1/r2/r3 query closures; consumed at oracle-dump time
-    * (the v21–v23 stash pattern) to build the inlined-pool RAG
-    * oracles. */
-  @volatile private var lastRagCtx: Option[(SparkSession, String)] = None
-
-  /** Clear the dump-time RAG-context stash (see
-    * [[TextQueries.resetOracleStashes]]). */
-  private[graft] def resetOracleStashes(): Unit = { lastRagCtx = None }
 
   /** The engine's top-`n` retrieval pool (threshold −1, so it covers
     * every leg's threshold) with embeddings, as a DuckDB VALUES body:
@@ -1536,20 +1524,17 @@ object PipelineQueries {
          |   || 'Question: $q' AS prompt FROM ctx""".stripMargin.replaceAll("\n", "")
     }
 
-  /** The RAG oracles exist once an r-query has run this JVM (always
-    * true when Verify dumps after a full sweep; a targeted run that
-    * skips the family omits them → rows-only for that run). */
-  private def ragOracles: Map[String, String] =
-    lastRagCtx.toSeq.flatMap { case (s, dir) =>
-      r1OracleSql(s, dir).map("r1_rag_retrieval" -> _) ++
-        r2OracleSql(s, dir).map("r2_rag_prompt" -> _) ++
-        r3OracleSql(s, dir).map("r3_hybrid_retrieval" -> _)
-    }.toMap
+  /** The RAG oracles inline the engine's retrieval pool, recomputed
+    * from the corpus (None on an empty pool → rows-only). */
+  val corpusOracles: Map[String, (SparkSession, String) => Option[String]] = Map(
+    "r1_rag_retrieval" -> (r1OracleSql _),
+    "r2_rag_prompt" -> (r2OracleSql _),
+    "r3_hybrid_retrieval" -> (r3OracleSql _))
 
   /** m1's non-feature columns are plain SQL over `documents`: the
     * media_type mapping is doc_id % 3 → image/audio/video and n_bytes
     * is the utf-8 byte length the binary cast produces. */
-  def oracleSql: Map[String, String] = ragOracles ++ Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "m3_audio_windows" ->
       """WITH v AS (SELECT doc_id AS asset_id,
         |   octet_length(encode(text)) AS n FROM documents

@@ -177,46 +177,6 @@ object TextQueries {
       |    - 15.59::DOUBLE AS fk
       |  FROM fkw)""".stripMargin
 
-  /** Set by the d3/d5/d11 query closures; consumed at oracle-dump time
-    * (Verify dumps oracleSql AFTER the queries ran — the v21–v23
-    * stash pattern) to re-derive the emitted pair/mapping sets for the
-    * inlined-pair precision oracles. Re-running is deterministic:
-    * seeded hashes and build-once index/codebook sidecars. */
-  @volatile private var lastDedupCtx: Option[(SparkSession, String)] = None
-
-  /** t37/t38's learned merge table, stashed at query time so the
-    * oracles can inline the claimed merges and re-derive each round's
-    * argmax / the vocab segmentation independently (the v21
-    * trained-constants pattern). Both queries train on the same data
-    * with the same deterministic loop, so either writer stashes the
-    * same model. */
-  @volatile private var lastBpeModel: Option[Seq[(String, String, Long)]] =
-    None
-
-  /** Set by the t42 query closure; consumed at oracle-dump time to
-    * collect the corpus code-point alphabet and inline its canonical
-    * fold map (DuckDB has no NFKC function). */
-  @volatile private var lastCanonCtx: Option[(SparkSession, String)] = None
-
-  /** Set by d21's closure; its oracle needs the dump-time canon-chain
-    * inlining (the t42 pattern) so it is emitted only for a corpus the
-    * query actually ran against. */
-  @volatile private var lastDecontamCtx: Option[(SparkSession, String)] = None
-
-  /** Clear every dump-time oracle stash (round 12, advisor): the
-    * stashes are module-level and survive across [[graft.Verify.dump]]
-    * invocations in one JVM, so a later TARGETED dump that excludes a
-    * stashed query would still emit its oracle — built from the
-    * PREVIOUS corpus dir — into the new oracle_sql.json. Called at the
-    * top of every dump so an oracle is only ever emitted for a query
-    * that ran in THAT dump. */
-  private[graft] def resetOracleStashes(): Unit = {
-    lastDedupCtx = None
-    lastBpeModel = None
-    lastCanonCtx = None
-    lastDecontamCtx = None
-  }
-
   private[graft] val BpeMergeCount = 6
 
   /** One-batch word-frequency aggregate over a documents frame — the
@@ -670,19 +630,17 @@ object TextQueries {
     * word frequency and partial-aggregate map-side, the argmax is a
     * TakeOrdered(1), and the one-row collects are the loop-carried
     * state (the d11 k-means precedent). k is the caller's budget — the
-    * declared t37 query trains [[BpeMergeCount]] rounds, and
-    * `tools.ProbeBpeK` measures the per-round cost curve at larger k
-    * (each round re-segments every distinct word against i merges, so
-    * round cost grows ~linearly in i — see the probe's numbers before
-    * raising the declared count). `onRound` observes (round, merge,
-    * seconds) — a timing hook, not control flow. */
+    * declared t37 query trains [[BpeMergeCount]] rounds. Each round
+    * re-segments every distinct word against i merges, but measured
+    * (round 12, local[32]) the round cost is flat in i at these vocab
+    * sizes: sf0.1 (31 distinct words) k=24 → 0.24–0.46 s per round,
+    * sf1 (310 words) k=12 → 0.36–0.55 s. It is the fixed two-job round
+    * (argmax + 1-row collect), so raising k costs ~k × 0.4 s; the
+    * expression depth in i would surface only at a web-scale vocab. */
   private[graft] def trainBpe(
-      words: DataFrame, k: Int,
-      onRound: (Int, (String, String, Long), Double) => Unit =
-        (_, _, _) => ()): Vector[(String, String, Long)] = {
+      words: DataFrame, k: Int): Vector[(String, String, Long)] = {
     var merges = Vector.empty[(String, String, Long)]
-    for (i <- 1 to k) {
-      val t0 = System.nanoTime()
+    for (_ <- 1 to k) {
       val top = words
         .select(col("wc"), explode(TextAnalysis.piecePairs(
           TextAnalysis.bpeSegment(col("w"),
@@ -691,11 +649,9 @@ object TextQueries {
         .agg(sum("wc").as("c"))
         .orderBy(desc("c"), asc("l"), asc("r"))
         .limit(1).collect()
-      if (top.nonEmpty) {
-        val m = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges = merges :+ m
-        onRound(i, m, (System.nanoTime() - t0) / 1e9)
-      }
+      if (top.nonEmpty)
+        merges = merges :+
+          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
     }
     merges
   }
@@ -1316,7 +1272,6 @@ object TextQueries {
     // merge at any rank breaks the hash.
     "t37_bpe_train" -> ((s, dir) => {
       val merges = bpeModelFor(s, dir)
-      lastBpeModel = Some(merges)
       import s.implicits._
       merges.zipWithIndex
         .map { case ((l, r, c), i) => (i + 1L, l, r, c) }
@@ -1338,7 +1293,6 @@ object TextQueries {
     // word, the original-BPE word-count trick applied to inference.
     "t38_bpe_encode" -> ((s, dir) => {
       val merges = bpeModelFor(s, dir)
-      lastBpeModel = Some(merges)
       val pieces = bpeWordCounts(s, dir).select(col("w"),
         size(TextAnalysis.bpeSegment(col("w"),
           merges.map(m => (m._1, m._2)))).cast("long").as("np"))
@@ -1416,7 +1370,6 @@ object TextQueries {
     // recomputes the whitespace-collapse + md5 + changed flag
     // independently. Row-local map work — zero shuffles.
     "t42_canonical_key" -> ((s, dir) => {
-      lastCanonCtx = Some((s, dir))
       val canon = graft.functions.NfkcCasefold(col("text"))
       docs(s, dir).select(
           col("doc_id"),
@@ -2103,7 +2056,6 @@ object TextQueries {
     // SQL), so a wrong verify value or a sub-threshold emission
     // hash-mismatches. Recall-vs-d2 stays asserted in ScalaTest.
     "d3_minhash_neardup" -> ((s, dir) => {
-      lastDedupCtx = Some((s, dir))
       // mh2: recipe version — round 11's script-aware shinglesSeg
       // changes the stored shingle sets, so round-10 whitespace-shingle
       // indexes must not be reused (the p8 store-key principle)
@@ -2128,7 +2080,6 @@ object TextQueries {
     // re-derives the ENTIRE pair set independently — pigeonhole chunk
     // blocking, candidate dedup, bit_count(xor) Hamming, threshold.
     "d4_simhash_neardup" -> ((s, dir) => {
-      lastDedupCtx = Some((s, dir))
       Dedup.simHashNearDupPairs(docs(s, dir), "doc_id", "text",
           maxHamming = 10, blocks = 4)
         .orderBy("a_id", "b_id")
@@ -2141,7 +2092,6 @@ object TextQueries {
     // threshold are cross-engine-checked. Recall vs exact v4 asserted
     // in ScalaTest.
     "d5_embedding_neardup" -> ((s, dir) => {
-      lastDedupCtx = Some((s, dir))
       Dedup.embeddingNearDupPairs(Tables.load(s, dir, "embeddings"),
           "vec_id", "embedding", dim = 64, threshold = 0.3, bits = 6)
         .orderBy("a_id", "b_id")
@@ -2161,7 +2111,6 @@ object TextQueries {
     // the diffuse similar-topic mass — deduping there collapses 89%
     // of the corpus and densifies the CC graph for nothing).
     "d11_semantic_dedup" -> ((s, dir) => {
-      lastDedupCtx = Some((s, dir))
       // nCells DERIVED from the corpus size (round 11 — the dump-time
       // derived-constant discipline applied to the DECLARED query):
       // target ~1k vectors per cell so within-cell pair work scales
@@ -3517,8 +3466,7 @@ object TextQueries {
     * ([[Dedup.benchmarkContamination]]). Covers TRAIN docs only
     * (%23≠0); the benchmark slice itself is eval data a real pipeline
     * holds outside the corpus — funnel callers left-join and treat it
-    * as unscreened. Sets the dump-time oracle context (the replay
-    * needs the corpus alphabet for its canon chain). */
+    * as unscreened. */
   private[graft] def benchmarkDecontamination(
       s: SparkSession, dir: String): DataFrame = {
     val (train, bench) = decontamInputs(s, dir)
@@ -3528,11 +3476,9 @@ object TextQueries {
   /** d21's (train, bench) input pair — the %23 benchmark slice and
     * the plant-mutated train frame — exposed so the STREAMING face
     * ([[graft.streaming.FunnelStreams]]' screen-at-ingest fold) feeds
-    * the exact same planted inputs batch-at-a-time. Sets the
-    * dump-time oracle context. */
+    * the exact same planted inputs batch-at-a-time. */
   private[graft] def decontamInputs(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    lastDecontamCtx = Some((s, dir))
     // balanced: the gram passes are the heavy map work of d21 —
     // single-core under the local one-file layout. Round 18: balance
     // AFTER each leg's %23 filter, not before — the shared
@@ -3857,15 +3803,15 @@ object TextQueries {
        |     ELSE list_append(acc, x[1]) END)[2:] AS p FROM s$i)"""
       .stripMargin.replaceAll("\n", "")
 
-  /** t37's oracle, generated from the stashed merge table: re-derives
+  /** t37's oracle, generated from the corpus's merge table: re-derives
     * EVERY round's argmax from scratch — round i segments the vocab
     * with the CLAIMED merges 1..i-1 inlined as literal fold steps
     * (chr(1) sentinel seeds each list_reduce; the corpus is ASCII
     * text, so the sentinel can't collide), recomputes the weighted
     * pair counts, and takes its own (count DESC, l, r) argmax. Any
     * wrong claimed merge changes the derived row → hash mismatch. */
-  private def t37OracleSql: Option[String] =
-      lastBpeModel.filter(_.nonEmpty).map { merges =>
+  private def t37OracleSql(s: SparkSession, dir: String): Option[String] =
+      Some(bpeModelFor(s, dir)).filter(_.nonEmpty).map { merges =>
     // (an empty merge table — degenerate corpus with no adjacent
     // pairs — would render `FROM ()`; the filter above drops the
     // oracle entirely so the driver records rows-only, not a crash)
@@ -3902,7 +3848,8 @@ object TextQueries {
     * inlined as chained folds, then join the per-word piece counts
     * back onto the corpus token stream — the same
     * vocab-once/corpus-probe shape as the Spark plan. */
-  private def t38OracleSql: Option[String] = lastBpeModel.map { merges =>
+  private def t38OracleSql(s: SparkSession, dir: String): Option[String] =
+      Some(bpeModelFor(s, dir)).map { merges =>
     val segCtes = merges.zipWithIndex.map {
       case ((a, b, _), i) => segCteSql(a, b, i, "w")
     }
@@ -4038,28 +3985,25 @@ object TextQueries {
          | FROM documents ORDER BY doc_id""".stripMargin.replaceAll("\n", ""))
   }
 
-  /** The pair-set oracles exist once their query has run this JVM
-    * (always true when Verify dumps after a full sweep; a targeted run
-    * that skips the dedup family simply omits them → rows-only). */
-  private def pairOracles: Map[String, String] =
-    lastDedupCtx.toSeq.flatMap { case (s, dir) =>
-      d3OracleSql(s, dir).map("d3_minhash_neardup" -> _) ++
-        d4OracleSql(s, dir).map("d4_simhash_neardup" -> _) ++
-        d5OracleSql(s, dir).map("d5_embedding_neardup" -> _) ++
-        d11OracleSql(s, dir).map("d11_semantic_dedup" -> _)
-    }.toMap
+  /** Oracles that inline constants derived from the corpus (emitted
+    * pair sets, signatures, the BPE merge table, the code-point
+    * alphabet), each rebuilt from `(spark, dir)` by the same
+    * deterministic builders the query uses: seeded hashes and
+    * build-once sidecars. None when the corpus is degenerate (no pair,
+    * no merge), so the entry is checked rows-only. */
+  val corpusOracles: Map[String, (SparkSession, String) => Option[String]] = Map(
+    "d3_minhash_neardup" -> (d3OracleSql _),
+    "d4_simhash_neardup" -> (d4OracleSql _),
+    "d5_embedding_neardup" -> (d5OracleSql _),
+    "d11_semantic_dedup" -> (d11OracleSql _),
+    "t37_bpe_train" -> (t37OracleSql _),
+    "t38_bpe_encode" -> (t38OracleSql _),
+    "t42_canonical_key" -> (t42OracleSql _),
+    "d21_benchmark_decontamination" -> (d21OracleSql _),
+    "t52_filter_funnel" -> (t52OracleSql _),
+    "t55_data_card" -> (t55OracleSql _))
 
-  def oracleSql: Map[String, String] = pairOracles ++
-    t37OracleSql.map("t37_bpe_train" -> _) ++
-    t38OracleSql.map("t38_bpe_encode" -> _) ++
-    lastCanonCtx.toSeq.flatMap { case (s, dir) =>
-      t42OracleSql(s, dir).map("t42_canonical_key" -> _)
-    } ++
-    lastDecontamCtx.toSeq.flatMap { case (s, dir) =>
-      d21OracleSql(s, dir).map("d21_benchmark_decontamination" -> _) ++
-        t52OracleSql(s, dir).map("t52_filter_funnel" -> _) ++
-        t55OracleSql(s, dir).map("t55_data_card" -> _)
-    } ++ Map(
+  lazy val oracleSql: Map[String, String] = Map(
     // t25/t33: the sketch queries' derived-invariant oracles (see the
     // query Scaladocs): DuckDB recomputes the EXACT side — the
     // frequent-token set for t25, the top-20 token counts for t33 —
@@ -4503,8 +4447,9 @@ object TextQueries {
         |  COALESCE(a.tc, '') AS text_clean
         | FROM d LEFT JOIN agg a USING (doc_id) ORDER BY doc_id"""
         .stripMargin.replaceAll("\n", ""),
-    // d21's oracle is emitted dump-time (d21OracleSql — the canon
-    // chain needs the corpus alphabet, the t42 inlining pattern),
+    // d21's oracle is derived from the corpus (d21OracleSql in
+    // corpusOracles — the canon chain needs the corpus alphabet, the
+    // t42 inlining pattern),
     "t43_gopher_rules" ->
       s"""WITH ${gopherRuleCtesSql("documents")}
          | SELECT doc_id, wc,
@@ -4600,7 +4545,7 @@ object TextQueries {
         |   THEN ROUND(CAST(2 * tp AS DOUBLE) / (2 * tp + fp + fn), 6)
         |   END AS f1
         | FROM cm""".stripMargin.replaceAll("\n", ""),
-    // t52's oracle is emitted dump-time (t52OracleSql — its round-16
+    // t52's oracle is derived from the corpus (t52OracleSql — its round-16
     // decontamination stage embeds the d21 canon chain, which needs
     // the corpus alphabet).
     // t47: t44's replay with every model cell, the smoothing fallback

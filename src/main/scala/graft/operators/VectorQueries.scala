@@ -72,26 +72,6 @@ object VectorQueries {
   private val ivfModels =
     scala.collection.concurrent.TrieMap.empty[String, Ivf.IvfModel]
 
-  /** Codebooks of the most recently built/loaded per-family index.
-    * The recall oracles (v21–v23) inline these trained constants into
-    * the DuckDB SQL so the oracle can re-run assignment + search
-    * independently; `oracleSql` is a def and Verify dumps it AFTER the
-    * queries ran, so the stash is always populated on a full run. */
-  @volatile private var lastPcaModel: Option[Pca.PcaModel] = None
-  @volatile private var lastIvfModel: Option[Ivf.IvfModel] = None
-  @volatile private var lastPqModel: Option[Pq.PqModel] = None
-  @volatile private var lastIvfPqModels: Option[(Ivf.IvfModel, Pq.PqModel)] = None
-
-  /** Clear the dump-time model stashes (see
-    * [[TextQueries.resetOracleStashes]]) — a targeted dump must not
-    * emit a recall oracle built from a PREVIOUS dump's models. */
-  private[graft] def resetOracleStashes(): Unit = {
-    lastPcaModel = None
-    lastIvfModel = None
-    lastPqModel = None
-    lastIvfPqModels = None
-  }
-
   /** Build-once IVF index (cell-partitioned corpus + codebook sidecar);
     * returns the index path and the (cached or reloaded) codebook. */
   def ivfIndex(s: SparkSession, dir: String): (String, Ivf.IvfModel) = {
@@ -102,9 +82,7 @@ object VectorQueries {
       ivfModels(path) =
         Ivf.buildIndex(emb(s, dir), "vec_id", "embedding", tmp, nlist = IvfCells)
     }
-    val model = ivfModels.getOrElseUpdate(path, Ivf.loadModel(s, s"$path/_model"))
-    lastIvfModel = Some(model)
-    (path, model)
+    (path, ivfModels.getOrElseUpdate(path, Ivf.loadModel(s, s"$path/_model")))
   }
 
   val PqM = 8
@@ -127,9 +105,7 @@ object VectorQueries {
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
       Pq.saveModel(s, model, s"$tmp/_model")
     }
-    val model = pqModels.getOrElseUpdate(path, Pq.loadModel(s, s"$path/_model"))
-    lastPqModel = Some(model)
-    (path, model)
+    (path, pqModels.getOrElseUpdate(path, Pq.loadModel(s, s"$path/_model")))
   }
 
   private val ivfPqModels = scala.collection.concurrent.TrieMap
@@ -145,10 +121,8 @@ object VectorQueries {
       ivfPqModels(path) = Pq.buildIvfPqIndex(emb(s, dir), "vec_id",
         "embedding", tmp, nlist = IvfCells, m = PqM, k = PqK)
     }
-    val models = ivfPqModels.getOrElseUpdate(path,
-      (Ivf.loadModel(s, s"$path/_coarse"), Pq.loadModel(s, s"$path/_model")))
-    lastIvfPqModels = Some(models)
-    (path, models)
+    (path, ivfPqModels.getOrElseUpdate(path,
+      (Ivf.loadModel(s, s"$path/_coarse"), Pq.loadModel(s, s"$path/_model"))))
   }
 
   private def simSql(embExpr: String, qExpr: String): String =
@@ -448,58 +422,28 @@ object VectorQueries {
       byL2 = true)
   }
 
-  /** The model-dependent oracle entries, present once the family's
-    * index has been built/loaded this JVM (always true when Verify
-    * dumps after a full run; a targeted run that skips the family
-    * simply omits the entry → rows-only for that run). */
   /** Fit-once PCA model per dataset (keyed by content fingerprint,
-    * like the ANN indexes); the latest model is stashed so the v24
-    * oracle can inline its constants at dump time. */
+    * like the ANN indexes), shared by v24 and its oracle. */
   private val pcaModels =
     scala.collection.concurrent.TrieMap.empty[String, Pca.PcaModel]
   val PcaK = 4
-  private def pcaModel(s: SparkSession, dir: String): Pca.PcaModel = {
-    val m = pcaModels.getOrElseUpdate(embFp(s, dir),
+  private def pcaModel(s: SparkSession, dir: String): Pca.PcaModel =
+    pcaModels.getOrElseUpdate(embFp(s, dir),
       Pca.fit(emb(s, dir), "embedding", Dim, PcaK))
-    lastPcaModel = Some(m)
-    m
-  }
 
   /** The v24 oracle re-applies the trained projection: mean and
     * components are inlined as DOUBLE[] literals (Double.toString is
     * round-trip exact), so DuckDB recomputes every centered dot
     * product independently and the hash check pins the projection
     * arithmetic end-to-end. */
-  private def pcaOracle: Map[String, String] =
-    lastPcaModel.map { m =>
-      val cols = m.components.zipWithIndex.map { case (c, j) =>
-        val meanDot = m.mean.zip(c).map { case (a, b) => a * b }.sum
-        s"ROUND(list_inner_product(CAST(embedding AS DOUBLE[])," +
-          s" CAST(${vecLit(c)} AS DOUBLE[])) - ($meanDot), 6) AS pc${j + 1}"
-      }.mkString(", ")
-      "v24_pca_project" ->
-        s"SELECT vec_id, $cols FROM embeddings ORDER BY vec_id"
-    }.toMap
-
-  private def recallOracles: Map[String, String] =
-    Map("v20_lsh_recall" -> lshRecallSql) ++
-      lastIvfModel.map(m => "v21_ivf_recall" -> ivfRecallSql(m)) ++
-      lastPqModel.map(m => "v22_pq_recall" -> pqRecallSql(m)) ++
-      lastIvfPqModels.map { case (c, f) =>
-        "v23_ivfpq_recall" -> ivfPqRecallSql(c, f)
-      }
-
-  /** Round 7: the ANN top-k queries themselves gain full hash-checked
-    * oracles via the same inlined-constants reproduction the recall
-    * harness proved — v6/v8 are static (seed-derived hyperplanes),
-    * v7/v11/v12 inline the codebooks trained at index-build time. */
-  private def annTopKOracles: Map[String, String] =
-    Map("v6_lsh_topk" -> lshTopKSql, "v8_batch_ann" -> batchAnnSql) ++
-      lastIvfModel.map(m => "v7_ivf_topk" -> ivfTopKSql(m)) ++
-      lastPqModel.map(m => "v11_pq_topk" -> pqTopKSql(m)) ++
-      lastIvfPqModels.map { case (c, f) =>
-        "v12_ivfpq_topk" -> ivfPqTopKSql(c, f)
-      }
+  private def pcaSql(m: Pca.PcaModel): String = {
+    val cols = m.components.zipWithIndex.map { case (c, j) =>
+      val meanDot = m.mean.zip(c).map { case (a, b) => a * b }.sum
+      s"ROUND(list_inner_product(CAST(embedding AS DOUBLE[])," +
+        s" CAST(${vecLit(c)} AS DOUBLE[])) - ($meanDot), 6) AS pc${j + 1}"
+    }.mkString(", ")
+    s"SELECT vec_id, $cols FROM embeddings ORDER BY vec_id"
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // V1: the reference's core retrieval shape — exact cosine top-k
@@ -634,8 +578,8 @@ object VectorQueries {
     // brute-force contract, src/lib/database.py:299-309) and outputs
     // (hits, recall). The DuckDB oracle RE-RUNS the approximate search
     // itself: the LSH hyperplanes are seed-derived and the IVF/PQ
-    // codebooks are inlined as literals at dump time (oracleSql is a
-    // def; Verify dumps after the queries ran), so bucket assignment,
+    // codebooks are inlined as literals (corpusOracles takes them from
+    // the same build-once index the query reads), so bucket assignment,
     // cell argmax and ADC scoring are all reproduced independently —
     // ANN quality is a hash-checked invariant, not a spec-only bound.
     "v20_lsh_recall" -> ((s, dir) => {
@@ -911,13 +855,31 @@ object VectorQueries {
     }),
   )
 
-  /** A def, not a val: the v21–v23 entries inline codebooks trained at
-    * index-build time, so the map must be assembled when Verify dumps
-    * it (after the queries ran), not at object init. */
-  def oracleSql: Map[String, String] =
-    staticOracleSql ++ recallOracles ++ annTopKOracles ++ pcaOracle
+  /** Oracles that inline a trained model: the IVF/PQ codebooks (v7,
+    * v11, v12 top-k; v21–v23 recall) and the PCA projection (v24). Each
+    * takes the model from the same build-once index or
+    * fingerprint-keyed fit the query reads, so the SQL is a function of
+    * the corpus alone. */
+  val corpusOracles: Map[String, (SparkSession, String) => Option[String]] = Map(
+    "v7_ivf_topk" -> ((s, dir) => Some(ivfTopKSql(ivfIndex(s, dir)._2))),
+    "v11_pq_topk" -> ((s, dir) => Some(pqTopKSql(pqIndex(s, dir)._2))),
+    "v12_ivfpq_topk" -> ((s, dir) => {
+      val (coarse, fine) = ivfPqIndex(s, dir)._2
+      Some(ivfPqTopKSql(coarse, fine))
+    }),
+    "v21_ivf_recall" -> ((s, dir) => Some(ivfRecallSql(ivfIndex(s, dir)._2))),
+    "v22_pq_recall" -> ((s, dir) => Some(pqRecallSql(pqIndex(s, dir)._2))),
+    "v23_ivfpq_recall" -> ((s, dir) => {
+      val (coarse, fine) = ivfPqIndex(s, dir)._2
+      Some(ivfPqRecallSql(coarse, fine))
+    }),
+    "v24_pca_project" -> ((s, dir) => Some(pcaSql(pcaModel(s, dir)))))
 
-  private lazy val staticOracleSql: Map[String, String] = Map(
+  /** v6/v8/v20 are static too: their LSH hyperplanes are seed-derived. */
+  lazy val oracleSql: Map[String, String] = Map(
+    "v6_lsh_topk" -> lshTopKSql,
+    "v8_batch_ann" -> batchAnnSql,
+    "v20_lsh_recall" -> lshRecallSql,
     "v25_binary_topk" -> binaryTopKSql,
     "v26_mmr_rerank" -> mmrRerankSql,
     "v19_filtered_topk" ->

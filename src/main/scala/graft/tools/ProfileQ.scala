@@ -1,36 +1,24 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Generic per-stage profiler for a declared query (round 17): run the
-  * query once (warm-up) then once measured, with a listener recording
-  * every stage's wall time, task time, and the first line of its call
-  * site — the local substitute for the Spark UI's stage table (UI is
-  * disabled in this sandbox). Usage:
-  *   runMain graft.tools.ProfileQ <sfDir> <query> [cpus]
+/** Generic per-stage profiler for declared queries (round 17): run
+  * each query once (warm-up) then once measured, with a listener
+  * recording every stage's wall time, task time, and the first line of
+  * its call site — the local substitute for the Spark UI's stage table
+  * (Tables.session disables the UI). Caches are released between runs
+  * (the Bench discipline), so queries never read each other's cache.
+  * Usage:
+  *   runMain graft.tools.ProfileQ <sfDir> <query>[,<query>...] [cpus]
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val name = args(1)
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Tables.quietBoundedWindowWarnings()
-
-    // warm-up run (JIT + codegen), not recorded
-    graft.SparkEntry.queries(name)(spark, sfDir).collect()
-    graft.Caches.release(spark)
-    spark.catalog.clearCache()
+    val names = args(1).split(",").map(_.trim).toSeq
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = graft.Tables.session(s"local[$cpus]", cpus)
 
     case class St(id: Int, name: String, submitted: Long, completed: Long,
         taskTimeMs: Long, tasks: Int, spillMem: Long, spillDisk: Long,
@@ -47,34 +35,48 @@ object ProfileQ {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, sfDir).collect()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // deterministic drain (ADVICE r17): a sleep drops late-posted
-    // stage-completed events on a loaded box
-    org.apache.spark.sql.GraftShim.flushListenerBus(spark)
-    // spill + storage provenance (round 18): the §5 check for the
-    // corpus-wide caches — whether MEMORY_AND_DISK blocks actually
-    // spill at the measured SF, and how much execution memory peaks
-    val storage = spark.sparkContext.getRDDStorageInfo
-    val memUsed = storage.map(_.memSize).sum
-    val diskUsed = storage.map(_.diskSize).sum
-    println(f"TOTAL $name $wall%.3f s, ${stages.size} stages; " +
-      f"cached mem=${memUsed / 1e6}%.1f MB disk=${diskUsed / 1e6}%.1f MB " +
-      f"(disk > 0 means the cache spilled); " +
-      f"spill mem=${stages.map(_.spillMem).sum / 1e6}%.1f MB " +
-      f"disk=${stages.map(_.spillDisk).sum / 1e6}%.1f MB, " +
-      f"peakExec(max stage)=${stages.map(_.peakExec).maxOption.getOrElse(0L) / 1e6}%.1f MB")
-    val t0ms = stages.map(_.submitted).filter(_ > 0).minOption.getOrElse(0L)
-    stages.sortBy(_.submitted).foreach { s =>
-      // skipped/reused stages carry no submission/completion time —
-      // mark them instead of printing garbage offsets (ADVICE r17)
-      if (s.submitted == 0 || s.completed == 0)
-        println(f"STAGE ${s.id}%4d (skipped/reused)                 taskSum=${s.taskTimeMs}%6dms tasks=${s.tasks}%3d  ${s.name.linesIterator.next().take(110)}")
-      else {
-        val wallMs = s.completed - s.submitted
-        println(f"STAGE ${s.id}%4d +${s.submitted - t0ms}%6dms wall=${wallMs}%5dms taskSum=${s.taskTimeMs}%6dms tasks=${s.tasks}%3d  ${s.name.linesIterator.next().take(110)}")
+    def release(): Unit = {
+      graft.Caches.release(spark)
+      spark.catalog.clearCache()
+    }
+
+    for (name <- names) {
+      // warm-up run (JIT + codegen), not recorded
+      graft.SparkEntry.queries(name)(spark, sfDir).collect()
+      release()
+      // deterministic drain (ADVICE r17): a sleep drops late-posted
+      // stage-completed events on a loaded box
+      org.apache.spark.sql.GraftShim.flushListenerBus(spark)
+      stages.clear()
+      val t0 = System.nanoTime()
+      graft.SparkEntry.queries(name)(spark, sfDir).collect()
+      val wall = (System.nanoTime() - t0) / 1e9
+      org.apache.spark.sql.GraftShim.flushListenerBus(spark)
+      val run = stages.toList
+      // spill + storage provenance (round 18): the §5 check for the
+      // corpus-wide caches — whether MEMORY_AND_DISK blocks actually
+      // spill at the measured SF, and how much execution memory peaks
+      val storage = spark.sparkContext.getRDDStorageInfo
+      val memUsed = storage.map(_.memSize).sum
+      val diskUsed = storage.map(_.diskSize).sum
+      println(f"TOTAL $name $wall%.3f s, ${run.size} stages; " +
+        f"cached mem=${memUsed / 1e6}%.1f MB disk=${diskUsed / 1e6}%.1f MB " +
+        f"(disk > 0 means the cache spilled); " +
+        f"spill mem=${run.map(_.spillMem).sum / 1e6}%.1f MB " +
+        f"disk=${run.map(_.spillDisk).sum / 1e6}%.1f MB, " +
+        f"peakExec(max stage)=${run.map(_.peakExec).maxOption.getOrElse(0L) / 1e6}%.1f MB")
+      val t0ms = run.map(_.submitted).filter(_ > 0).minOption.getOrElse(0L)
+      run.sortBy(_.submitted).foreach { s =>
+        // skipped/reused stages carry no submission/completion time —
+        // mark them instead of printing garbage offsets (ADVICE r17)
+        if (s.submitted == 0 || s.completed == 0)
+          println(f"STAGE ${s.id}%4d (skipped/reused)                 taskSum=${s.taskTimeMs}%6dms tasks=${s.tasks}%3d  ${s.name.linesIterator.next().take(110)}")
+        else {
+          val wallMs = s.completed - s.submitted
+          println(f"STAGE ${s.id}%4d +${s.submitted - t0ms}%6dms wall=${wallMs}%5dms taskSum=${s.taskTimeMs}%6dms tasks=${s.tasks}%3d  ${s.name.linesIterator.next().take(110)}")
+        }
       }
+      release()
     }
     spark.stop()
   }

@@ -1,0 +1,85 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The oracle table is a function of the corpus: its key set is fixed
+  * before any query runs, and a dump writes, for exactly the queries
+  * it selected, the oracle of the corpus it ran on — never one left
+  * over from an earlier dump in the same JVM. */
+class OracleTableSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkTestSession.spark
+  private val srcSf = "/root/testdata/sf0.001"
+
+  /** The oracles that inline a model, a pair set or an alphabet
+    * derived from the corpus. */
+  private val CorpusDerived = Seq(
+    "v7_ivf_topk", "v11_pq_topk", "v12_ivfpq_topk", "v21_ivf_recall",
+    "v22_pq_recall", "v23_ivfpq_recall", "v24_pca_project",
+    "d3_minhash_neardup", "d4_simhash_neardup", "d5_embedding_neardup",
+    "d11_semantic_dedup", "t37_bpe_train", "t38_bpe_encode",
+    "t42_canonical_key", "d21_benchmark_decontamination",
+    "t52_filter_funnel", "t55_data_card", "r1_rag_retrieval",
+    "r2_rag_prompt", "r3_hybrid_retrieval")
+
+  test("the oracle table's key set is complete before any query runs") {
+    val keys = SparkEntry.oracles.keySet
+    val missing = CorpusDerived.filterNot(keys.contains)
+    assert(missing.isEmpty, s"corpus-derived oracles missing: $missing")
+    val orphans = keys.diff(SparkEntry.queries.keySet)
+    assert(orphans.isEmpty, s"oracles without a declared query: $orphans")
+  }
+
+  test("a targeted dump writes exactly the selected oracles, for its own corpus") {
+    assume(new java.io.File(s"$srcSf/documents.parquet").exists,
+      s"no testdata at $srcSf")
+    // corpus B: every other document and embedding of corpus A, so
+    // B's trained IVF codebook differs from A's
+    val b = Files.createTempDirectory("graft_oracle_b").toString
+    val outA = Files.createTempDirectory("graft_oracle_outa").toString
+    val outB = Files.createTempDirectory("graft_oracle_outb").toString
+    val selected = Set("v21_ivf_recall", "t42_canonical_key")
+    try {
+      Tables.load(spark, srcSf, "documents").filter(col("doc_id") % 2 === 0)
+        .coalesce(1).write.parquet(s"$b/documents.parquet")
+      Tables.load(spark, srcSf, "embeddings").filter(col("vec_id") % 2 === 0)
+        .coalesce(1).write.parquet(s"$b/embeddings.parquet")
+
+      Verify.dump(spark, srcSf, outA, selected)
+      Verify.dump(spark, b, outB, selected)
+
+      def dumped(out: String): Map[String, String] =
+        new ObjectMapper()
+          .readValue(Paths.get(s"$out/oracle_sql.json").toFile,
+            classOf[java.util.Map[String, String]])
+          .asScala.toMap
+      val gotB = dumped(outB)
+      assert(gotB.keySet == selected)
+      for (name <- selected)
+        assert(gotB(name) == SparkEntry.oracles(name)(spark, b).get,
+          s"$name: the dumped oracle is not corpus B's")
+      assert(dumped(outA)("v21_ivf_recall") != gotB("v21_ivf_recall"),
+        "corpora A and B must train different codebooks")
+    } finally {
+      def rm(p: String): Unit = {
+        val root = Path.of(p)
+        if (Files.exists(root))
+          Files.walk(root).iterator().asScala.toSeq.reverse
+            .foreach(f => Files.deleteIfExists(f))
+      }
+      Seq(b, outA, outB).foreach(rm)
+      // B's build-once sidecars are keyed on its temp dir
+      val key = graft.store.AnnIndexes.keyOf(b)
+      Option(new java.io.File(graft.store.AnnIndexes.root).listFiles())
+        .getOrElse(Array.empty)
+        .filter(_.getName.contains(key))
+        .foreach(f => rm(f.getPath))
+    }
+  }
+}

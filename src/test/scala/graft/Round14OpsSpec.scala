@@ -39,7 +39,7 @@ class Round14OpsSpec extends AnyFunSuite {
   }
 
   test("d22 oracle: the seg tokenizer regex reaches DuckDB byte-for-byte (no rename corruption)") {
-    val sql = SparkEntry.oracleSql("d22_dedup_audit")
+    val sql = SparkEntry.oracles("d22_dedup_audit")(spark, sfDir).get
     assert(sql.contains(TextAnalysis.SegPatternRe2),
       "the prefixed text chain must carry the EXACT seg pattern — " +
         "a corrupted character class here is the round-13 advisor's " +

@@ -213,10 +213,9 @@ class Round15OpsSpec extends AnyFunSuite {
   }
 
   test("t52 oracle: composed CTE name sets stay disjoint") {
-    // t52's oracle is dump-time (the decon stage embeds the canon
-    // chain): constructing the query plan sets the oracle context
-    SparkEntry.queries("t52_filter_funnel")(spark, sfDir)
-    val sql = SparkEntry.oracleSql("t52_filter_funnel")
+    // t52's oracle is derived from the corpus (the decon stage embeds
+    // the canon chain for the corpus alphabet)
+    val sql = SparkEntry.oracles("t52_filter_funnel")(spark, sfDir).get
     val names = "(?i)(?:WITH RECURSIVE|,)\\s*([a-zA-Z_][a-zA-Z0-9_]*) AS \\("
       .r.findAllMatchIn(sql).map(_.group(1).toLowerCase).toSeq
     assert(names.distinct.size == names.size,

@@ -115,14 +115,14 @@ class Round6OpsSpec extends AnyFunSuite {
       assert(hits >= 0 && hits <= 10, s"$name hits=$hits")
       assert(rows(0).getDouble(1) == hits / 10.0, name)
     }
-    // after the queries ran, the model-dependent oracles must be
-    // dumped (the def-not-val contract Verify relies on)
-    val o = graft.operators.VectorQueries.oracleSql
+    // every recall oracle is in the table, each a function of the
+    // corpus: the model-dependent ones rebuild their model from (s, dir)
+    val o = SparkEntry.oracles
     for (name <- Seq("v20_lsh_recall", "v21_ivf_recall", "v22_pq_recall",
         "v23_ivfpq_recall"))
       assert(o.contains(name), s"missing oracle for $name")
     // the IVF oracle embeds the trained centroids as literals
-    assert(o("v21_ivf_recall").contains("cellv(i, cv)"))
+    assert(o("v21_ivf_recall")(spark, sfDir).exists(_.contains("cellv(i, cv)")))
   }
 
   test("scd2ViaAsOf ≡ scd2Join when intervals partition the timeline") {

@@ -104,15 +104,16 @@ class UnicodeFixtureGateSpec extends AnyFunSuite {
 
       val log = new StringBuilder
       val code = Process(Seq("python3", "tools/check_correctness.py",
-        fix, out, "--only-present"))
+        fix, out))
         .!(ProcessLogger(l => log.append(l).append('\n')))
       val failed = log.toString.linesIterator.filter(_.startsWith("FAIL")).toSeq
       assert(code == 0 && failed.isEmpty,
         s"Unicode-fixture oracle mismatches (engine/oracle tokenizer " +
           s"drift?):\n${failed.mkString("\n")}\n--- full log ---\n$log")
       // the gate must actually have checked the family — a filter typo
-      // or a query that threw inside Verify.dump is SKIPPED by
-      // --only-present, which would otherwise pass vacuously
+      // or a query without an oracle would otherwise pass vacuously
+      // (a query that threw inside Verify.dump FAILs: its oracle is
+      // dumped, its output is not)
       val okCount = log.toString.linesIterator.count(_.startsWith("OK"))
       assert(okCount == GateQueries.size,
         s"only $okCount/${GateQueries.size} gate queries were checked " +

@@ -3,7 +3,7 @@ package graft.tools
 /** Dev probe: inventory counts + oracle coverage. */
 object CountQueries extends App {
   val q = graft.SparkEntry.queries
-  val o = graft.SparkEntry.oracleSql
+  val o = graft.SparkEntry.oracles
   println(s"queries=${q.size} oracle=${o.size}")
   println("no-oracle: " + q.keySet.diff(o.keySet).toSeq.sorted.mkString(","))
   println("orphan-oracle: " + o.keySet.diff(q.keySet).toSeq.sorted.mkString(","))
