@@ -8,8 +8,9 @@ object Verify {
   /** Run each selected query against `sfDir`, write its result to
     * `outDir/<name>`, then write the selected queries' oracles (from
     * `SparkEntry.oracles`, evaluated on `sfDir`) as
-    * `outDir/oracle_sql.json`. Shared by [[main]] (the driver's gate)
-    * and the in-suite Unicode fixture gate (UnicodeFixtureGateSpec),
+    * `outDir/oracle_sql.json`, and the names of the selected queries
+    * that threw as `outDir/failed.json`. Shared by [[main]] (the
+    * driver's gate) and the in-suite Unicode fixture gate (UnicodeFixtureGateSpec),
     * so the CI gate exercises the REAL dump path, not a parallel
     * reimplementation. */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
@@ -28,19 +29,24 @@ object Verify {
     // JVM (measured >4× slower than sequential at sf0.01)
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      val threw =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
       // queries persist() shared projections internally; drop them so
       // the cache does not accumulate across the ~70-query sweep.
       // Caches.release additionally frees localCheckpoint blocks
       // (dup-cluster labels) that clearCache cannot see.
       Caches.release(spark)
       spark.catalog.clearCache()
-    }
+      threw
+    }.sorted
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -60,6 +66,8 @@ object Verify {
       .flatMap { case (name, oracle) => oracle(spark, sfDir).map(name -> _) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed.json"),
+      failed.map(q).mkString("[", ",", "]"))
   }
 
   def main(args: Array[String]): Unit = {

@@ -586,6 +586,14 @@ object Demo {
       s"chunks=${spark.read.parquet(s"$store/chunks").count()}")
   }
 
+  /** The index-backed store searches of [[search]], by `ann` mode:
+    * (chunks, index path, query vector, topK, threshold) → hits. */
+  private val AnnSearch: Map[String,
+      (DataFrame, String, Array[Double], Int, Double) => DataFrame] = Map(
+    "lsh" -> (Rag.searchChunksAnn(_, _, _, _, _)),
+    "ivf" -> (Rag.searchChunksAnnIvf(_, _, _, _, _)),
+    "pq" -> (Rag.searchChunksAnnPq(_, _, _, _, _)))
+
   /** demo.search: embed prompt, retrieve top-k over the store —
     * exact scan by default, index-backed with ann="lsh"/"ivf"/"pq".
     *
@@ -643,20 +651,10 @@ object Demo {
     }
     ann match {
       case "exact" => Rag.searchChunks(chunks, q, topK, threshold)
-      case "lsh" =>
-        val name = s"ann_lsh_${fp}_d$dim"
-        val hits = Rag.searchChunksAnn(chunks, s"$store/$name", q, topK, threshold)
-        sweepStale("ann_lsh_", name)
-        hits
-      case "ivf" =>
-        val name = s"ann_ivf_${fp}_d$dim"
-        val hits = Rag.searchChunksAnnIvf(chunks, s"$store/$name", q, topK, threshold)
-        sweepStale("ann_ivf_", name)
-        hits
-      case "pq" =>
-        val name = s"ann_pq_${fp}_d$dim"
-        val hits = Rag.searchChunksAnnPq(chunks, s"$store/$name", q, topK, threshold)
-        sweepStale("ann_pq_", name)
+      case kind if AnnSearch.contains(kind) =>
+        val name = s"ann_${kind}_${fp}_d$dim"
+        val hits = AnnSearch(kind)(chunks, s"$store/$name", q, topK, threshold)
+        sweepStale(s"ann_${kind}_", name)
         hits
       case "hybrid" =>
         // BM25-over-chunk-text fused with the exact cosine ranking by

@@ -1356,13 +1356,21 @@ object Dedup {
     * once at ingest, never a per-run cost. */
   def semanticDedupWithCodebook(
       df: DataFrame, idCol: String, embCol: String,
-      nCells: Int, threshold: Double, modelPath: String): DataFrame = {
-    val spark = df.sparkSession
-    graft.store.AnnIndexes.materializeAtomic(spark, modelPath) { tmp =>
-      Ivf.saveModel(spark, Ivf.train(df, idCol, embCol, nCells), tmp)
-    }
+      nCells: Int, threshold: Double, modelPath: String): DataFrame =
     semanticDedupWith(df, idCol, embCol,
-      Ivf.loadModel(spark, modelPath), threshold)
+      codebook(df, idCol, embCol, nCells, modelPath), threshold)
+
+  /** The k-means codebook sidecar at `modelPath`: trained and saved by
+    * the first call, memoized for the process
+    * ([[graft.store.AnnIndexes.model]]). */
+  private def codebook(df: DataFrame, idCol: String, embCol: String,
+      nCells: Int, modelPath: String): Ivf.IvfModel = {
+    val spark = df.sparkSession
+    graft.store.AnnIndexes.model(spark, modelPath) { tmp =>
+      val model = Ivf.train(df, idCol, embCol, nCells)
+      Ivf.saveModel(spark, model, tmp)
+      model
+    }(Ivf.loadModel(spark, _))
   }
 
   /** The dedup decision for a given codebook: within-cell pairs →
@@ -1430,14 +1438,9 @@ object Dedup {
     * [[semanticDedupWithCodebook]]. */
   def semanticDedupMapWithCodebook(
       df: DataFrame, idCol: String, embCol: String,
-      nCells: Int, threshold: Double, modelPath: String): DataFrame = {
-    val spark = df.sparkSession
-    graft.store.AnnIndexes.materializeAtomic(spark, modelPath) { tmp =>
-      Ivf.saveModel(spark, Ivf.train(df, idCol, embCol, nCells), tmp)
-    }
+      nCells: Int, threshold: Double, modelPath: String): DataFrame =
     semanticDedupMapWith(df, idCol, embCol,
-      Ivf.loadModel(spark, modelPath), threshold)
-  }
+      codebook(df, idCol, embCol, nCells, modelPath), threshold)
 
   /** Within-cell near-duplicate pairs for [[semanticDedup]] — exact
     * cosine over cell-mates only (norms hoisted; one cached

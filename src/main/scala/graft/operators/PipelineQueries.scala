@@ -34,10 +34,8 @@ object PipelineQueries {
     * `wav1_` convention) and steady-state runs measure the
     * decode + fingerprint + collapse — the operator under test. */
   private[graft] def m10PlantedAssets(s: SparkSession, dir: String): DataFrame = {
-    val path = s"${graft.store.AnnIndexes.root}/wav5_" +
-      s"${graft.store.AnnIndexes.keyOf(dir)}_" +
-      graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
+    val path = graft.store.AnnIndexes.materializeAtomic(s,
+        graft.store.AnnIndexes.key(s, "wav5", dir, "documents")) { tmp =>
       val d = Tables.load(s, dir, "documents")
         .select(col("doc_id"), (col("doc_id") - col("doc_id") % 5).as("fid"))
       val base = graft.multimodal.Multimodal.syntheticWavAssets(
@@ -266,10 +264,8 @@ object PipelineQueries {
   private def assetSidecar(s: SparkSession, dir: String, tag: String)(
       build: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val path = s"${graft.store.AnnIndexes.root}/${tag}_" +
-      s"${graft.store.AnnIndexes.keyOf(dir)}_" +
-      graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
+    val path = graft.store.AnnIndexes.materializeAtomic(s,
+        graft.store.AnnIndexes.key(s, tag, dir, "documents")) { tmp =>
       build.write.parquet(tmp)
     }
     Tables.balanced(s.read.parquet(path))
@@ -1378,30 +1374,21 @@ object PipelineQueries {
     // m7 audio). m3 stays the byte-offset planning shape over opaque
     // content.
     "m7_audio_decode" -> ((s, dir) => {
-      // the WAV assets are INGEST-TIME data (a real corpus already has
-      // its media bytes); the synthetic encode is fixture build work,
-      // materialized once per corpus fingerprint (the ANN-index
-      // build-once convention) so steady-state runs measure the
-      // DECODER — the operator under test — not the fixture generator
-      // (measured: encode ~0.5 s of the 2.1 s bench entry at sf0.1)
-      val path = s"${graft.store.AnnIndexes.root}/wav1_" +
-        s"${graft.store.AnnIndexes.keyOf(dir)}_" +
-        graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")
-      graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
-        graft.multimodal.Multimodal.syntheticWavAssets(
-          Tables.load(s, dir, "documents"), "doc_id").write.parquet(tmp)
-      }
-      // balanced (round 18): the sidecar is a handful of small files,
-      // so the WAV header-parse + window fold otherwise ran on 1-2
-      // cores (no-op on a many-split media table at cluster scale).
+      // the WAV assets are fixture build work, materialized once per
+      // corpus ([[assetSidecar]]; measured: encode ~0.5 s of the 2.1 s
+      // bench entry at sf0.1), so steady-state runs measure the DECODER.
       // The decoded windows are cached before the output sort: with no
       // exchange between the decode and the orderBy, the range
       // partitioner's boundary-sampling pass re-ran the ENTIRE decode
       // (ProfileQ at sf0.1: two ~30s-CPU stages, one per pass); the
       // cache holds 5 narrow integers per window and the sort reads it
+      val assets = assetSidecar(s, dir, "wav1") {
+        graft.multimodal.Multimodal.syntheticWavAssets(
+          Tables.load(s, dir, "documents"), "doc_id")
+      }
       graft.Caches.shared(
           graft.multimodal.Multimodal.decodeWavWindows(
-            Tables.balanced(s.read.parquet(path)), windowSamples = 32))
+            assets, windowSamples = 32))
         .orderBy("asset_id", "window_number")
     }),
 

@@ -156,27 +156,43 @@ object Pq {
       (acc, i) => acc +
         element_at(typedLit(lut.toSeq), i * k + element_at(codeCol, i + 1) + 1))
 
+  /** PQ index build: train the codebooks, write the encoded corpus to
+    * `path` and the codebooks beside it (`_model`). */
+  def buildIndex(corpus: DataFrame, idCol: String, embCol: String,
+      path: String, m: Int, k: Int): PqModel = {
+    val model = train(corpus, idCol, embCol, m, k)
+    encode(corpus, embCol, model)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
+    saveModel(corpus.sparkSession, model, s"$path/_model")
+    model
+  }
+
+  /** The ADC candidate step: the `n` rows nearest to `queryVec` by
+    * lookup-table distance `adc` (ties by id), one TakeOrderedAndProject. */
+  def adcCandidates(
+      indexed: DataFrame, idCol: String, queryVec: Array[Double],
+      model: PqModel, n: Int): DataFrame =
+    indexed
+      .withColumn("adc",
+        adcScoreCol(col("pq_code"), model.adcTable(queryVec), model.k))
+      .orderBy(asc("adc"), asc(idCol))
+      .limit(n)
+
   /** ANN search over a PQ-encoded corpus: ADC top (k·refine)
-    * candidates (lookup-table scan fused into TakeOrderedAndProject),
-    * then exact L2 re-rank of the candidates only. `refine` trades a
-    * constant factor of exact distance evaluations for recall. */
+    * candidates ([[adcCandidates]]), then exact L2 re-rank of the
+    * candidates only. `refine` trades a constant factor of exact
+    * distance evaluations for recall. */
   def search(
       indexed: DataFrame, idCol: String, embCol: String,
       queryVec: Array[Double], model: PqModel, topK: Int,
-      refine: Int = 4, roundTo: Int = 6): DataFrame = {
-    val lut = model.adcTable(queryVec)
-    val cands = indexed
-      .withColumn("adc", adcScoreCol(col("pq_code"), lut, model.k))
-      .orderBy(asc("adc"), asc(idCol))
-      .limit(topK * refine)
-    cands
+      refine: Int = 4, roundTo: Int = 6): DataFrame =
+    adcCandidates(indexed, idCol, queryVec, model, topK * refine)
       .withColumn("l2_dist",
         round(VectorFunctions.l2_distance(
           col(embCol), typedLit(queryVec.toSeq)), roundTo))
       .orderBy(asc("l2_dist"), asc(idCol))
       .limit(topK)
       .drop("adc")
-  }
 
   /** IVFPQ index build — the composed layout (FAISS's production
     * shape): rows carry BOTH an IVF cell (coarse quantizer →

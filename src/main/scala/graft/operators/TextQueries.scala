@@ -602,27 +602,26 @@ object TextQueries {
 
   /** The trained merge table with a build-once sidecar (the d11
     * codebook precedent): the first invocation per corpus fingerprint
-    * trains and persists the merges atomically; every later one —
-    * including a fresh process — loads them. Tokenizer training is
-    * ingest-time work, paid once, never a per-run cost; a regenerated
-    * corpus gets a fresh fingerprint and retrains. */
+    * trains and persists the merges atomically; a fresh process loads
+    * them once, and later calls reuse the memoized table. Tokenizer
+    * training is ingest-time work, paid once, never a per-run cost; a
+    * regenerated corpus gets a fresh fingerprint and retrains. */
   private def bpeModelFor(
       s: SparkSession, dir: String): Vector[(String, String, Long)] = {
     // bpe2: recipe version — round 9's script-aware segTokens change
     // the word-count recipe, so round-8 sidecars (whitespace words)
     // must not be reused (the p8 store-key principle)
-    val path = s"${graft.store.AnnIndexes.root}/bpe2_" +
-      s"${graft.store.AnnIndexes.keyOf(dir)}_" +
-      graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
+    graft.store.AnnIndexes.model(s,
+        graft.store.AnnIndexes.key(s, "bpe2", dir, "documents")) { tmp =>
       import s.implicits._
-      trainBpe(bpeWordCounts(s, dir), BpeMergeCount).zipWithIndex
+      val merges = trainBpe(bpeWordCounts(s, dir), BpeMergeCount)
+      merges.zipWithIndex
         .map { case ((l, r, c), i) => (i + 1L, l, r, c) }
         .toDF("rank", "l", "r", "pair_count")
         .coalesce(1).write.parquet(tmp)
-    }
-    s.read.parquet(path).orderBy("rank").collect()
-      .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toVector
+      merges
+    }(path => s.read.parquet(path).orderBy("rank").collect()
+      .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toVector)
   }
 
   /** k rounds of count-pairs / merge-the-argmax over the vocab (the
@@ -1054,10 +1053,8 @@ object TextQueries {
       // selected columns must invalidate prior materializations, or
       // steady-state runs would silently read a store that no longer
       // matches the code (and never exercise the write path again)
-      val recipe = "p8v2"
-      val fp = graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")
       val store = graft.store.AnnIndexes.materializeAtomic(s,
-        s"${graft.store.AnnIndexes.root}/${recipe}_${graft.store.AnnIndexes.keyOf(dir)}_$fp") { tmp =>
+          graft.store.AnnIndexes.key(s, "p8v2", dir, "documents")) { tmp =>
         val d = docs(s, dir)
         d.filter(pmod(col("doc_id"), lit(2)) === 0)
           .select(col("doc_id"), col("n_chars"))
@@ -1930,8 +1927,8 @@ object TextQueries {
         TextAnalysis.fingerprint(col("text")).as("fp"))
       val seen = d.filter(pmod(col("doc_id"), lit(3)) === 0)
       val incoming = d.filter(pmod(col("doc_id"), lit(3)) =!= 0)
-      val statePath = s"${graft.store.AnnIndexes.root}/bloomstate_" +
-        graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")
+      val statePath =
+        graft.store.AnnIndexes.key(s, "bloomstate", dir, "documents")
       Dedup.buildBloomStateIfAbsent(seen, "fp", statePath, fpp = 1e-8)
       Dedup.incrementalDedupWithState(incoming, "fp", statePath,
           updateState = false)
@@ -2060,9 +2057,7 @@ object TextQueries {
       // changes the stored shingle sets, so round-10 whitespace-shingle
       // indexes must not be reused (the p8 store-key principle)
       val path =
-        s"${graft.store.AnnIndexes.root}/mh2_${graft.store.AnnIndexes.keyOf(dir)}" +
-          s"_${graft.store.AnnIndexes.fingerprint(s, s"$dir/documents.parquet")}" +
-          "_n2_h64"
+        graft.store.AnnIndexes.key(s, "mh2", dir, "documents", "_n2_h64")
       graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
         Dedup.buildMinHashIndex(docs(s, dir), "doc_id", "text", tmp,
           shingleN = 2, numHashes = 64)
@@ -2131,10 +2126,8 @@ object TextQueries {
       // build-once codebook sidecar (keyed like the ANN indexes): the
       // first run trains k-means, every later run loads the cells and
       // skips training — spec-pinned by job count in DedupTextSpec
-      val modelPath =
-        s"${graft.store.AnnIndexes.root}/semcb_${graft.store.AnnIndexes.keyOf(dir)}" +
-          s"_${graft.store.AnnIndexes.fingerprint(s, s"$dir/embeddings.parquet")}" +
-          s"_n$nCells"
+      val modelPath = graft.store.AnnIndexes.key(
+        s, "semcb", dir, "embeddings", s"_n$nCells")
       // balanced (round 18): the multi-probe cell assignment (nCells
       // centroid distances per vector) is the heavy map work and the
       // embeddings table is one local file — spread it (no-op on a

@@ -46,83 +46,50 @@ object VectorQueries {
   val LshBits = 8
   val IvfCells = 16
 
-  /** Fingerprint cached per dataset dir: the recursive listing is an
-    * index-registration cost, not a per-query cost (driver testdata is
-    * immutable within a run). Every index path carries it, and it is
-    * the key the queries open their index handles with
-    * ([[graft.store.AnnIndexes.open]]), so a search never re-walks an
-    * index's partition dirs. */
-  private val embFps =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def embFp(s: SparkSession, dir: String): String =
-    embFps.getOrElseUpdate(dir,
-      graft.store.AnnIndexes.fingerprint(s, s"$dir/embeddings.parquet"))
+  /** The store handle of a built index. A keyed path names immutable
+    * content, so the path is its own staleness key and a search never
+    * re-walks the index's partition dirs. */
+  private def opened(s: SparkSession, path: String): DataFrame =
+    AnnIndexes.open(s, path, path)
 
   /** Build-once multi-table LSH index over the embeddings table. */
-  def lshIndex(s: SparkSession, dir: String): String = {
-    val path =
-      s"${graft.store.AnnIndexes.root}/lsh_${graft.store.AnnIndexes.keyOf(dir)}" +
-        s"_${embFp(s, dir)}_d${Dim}_t${LshTables}_b$LshBits"
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
+  def lshIndex(s: SparkSession, dir: String): String =
+    AnnIndexes.materializeAtomic(s, AnnIndexes.key(s, "lsh", dir,
+        "embeddings", s"_d${Dim}_t${LshTables}_b$LshBits")) { tmp =>
       Similarity.buildLshIndex(emb(s, dir), "embedding", Dim, tmp,
         tables = LshTables, bits = LshBits, seed = 42L)
     }
-  }
-
-  private val ivfModels =
-    scala.collection.concurrent.TrieMap.empty[String, Ivf.IvfModel]
 
   /** Build-once IVF index (cell-partitioned corpus + codebook sidecar);
-    * returns the index path and the (cached or reloaded) codebook. */
+    * returns the index path and its (memoized) codebook. */
   def ivfIndex(s: SparkSession, dir: String): (String, Ivf.IvfModel) = {
-    val path =
-      s"${graft.store.AnnIndexes.root}/ivf_${graft.store.AnnIndexes.keyOf(dir)}" +
-        s"_${embFp(s, dir)}_d${Dim}_n$IvfCells"
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
-      ivfModels(path) =
-        Ivf.buildIndex(emb(s, dir), "vec_id", "embedding", tmp, nlist = IvfCells)
-    }
-    (path, ivfModels.getOrElseUpdate(path, Ivf.loadModel(s, s"$path/_model")))
+    val path = AnnIndexes.key(s, "ivf", dir, "embeddings", s"_d${Dim}_n$IvfCells")
+    (path, AnnIndexes.model(s, path) { tmp =>
+      Ivf.buildIndex(emb(s, dir), "vec_id", "embedding", tmp, nlist = IvfCells)
+    }(p => Ivf.loadModel(s, s"$p/_model")))
   }
 
   val PqM = 8
   val PqK = 16
 
-  private val pqModels =
-    scala.collection.concurrent.TrieMap.empty[String, Pq.PqModel]
-
   /** Build-once PQ index (corpus with `pq_code` + codebook sidecar);
-    * returns the index path and the (cached or reloaded) codebook. */
+    * returns the index path and its (memoized) codebook. */
   def pqIndex(s: SparkSession, dir: String): (String, Pq.PqModel) = {
-    val path =
-      s"${graft.store.AnnIndexes.root}/pq_${graft.store.AnnIndexes.keyOf(dir)}" +
-        s"_${embFp(s, dir)}_d${Dim}_m${PqM}_k$PqK"
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
-      val model = Pq.train(emb(s, dir), "vec_id", "embedding",
-        m = PqM, k = PqK)
-      pqModels(path) = model
-      Pq.encode(emb(s, dir), "embedding", model)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-      Pq.saveModel(s, model, s"$tmp/_model")
-    }
-    (path, pqModels.getOrElseUpdate(path, Pq.loadModel(s, s"$path/_model")))
+    val path = AnnIndexes.key(s, "pq", dir, "embeddings", s"_d${Dim}_m${PqM}_k$PqK")
+    (path, AnnIndexes.model(s, path) { tmp =>
+      Pq.buildIndex(emb(s, dir), "vec_id", "embedding", tmp, m = PqM, k = PqK)
+    }(p => Pq.loadModel(s, s"$p/_model")))
   }
-
-  private val ivfPqModels = scala.collection.concurrent.TrieMap
-    .empty[String, (Ivf.IvfModel, Pq.PqModel)]
 
   /** Build-once IVFPQ index (cell-partitioned + PQ-coded corpus with
     * coarse and fine codebook sidecars). */
   def ivfPqIndex(s: SparkSession, dir: String): (String, (Ivf.IvfModel, Pq.PqModel)) = {
-    val path =
-      s"${graft.store.AnnIndexes.root}/ivfpq_${graft.store.AnnIndexes.keyOf(dir)}" +
-        s"_${embFp(s, dir)}_d${Dim}_n${IvfCells}_m${PqM}_k$PqK"
-    graft.store.AnnIndexes.materializeAtomic(s, path) { tmp =>
-      ivfPqModels(path) = Pq.buildIvfPqIndex(emb(s, dir), "vec_id",
+    val path = AnnIndexes.key(s, "ivfpq", dir, "embeddings",
+      s"_d${Dim}_n${IvfCells}_m${PqM}_k$PqK")
+    (path, AnnIndexes.model(s, path) { tmp =>
+      Pq.buildIvfPqIndex(emb(s, dir), "vec_id",
         "embedding", tmp, nlist = IvfCells, m = PqM, k = PqK)
-    }
-    (path, ivfPqModels.getOrElseUpdate(path,
-      (Ivf.loadModel(s, s"$path/_coarse"), Pq.loadModel(s, s"$path/_model"))))
+    }(p => (Ivf.loadModel(s, s"$p/_coarse"), Pq.loadModel(s, s"$p/_model"))))
   }
 
   private def simSql(embExpr: String, qExpr: String): String =
@@ -422,13 +389,12 @@ object VectorQueries {
       byL2 = true)
   }
 
-  /** Fit-once PCA model per dataset (keyed by content fingerprint,
-    * like the ANN indexes), shared by v24 and its oracle. */
-  private val pcaModels =
-    scala.collection.concurrent.TrieMap.empty[String, Pca.PcaModel]
+  /** Fit-once PCA model per dataset, shared by v24 and its oracle: no
+    * sidecar is written, the model is memoized under its key. */
   val PcaK = 4
   private def pcaModel(s: SparkSession, dir: String): Pca.PcaModel =
-    pcaModels.getOrElseUpdate(embFp(s, dir),
+    AnnIndexes.memo(
+        AnnIndexes.key(s, "pca", dir, "embeddings", s"_d${Dim}_k$PcaK"))(
       Pca.fit(emb(s, dir), "embedding", Dim, PcaK))
 
   /** The v24 oracle re-applies the trained projection: mean and
@@ -512,7 +478,7 @@ object VectorQueries {
     // inlined hyperplanes (see lshTopKSql); pruning spec'd in ScalaTest.
     "v6_lsh_topk" -> ((s, dir) => {
       Similarity.lshTopKFromIndex(
-          AnnIndexes.open(s, lshIndex(s, dir), embFp(s, dir)),
+          opened(s, lshIndex(s, dir)),
           "vec_id", "embedding",
           probeVec, k = 10, bits = LshBits, tables = LshTables,
           probes = 1, seed = 42L, tieBreak = Seq("vec_id"))
@@ -526,7 +492,7 @@ object VectorQueries {
     // the inlined codebook (ivfTopKSql); pruning spec'd in ScalaTest.
     "v7_ivf_topk" -> ((s, dir) => {
       val (path, model) = ivfIndex(s, dir)
-      Ivf.search(AnnIndexes.open(s, path, embFp(s, dir)), "embedding",
+      Ivf.search(opened(s, path), "embedding",
           probeVec, model, k = 10, nprobe = 4, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
     }),
@@ -541,7 +507,7 @@ object VectorQueries {
       val queries = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
       Similarity.lshTopKBatchFromIndex(
-          AnnIndexes.open(s, lshIndex(s, dir), embFp(s, dir)),
+          opened(s, lshIndex(s, dir)),
           queries, "qid", "qv",
           "vec_id", "embedding", k = 5, dim = Dim,
           bits = LshBits, tables = LshTables, seed = 42L)
@@ -556,7 +522,7 @@ object VectorQueries {
     // v9 stays asserted in ScalaTest.
     "v11_pq_topk" -> ((s, dir) => {
       val (path, model) = pqIndex(s, dir)
-      Pq.search(AnnIndexes.open(s, path, embFp(s, dir)),
+      Pq.search(opened(s, path),
           "vec_id", "embedding", probeVec, model, topK = 10, refine = 4)
         .select("vec_id", "l2_dist")
     }),
@@ -568,7 +534,7 @@ object VectorQueries {
     // inlined centroids/codebooks (ivfPqTopKSql); file-pruning spec'd.
     "v12_ivfpq_topk" -> ((s, dir) => {
       val (path, (coarse, fine)) = ivfPqIndex(s, dir)
-      Pq.searchIvfPq(AnnIndexes.open(s, path, embFp(s, dir)),
+      Pq.searchIvfPq(opened(s, path),
           "vec_id", "embedding", probeVec, coarse, fine, topK = 10, nprobe = 4)
         .select("vec_id", "l2_dist")
     }),
@@ -585,7 +551,7 @@ object VectorQueries {
     "v20_lsh_recall" -> ((s, dir) => {
       recallVs(
         Similarity.lshTopKFromIndex(
-          AnnIndexes.open(s, lshIndex(s, dir), embFp(s, dir)),
+          opened(s, lshIndex(s, dir)),
           "vec_id", "embedding", probeVec, k = RecallK, bits = LshBits,
           tables = LshTables,
           probes = 1, seed = 42L, tieBreak = Seq("vec_id")),
@@ -595,7 +561,7 @@ object VectorQueries {
     "v21_ivf_recall" -> ((s, dir) => {
       val (path, model) = ivfIndex(s, dir)
       recallVs(
-        Ivf.search(AnnIndexes.open(s, path, embFp(s, dir)),
+        Ivf.search(opened(s, path),
           "embedding", probeVec, model, k = RecallK, nprobe = RecallNprobe,
           tieBreak = Seq("vec_id")),
         exactCosineTopK(s, dir))
@@ -604,7 +570,7 @@ object VectorQueries {
     "v22_pq_recall" -> ((s, dir) => {
       val (path, model) = pqIndex(s, dir)
       recallVs(
-        Pq.search(AnnIndexes.open(s, path, embFp(s, dir)),
+        Pq.search(opened(s, path),
           "vec_id", "embedding", probeVec, model, topK = RecallK, refine = 4),
         exactL2TopK(s, dir))
     }),
@@ -612,7 +578,7 @@ object VectorQueries {
     "v23_ivfpq_recall" -> ((s, dir) => {
       val (path, (coarse, fine)) = ivfPqIndex(s, dir)
       recallVs(
-        Pq.searchIvfPq(AnnIndexes.open(s, path, embFp(s, dir)),
+        Pq.searchIvfPq(opened(s, path),
           "vec_id", "embedding", probeVec, coarse, fine, topK = RecallK,
           nprobe = RecallNprobe),
         exactL2TopK(s, dir))

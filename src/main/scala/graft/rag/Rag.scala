@@ -152,11 +152,8 @@ object Rag {
   }
 
   /** IVF variant of `searchChunksAnn`: cell-partitioned index + codebook
-    * sidecar; nlist adapts to the store size at build (a codebook needs
-    * at least as many sample rows as cells). */
-  private val ivfStoreModels =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Ivf.IvfModel]
-
+    * sidecar ([[AnnIndexes.model]]); nlist adapts to the store size at
+    * build (a codebook needs at least as many sample rows as cells). */
   def searchChunksAnnIvf(
       chunks: DataFrame,
       indexPath: String,
@@ -168,22 +165,17 @@ object Rag {
     if (emptyStoreNeedsIndex(spark, chunks, indexPath))
       return Similarity.topK(chunks, "embedding", queryVec, topK, threshold,
         tieBreak = Seq("id"))
-    graft.store.AnnIndexes.materializeAtomic(spark, indexPath) { tmp =>
+    val model = AnnIndexes.model(spark, indexPath) { tmp =>
       val n = chunks.count()
       val nlist = math.max(1, math.min(16, (n / 4).toInt))
-      ivfStoreModels(indexPath) = graft.operators.Ivf.buildIndex(
+      graft.operators.Ivf.buildIndex(
         chunks, "id", "embedding", tmp, nlist = nlist)
-    }
-    val model = ivfStoreModels.getOrElseUpdate(indexPath,
-      graft.operators.Ivf.loadModel(spark, s"$indexPath/_model"))
+    }(p => graft.operators.Ivf.loadModel(spark, s"$p/_model"))
     graft.operators.Ivf.search(
       AnnIndexes.open(spark, indexPath), "embedding", queryVec, model,
       k = topK, nprobe = math.min(nprobe, model.nlist),
       tieBreak = Seq("id"), threshold = threshold)
   }
-
-  private val pqStoreModels =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Pq.PqModel]
 
   /** True when a quantization-trained index would have to be BUILT from
     * an empty store — Ivf/Pq codebooks need sample rows, so callers
@@ -213,26 +205,15 @@ object Rag {
     if (emptyStoreNeedsIndex(spark, chunks, indexPath))
       return Similarity.topK(chunks, "embedding", queryVec, topK, threshold,
         tieBreak = Seq("id"))
-    graft.store.AnnIndexes.materializeAtomic(spark, indexPath) { tmp =>
+    val model = AnnIndexes.model(spark, indexPath) { tmp =>
       val n = chunks.count()
       val dim = queryVec.length
       val m = Seq(8, 4, 2, 1).find(dim % _ == 0).get
       val k = math.max(1, math.min(16, n.toInt))
-      val model = graft.operators.Pq.train(chunks, "id", "embedding",
-        m = m, k = k)
-      pqStoreModels(indexPath) = model
-      graft.operators.Pq.encode(chunks, "embedding", model)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-      graft.operators.Pq.saveModel(spark, model, s"$tmp/_model")
-    }
-    val model = pqStoreModels.getOrElseUpdate(indexPath,
-      graft.operators.Pq.loadModel(spark, s"$indexPath/_model"))
-    val lut = model.adcTable(queryVec)
-    val cands = AnnIndexes.open(spark, indexPath)
-      .withColumn("adc",
-        graft.operators.Pq.adcScoreCol(col("pq_code"), lut, model.k))
-      .orderBy(asc("adc"), asc("id"))
-      .limit(topK * refine)
+      graft.operators.Pq.buildIndex(chunks, "id", "embedding", tmp, m, k)
+    }(p => graft.operators.Pq.loadModel(spark, s"$p/_model"))
+    val cands = graft.operators.Pq.adcCandidates(
+        AnnIndexes.open(spark, indexPath), "id", queryVec, model, topK * refine)
       .drop("adc")
     graft.operators.Similarity.topK(cands, "embedding", queryVec,
       topK, threshold, tieBreak = Seq("id"))

@@ -21,6 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * live inside the index root. A half-built index (no marker) is
   * deleted and rebuilt.
   *
+  * Every corpus-derived sidecar (ANN indexes, codebooks, BPE merges,
+  * Bloom state, fixture media) is named by [[key]]; all but the Bloom
+  * state (its own temp-and-rename file) are built through
+  * [[materializeAtomic]], and a sidecar that carries a model is read
+  * through [[model]], which loads it at most once per process.
+  *
   * Searches read indexes and chunk stores through [[open]]: one
   * resolved DataFrame per table path, keyed on the table's
   * [[fingerprint]], so repeat requests skip listing and schema
@@ -35,6 +41,16 @@ object AnnIndexes {
 
   /** Filesystem-safe key fragment for a dataset dir. */
   def keyOf(dir: String): String = dir.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** The sidecar path of `recipe` over `dir/table.parquet`:
+    * `<root>/<recipe>_<keyOf(dir)>_<fingerprint><params>`. The corpus
+    * key lets [[gcTempKeyed]] and per-corpus cleanups find it; the
+    * fingerprint, recomputed on every call, sends a regenerated table
+    * to a fresh path; `params` holds the build parameters. */
+  def key(spark: SparkSession, recipe: String, dir: String, table: String,
+      params: String = ""): String =
+    s"$root/${recipe}_${keyOf(dir)}_" +
+      s"${fingerprint(spark, s"$dir/$table.parquet")}$params"
 
   /** Cheap staleness guard: a fingerprint of the source table's file
     * names + lengths. Regenerated testdata with different content
@@ -144,6 +160,25 @@ object AnnIndexes {
       }
       path
     }
+
+  /** Process-wide memo of the models behind sidecars, by [[key]]. */
+  private val models = scala.collection.concurrent.TrieMap.empty[String, Any]
+
+  /** The value memoized under `key`, computed on first use; a [[key]]
+    * path names one immutable value. */
+  def memo[M](key: String)(compute: => M): M =
+    models.getOrElseUpdate(key, compute).asInstanceOf[M]
+
+  /** The model of the build-once sidecar at `path`: `build` writes the
+    * sidecar into a temp dir ([[materializeAtomic]]) and returns its
+    * model; a process that finds the sidecar complete loads it once
+    * with `load(path)`. Later calls return the memoized model — a
+    * completed sidecar never changes. */
+  def model[M](spark: SparkSession, path: String)(build: String => M)(
+      load: String => M): M = {
+    materializeAtomic(spark, path) { tmp => models(path) = build(tmp) }
+    memo(path)(load(path))
+  }
 
   /** Completion-marker filename — the single definition of the marker
     * protocol (see materializeAtomic). */

@@ -252,6 +252,16 @@ class CatalogRagSpec extends AnyFunSuite {
     annHits.select("id", "similarity").collect().foreach { r =>
       assert(exactSim(r.getLong(0)) == r.getDouble(1))
     }
+    // the IVF codebook a search serves: the process memo's entry for
+    // the store's current index path
+    def servedIvf(fp: String): graft.operators.Ivf.IvfModel =
+      graft.store.AnnIndexes.model[graft.operators.Ivf.IvfModel](
+          spark, s"$store/ann_ivf_${fp}_d64")(
+        _ => fail("the index was not built"))(
+        _ => fail("the model was not memoized"))
+    def centroids(m: graft.operators.Ivf.IvfModel) = m.centroids.map(_.toSeq).toSeq
+    assert(ids(graft.cli.Demo.search(spark, store, prompt,
+      topK = 5, threshold = -1.0, dim = 64, ann = "ivf")).nonEmpty)
     // re-import changes the chunk file set → a different index path
     val fp1 = graft.store.AnnIndexes.fingerprint(spark, s"$store/chunks")
     graft.cli.Demo.importDocs(spark, graft.cli.Demo.demoCorpus(spark)
@@ -268,6 +278,11 @@ class CatalogRagSpec extends AnyFunSuite {
     val exactAfter = ids(graft.cli.Demo.search(spark, store, prompt,
       topK = 50, threshold = -1.0, dim = 64)).toSet
     assert(ids(ivfHits).nonEmpty && ids(ivfHits).toSet.subsetOf(exactAfter))
+    // ...served with the codebook trained on the re-imported store
+    val rebuilt = centroids(servedIvf(fp2))
+    assert(rebuilt == centroids(graft.operators.Ivf.loadModel(
+      spark, s"$store/ann_ivf_${fp2}_d64/_model")))
+    assert(rebuilt != centroids(servedIvf(fp1)))
     // PQ variant: exact-cosine re-rank means scores also match exact
     val pqHits = graft.cli.Demo.search(spark, store, prompt,
       topK = 5, threshold = -1.0, dim = 64, ann = "pq")

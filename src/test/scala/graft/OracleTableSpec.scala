@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
@@ -27,6 +28,13 @@ class OracleTableSpec extends AnyFunSuite {
     "t42_canonical_key", "d21_benchmark_decontamination",
     "t52_filter_funnel", "t55_data_card", "r1_rag_retrieval",
     "r2_rag_prompt", "r3_hybrid_retrieval")
+
+  private def rm(p: String): Unit = {
+    val root = Path.of(p)
+    if (Files.exists(root))
+      Files.walk(root).iterator().asScala.toSeq.reverse
+        .foreach(f => Files.deleteIfExists(f))
+  }
 
   test("the oracle table's key set is complete before any query runs") {
     val keys = SparkEntry.oracles.keySet
@@ -67,12 +75,6 @@ class OracleTableSpec extends AnyFunSuite {
       assert(dumped(outA)("v21_ivf_recall") != gotB("v21_ivf_recall"),
         "corpora A and B must train different codebooks")
     } finally {
-      def rm(p: String): Unit = {
-        val root = Path.of(p)
-        if (Files.exists(root))
-          Files.walk(root).iterator().asScala.toSeq.reverse
-            .foreach(f => Files.deleteIfExists(f))
-      }
       Seq(b, outA, outB).foreach(rm)
       // B's build-once sidecars are keyed on its temp dir
       val key = graft.store.AnnIndexes.keyOf(b)
@@ -81,5 +83,33 @@ class OracleTableSpec extends AnyFunSuite {
         .filter(_.getName.contains(key))
         .foreach(f => rm(f.getPath))
     }
+  }
+
+  test("a dump lists the queries that threw; the check fails on each") {
+    assume(new java.io.File(s"$srcSf/documents.parquet").exists,
+      s"no testdata at $srcSf")
+    // a corpus with documents only: t1 runs, a1 (lineitem) throws
+    val corpus = Files.createTempDirectory("graft_failed_corpus")
+    val out = Files.createTempDirectory("graft_failed_out").toString
+    try {
+      Files.copy(Paths.get(s"$srcSf/documents.parquet"),
+        corpus.resolve("documents.parquet"))
+      Verify.dump(spark, corpus.toString, out,
+        Set("t1_token_stats", "a1_pricing_summary"))
+      val failed = new ObjectMapper()
+        .readValue(Paths.get(s"$out/failed.json").toFile,
+          classOf[java.util.List[String]]).asScala
+      assert(failed == Seq("a1_pricing_summary"))
+      assume(scala.util.Try(
+        Process(Seq("python3", "-c", "import duckdb")).! == 0)
+        .getOrElse(false), "python3+duckdb unavailable")
+      val log = new StringBuilder
+      val code = Process(Seq("python3", "tools/check_correctness.py",
+          srcSf, out))
+        .!(ProcessLogger(l => log.append(l).append('\n')))
+      assert(code == 1, log)
+      assert(log.toString.contains("FAIL a1_pricing_summary"), log)
+      assert(log.toString.contains("OK   t1_token_stats"), log)
+    } finally Seq(corpus.toString, out).foreach(rm)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -154,11 +156,42 @@ class Round4OpsSpec extends AnyFunSuite {
       finally spark.sparkContext.removeSparkListener(l)
       n.get()
     }
+    // root paths of every file scan the queries run inside `f` read
+    def scannedRoots(f: => Unit): Seq[String] = {
+      val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val l = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(fn: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          qe.optimizedPlan.foreach {
+            case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+              r.relation match {
+                case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+                  h.location.rootPaths.foreach(p => roots.add(p.toUri.getPath))
+                case _ =>
+              }
+            case _ =>
+          }
+        override def onFailure(fn: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      org.apache.spark.sql.GraftShim.flushListenerBus(spark)
+      spark.listenerManager.register(l)
+      try { f; org.apache.spark.sql.GraftShim.flushListenerBus(spark) }
+      finally spark.listenerManager.unregister(l)
+      roots.asScala.toSeq
+    }
     var first: Set[Long] = Set.empty
     var second: Set[Long] = Set.empty
+    var secondRoots: Seq[String] = Nil
     val firstJobs = countJobs { first = keptSet() }
-    val secondJobs = countJobs { second = keptSet() }
+    val secondJobs = countJobs { secondRoots = scannedRoots { second = keptSet() } }
     assert(first == second)
+    // the warm call takes the codebook from the process memo: no job
+    // reads the sidecar (the dedup itself still scans the embeddings)
+    assert(secondRoots.nonEmpty)
+    assert(!secondRoots.exists(_.startsWith(modelPath)),
+      s"warm call re-read the codebook sidecar: $secondRoots")
     // sidecar result must equal the train-per-run form
     val base = graft.operators.Dedup
       .semanticDedup(emb, "vec_id", "embedding", nCells = 16, threshold = 0.45)

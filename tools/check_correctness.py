@@ -6,7 +6,9 @@ Usage: python3 tools/check_correctness.py <sfDir> <verifyOutDir>
 Loads each <name>.parquet written by graft.Verify, runs the matching
 oracle SQL from oracle_sql.json in DuckDB over the same testdata
 parquet tables, and compares row count, column names (sorted), and
-values (rows sorted, columns sorted by name).
+values (rows sorted, columns sorted by name). Every query that
+failed.json lists (it threw during the dump) is a FAIL too, with or
+without an oracle.
 """
 import json
 import math
@@ -36,9 +38,21 @@ def canon(v):
         return repr(v)
     return str(v)
 
+failed_path = f"{out_dir}/failed.json"
+threw = []
+if os.path.exists(failed_path):
+    with open(failed_path) as f:
+        threw = json.load(f)
+
 fails = 0
 checked = 0
+for name in threw:
+    print(f"FAIL {name}: the query threw during the dump")
+    fails += 1
+    checked += 1
 for name, sql in sorted(oracles.items()):
+    if name in threw:
+        continue
     checked += 1
     try:
         got = duckdb.sql(
