@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * followed by one non-contract provenance line (failed queries,
   * per-trial times and loadavg samples) so a truncated capture can
   * never eat the headline. A failed query is timed -1, makes the total
-  * -1 and the exit status 1.
+  * -1 and the exit status 1; so does a Headline or BenchOverrides name
+  * that names no declared query.
   *
   * Each query is run three times and the fastest run reported: the
   * first run pays JVM/codegen warmup that a long-lived cluster
@@ -232,6 +233,10 @@ object Bench {
       // checkpoint blocks the catalog cache cannot see
       Caches.release(spark)
       spark.catalog.clearCache()
+      if (!SparkEntry.queries.contains(name)) {
+        System.err.println(s"[bench] $name failed: not a declared query")
+        return -1.0
+      }
       val t0 = System.nanoTime()
       try {
         BenchOverrides.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
@@ -270,13 +275,21 @@ object Bench {
     // 11.6 s trial of a 0.7 s query) a single pre-query sample lags —
     // sampling before EVERY trial lets a reader attribute any single
     // outlier trial to ambient load without hand re-timing
-    val results = Headline.filter(SparkEntry.queries.contains).map { name =>
+    // every Headline name is timed and an undeclared one fails like a
+    // query that threw, so a renamed or misspelled name can never drop
+    // out and shrink the total; an override keyed on a name the
+    // Headline lacks would time nothing, so it fails too
+    val strays = BenchOverrides.keys.toSeq.sorted.filterNot(Headline.contains)
+    val results = Headline.map { name =>
       val trials = Seq.fill(3) {
         val l = loadAvg1m(); (l, timeOnce(name))
       }
       val times = trials.map(_._2)
       (name, if (times.exists(_ < 0)) -1.0 else times.min, times,
         trials.map(_._1))
+    } ++ strays.map { name =>
+      System.err.println(s"[bench] $name failed: override of no Headline query")
+      (name, -1.0, Seq(-1.0), Seq(loadAvg1m()))
     }
     val loadEnd = loadAvg1m()
 

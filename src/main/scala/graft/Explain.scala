@@ -10,8 +10,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else Bench.Headline
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
     val spark = Tables.session("local[4]", 8)
-    names.filter(SparkEntry.queries.contains).foreach { name =>
+    names.foreach { name =>
       println(s"\n########## $name ##########")
       try println(SparkEntry.queries(name)(spark, sfDir)
         .queryExecution.explainString(

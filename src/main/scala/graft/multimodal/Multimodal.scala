@@ -31,6 +31,188 @@ object Multimodal {
     * kernel call, on driver and executors alike. */
   private val _imageIoMemCache: Unit = javax.imageio.ImageIO.setUseCache(false)
 
+  // ---- the one codec path: every operator and generator below builds,
+  // encodes, decodes and walks its media through these helpers ----
+
+  /** The one image decode: `None` when the bytes are undecodable (an
+    * IOException, or no JDK codec matches). */
+  private def decodeImage(
+      bytes: Array[Byte]): Option[java.awt.image.BufferedImage] =
+    try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+    catch { case _: java.io.IOException => None }
+
+  /** The one PNG encode. */
+  private def encodePng(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
+
+  /** A `w`×`h` RGB PNG whose pixel (x, y) is `rgb(x, y)`. */
+  private def rgbPng(w: Int, h: Int)(rgb: (Int, Int) => Int): Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) { img.setRGB(x, y, rgb(x, y)); x += 1 }
+      y += 1
+    }
+    encodePng(img)
+  }
+
+  /** The synthetic pixel formula every generated image and frame
+    * shares: a per-image `seed` plus x·97 + y·31, low 24 bits. */
+  private def fillRgb(seed: Long, x: Int, y: Int): Int =
+    ((seed + x * 97L + y * 31L) & 0xffffffL).toInt
+
+  /** Integer luminance of a packed RGB pixel. */
+  private def luma(rgb: Int): Int =
+    (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
+
+  /** Every pixel of `img` in one bulk raster read, row-major. */
+  private def pixels(img: java.awt.image.BufferedImage): Array[Int] =
+    img.getRGB(0, 0, img.getWidth, img.getHeight, null, 0, img.getWidth)
+
+  /** Exact luminance sum over every pixel of `img`. */
+  private def lumaSum(img: java.awt.image.BufferedImage): Long = {
+    val px = pixels(img)
+    var sum = 0L
+    var k = 0
+    while (k < px.length) { sum += luma(px(k)); k += 1 }
+    sum
+  }
+
+  /** The `maxDim` box: (w, h) scaled to fit, aspect kept, never
+    * upscaled, each side floored at 1. */
+  private def fitBox(w: Int, h: Int, maxDim: Int): (Int, Int) = {
+    val mx = math.max(w, h)
+    if (mx <= maxDim) (w, h)
+    else (math.max(1, w * maxDim / mx), math.max(1, h * maxDim / mx))
+  }
+
+  /** The 64-bit dHash as four 16-bit chunks: a 9×8 luminance grid,
+    * one bit per horizontal neighbour pair (bit set iff the right
+    * cell is brighter). Grid cell (gx, gy) reads the source pixel
+    * ((gx·ow/9)·w/ow, (gy·oh/8)·h/oh) of a `w`×`h` image seen at its
+    * `ow`×`oh` nearest-neighbour resize — with ow = w, oh = h that is
+    * the plain (gx·w/9, gy·h/8) grid. */
+  private def dHash(w: Int, h: Int, ow: Int, oh: Int)(
+      rgbAt: (Int, Int) => Int): Array[Int] = {
+    val lum = Array.ofDim[Int](8, 9)
+    var gy = 0
+    while (gy < 8) {
+      val sy = ((gy * oh / 8).toLong * h / oh).toInt
+      var gx = 0
+      while (gx < 9) {
+        lum(gy)(gx) = luma(rgbAt(((gx * ow / 9).toLong * w / ow).toInt, sy))
+        gx += 1
+      }
+      gy += 1
+    }
+    val chunks = new Array[Int](4)
+    var i = 0
+    while (i < 64) {
+      if (lum(i / 8)(i % 8 + 1) > lum(i / 8)(i % 8))
+        chunks(i / 16) |= 1 << (i % 16)
+      i += 1
+    }
+    chunks
+  }
+
+  /** A video asset: a zip of `n` PNG key-frames (entries f000.png …),
+    * frame j filled by [[fillRgb]] from `seed(j)`, 40 ms per frame. */
+  private def zipVideo(w: Int, h: Int, n: Int)(
+      seed: Int => Long): (Array[Byte], Row) = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val zos = new java.util.zip.ZipOutputStream(bos)
+    var j = 0
+    while (j < n) {
+      val s = seed(j)
+      zos.putNextEntry(new java.util.zip.ZipEntry(f"f$j%03d.png"))
+      zos.write(rgbPng(w, h)(fillRgb(s, _, _)))
+      zos.closeEntry()
+      j += 1
+    }
+    zos.close()
+    (bos.toByteArray, Row("video", w, h, null, 40L * n))
+  }
+
+  /** An audio asset: `samples` as an 8 kHz mono 16-bit signed
+    * little-endian PCM RIFF/WAVE file. */
+  private def wav8k(samples: Array[Int]): (Array[Byte], Row) = {
+    val n = samples.length
+    val pcm = new Array[Byte](n * 2)
+    var k = 0
+    while (k < n) {
+      pcm(2 * k) = (samples(k) & 0xff).toByte
+      pcm(2 * k + 1) = ((samples(k) >> 8) & 0xff).toByte
+      k += 1
+    }
+    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+    val ais = new javax.sound.sampled.AudioInputStream(
+      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.sound.sampled.AudioSystem.write(ais,
+      javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+    (bos.toByteArray, Row("audio", null, null, 8000, 1000L * n / 8000))
+  }
+
+  /** The synthetic WAV sample formula, in [−10000, 10000]. */
+  private def wavSample(id: Long, k: Int): Int =
+    ((id * 2654435761L + k * 1013904223L) % 20001L - 10000L).toInt
+
+  /** The one synthetic-asset scaffold: every id of `df(idCol)` becomes
+    * one [[AssetSchema]] row whose (content, meta) is `asset(id)`. The
+    * round-robin repartition spreads the codec work — the id
+    * projection is tiny, but a single-file source would otherwise
+    * serialize every encode into one task (each row depends only on
+    * its id, so the redistribution cannot change results). */
+  private def synthesize(df: DataFrame, idCol: String)(
+      asset: Long => (Array[Byte], Row)): DataFrame = {
+    val spark = df.sparkSession
+    val rows = df.select(col(idCol).cast("long"))
+      .repartition(spark.sparkContext.defaultParallelism)
+      .rdd.mapPartitions(_.map { r =>
+        val id = r.getLong(0)
+        val (bytes, meta) = asset(id)
+        Row(id, bytes, meta)
+      })
+    spark.createDataFrame(rows, AssetSchema)
+  }
+
+  /** The one zip-container walk: entry ordinals `wanted` accepts are
+    * read and handed to `emit` (a frame emit returns its row, or None
+    * when the frame does not decode); skipped entries are never read
+    * (the zip stream skips their compressed bytes), and the walk stops
+    * once entry `last` has been processed. A corrupt or truncated
+    * container yields zero rows, not the frames before the corruption
+    * point — deterministic, and the asset is uniformly "undecodable"
+    * downstream, so one bad crawl artifact never fails a job. */
+  private def zipWalk(bytes: Array[Byte], wanted: Int => Boolean,
+      last: Int = Int.MaxValue)(emit: (Int, Array[Byte]) => Option[Row])
+      : Iterable[Row] = {
+    val zis = new java.util.zip.ZipInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+    try {
+      var j = 0
+      var e = zis.getNextEntry
+      while (e != null && j <= last) {
+        // read THIS entry fully (readAllBytes stops at the entry
+        // boundary) and decode from memory, so the codec never touches
+        // the shared zip stream and entry framing stays intact
+        if (wanted(j)) out ++= emit(j, zis.readAllBytes())
+        zis.closeEntry()
+        j += 1
+        e = zis.getNextEntry
+      }
+    } catch {
+      case _: java.io.IOException => out.clear() // ZipException included
+    }
+    out
+  }
+
   val MediaMetaSchema: StructType = StructType(Seq(
     StructField("media_type", StringType, nullable = false), // image|audio|video
     StructField("width", IntegerType, nullable = true),
@@ -107,12 +289,8 @@ object Multimodal {
     * Returns None when no JDK codec matches — the caller falls back to
     * the stub. Headless-safe: BufferedImage never touches a display. */
   private[multimodal] def decodeImageKernel(
-      bytes: Array[Byte], featureDim: Int): Option[(Int, Int, Array[Float])] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
-    if (img == null) None
-    else {
+      bytes: Array[Byte], featureDim: Int): Option[(Int, Int, Array[Float])] =
+    decodeImage(bytes).map { img =>
       val w = img.getWidth
       val h = img.getHeight
       val feat = new Array[Float](featureDim)
@@ -123,19 +301,15 @@ object Multimodal {
       while (y < h) {
         var x = 0
         while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val lum = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
-            (rgb & 0xff) * 114) / 1000
-          feat(lum * featureDim / 256) += 1f
+          feat(luma(img.getRGB(x, y)) * featureDim / 256) += 1f
           cnt += 1
           x += sx
         }
         y += sy
       }
       if (cnt > 0) { var i = 0; while (i < featureDim) { feat(i) /= cnt; i += 1 } }
-      Some((w, h, feat))
+      (w, h, feat)
     }
-  }
 
   /** Image feature extraction with the REAL codec where possible:
     * image-typed assets go through [[decodeImageKernel]] (true dims +
@@ -181,38 +355,13 @@ object Multimodal {
     * (Hamming ≤ 3 ⟹ one chunk equal). Same luminance formula as
     * [[decodeImageKernel]]. Returns None when no JDK codec matches. */
   private[multimodal] def dHashKernel(
-      bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-      catch { case _: java.io.IOException => null }
-    if (img == null) None
-    else {
-      val w = img.getWidth
-      val h = img.getHeight
-      val lum = Array.ofDim[Int](8, 9)
-      var gy = 0
-      while (gy < 8) {
-        var gx = 0
-        while (gx < 9) {
-          val rgb = img.getRGB(gx * w / 9, gy * h / 8)
-          lum(gy)(gx) = (((rgb >> 16) & 0xff) * 299 +
-            ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-          gx += 1
-        }
-        gy += 1
-      }
-      val chunks = new Array[Int](4)
-      var i = 0
-      while (i < 64) {
-        val cy = i / 8
-        val cx = i % 8
-        if (lum(cy)(cx + 1) > lum(cy)(cx))
-          chunks(i / 16) |= 1 << (i % 16)
-        i += 1
-      }
-      Some((w, h, chunks))
+      bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    decodeImage(bytes).map { img =>
+      val (w, h) = (img.getWidth, img.getHeight)
+      // 72 sampled per-pixel reads: a bulk raster read would touch
+      // every pixel of a large image
+      (w, h, dHash(w, h, w, h)(img.getRGB))
     }
-  }
 
   private val ImagePhashSchema = StructType(Seq(
     StructField("asset_id", LongType, nullable = false),
@@ -252,12 +401,6 @@ object Multimodal {
     spark.createDataFrame(rows, ImagePhashSchema)
   }
 
-  /** Deterministic REAL-PNG asset table from any keyed source: each id
-    * becomes an actual PNG (encoded by the same JDK codec family that
-    * decodes it) whose dimensions derive from the id — width =
-    * 1 + id % 16, height = 1 + id % 8 — with a deterministic pixel
-    * fill. Dims being pure functions of the id is what lets a SQL
-    * oracle verify the DECODER recovered them (m4). */
   private val ResizeSchema: StructType = StructType(Seq(
     StructField("asset_id", LongType, nullable = false),
     StructField("width", IntegerType, nullable = false),
@@ -292,37 +435,24 @@ object Multimodal {
       .select(col("asset_id"), col("content"))
       .rdd.mapPartitions { it =>
         it.flatMap { r =>
-          val img = try {
-            javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          } catch { case _: java.io.IOException => null }
-          if (img == null) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val mx = math.max(w, h)
-            val ow = if (mx <= maxDim) w else math.max(1, w * maxDim / mx)
-            val oh = if (mx <= maxDim) h else math.max(1, h * maxDim / mx)
+          decodeImage(r.getAs[Array[Byte]](1)).map { img =>
+            val (w, h) = (img.getWidth, img.getHeight)
+            val (ow, oh) = fitBox(w, h, maxDim)
             // ONE bulk raster read, then index — per-pixel getRGB(x,y)
             // is ~65k bounds-checked colour-model conversions at a
             // production 256-px thumbnail (round-13 verdict); the bulk
             // form is the same arithmetic at a fraction of the
             // per-pixel overhead
-            val buf = img.getRGB(0, 0, w, h, null, 0, w)
-            var luma = 0L
+            val buf = pixels(img)
+            var sum = 0L
             var y = 0
             while (y < oh) {
               val sy = y * h / oh
               var x = 0
-              while (x < ow) {
-                val rgb = buf(sy * w + x * w / ow)
-                luma += (((rgb >> 16) & 0xff) * 299 +
-                  ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-                x += 1
-              }
+              while (x < ow) { sum += luma(buf(sy * w + x * w / ow)); x += 1 }
               y += 1
             }
-            Some(Row(r.getLong(0), w, h, ow, oh, luma))
+            Row(r.getLong(0), w, h, ow, oh, sum)
           }
         }
       }
@@ -364,41 +494,12 @@ object Multimodal {
       .select(col("asset_id"), col("content"))
       .rdd.mapPartitions { it =>
         it.flatMap { r =>
-          val img = try {
-            javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          } catch { case _: java.io.IOException => null }
-          if (img == null) None
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val mx = math.max(w, h)
-            val ow = if (mx <= maxDim) w else math.max(1, w * maxDim / mx)
-            val oh = if (mx <= maxDim) h else math.max(1, h * maxDim / mx)
-            val buf = img.getRGB(0, 0, w, h, null, 0, w)
-            val lum = Array.ofDim[Int](8, 9)
-            var gy = 0
-            while (gy < 8) {
-              val sy = (gy * oh / 8) * h / oh
-              var gx = 0
-              while (gx < 9) {
-                val sx = (gx * ow / 9) * w / ow
-                val rgb = buf(sy * w + sx)
-                lum(gy)(gx) = (((rgb >> 16) & 0xff) * 299 +
-                  ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-                gx += 1
-              }
-              gy += 1
-            }
-            val chunks = new Array[Int](4)
-            var i = 0
-            while (i < 64) {
-              if (lum(i / 8)(i % 8 + 1) > lum(i / 8)(i % 8))
-                chunks(i / 16) |= 1 << (i % 16)
-              i += 1
-            }
-            Some(Row(r.getLong(0), w, h, ow, oh,
-              chunks(0), chunks(1), chunks(2), chunks(3)))
+          decodeImage(r.getAs[Array[Byte]](1)).map { img =>
+            val (w, h) = (img.getWidth, img.getHeight)
+            val (ow, oh) = fitBox(w, h, maxDim)
+            val buf = pixels(img)
+            val c = dHash(w, h, ow, oh)((x, y) => buf(y * w + x))
+            Row(r.getLong(0), w, h, ow, oh, c(0), c(1), c(2), c(3))
           }
         }
       }
@@ -435,73 +536,31 @@ object Multimodal {
     * integer upscale does). Every pixel stays a pure integer function
     * of (g, x, y), so the oracle replays
     * encode→decode→resize→dHash→pairs end-to-end. */
-  def syntheticScaledPngAssets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val g = id - id % 2
-          val h0 = (1 + (g / 2) % 4).toInt
-          val master = id % 2 == 0
-          val st = if (master) 1 else 2
-          val w = if (master) 16 else 8
-          val h = if (master) 2 * h0 else h0
-          val img = new java.awt.image.BufferedImage(
-            w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              img.setRGB(x, y,
-                ((g * 2654435761L + (x * st) * 97L + (y * st) * 31L)
-                  & 0xffffffL).toInt)
-              x += 1
-            }
-            y += 1
-          }
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(img, "png", bos)
-          Row(id, bos.toByteArray, Row("image", w, h, null, null))
-        }
-      }
-    spark.createDataFrame(rows, AssetSchema)
-  }
-
-  def syntheticPngAssets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    // spread the codec work: the id projection is tiny, but a
-    // single-file source would otherwise serialize every encode into
-    // one task (per-row output depends only on the id, so the
-    // round-robin redistribution cannot change results)
-    val rows = df.select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .rdd.mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val w = 1 + (id % 16).toInt
-        val h = 1 + (id % 8).toInt
-        val img = new java.awt.image.BufferedImage(
-          w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            img.setRGB(x, y,
-              ((id * 2654435761L + x * 97L + y * 31L) & 0xffffffL).toInt)
-            x += 1
-          }
-          y += 1
-        }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        Row(id, bos.toByteArray,
-          Row("image", w, h, null, null))
-      }
+  def syntheticScaledPngAssets(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val g = id - id % 2
+      val h0 = (1 + (g / 2) % 4).toInt
+      val master = id % 2 == 0
+      val st = if (master) 1 else 2
+      val w = if (master) 16 else 8
+      val h = if (master) 2 * h0 else h0
+      (rgbPng(w, h)((x, y) => fillRgb(g * 2654435761L, x * st, y * st)),
+        Row("image", w, h, null, null))
     }
-    spark.createDataFrame(rows, AssetSchema)
-  }
+
+  /** Deterministic REAL-PNG asset table from any keyed source: each id
+    * becomes an actual PNG (encoded by the same JDK codec family that
+    * decodes it) whose dimensions derive from the id — width =
+    * 1 + id % 16, height = 1 + id % 8 — with a deterministic pixel
+    * fill. Dims being pure functions of the id is what lets a SQL
+    * oracle verify the DECODER recovered them (m4). */
+  def syntheticPngAssets(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val w = 1 + (id % 16).toInt
+      val h = 1 + (id % 8).toInt
+      (rgbPng(w, h)(fillRgb(id * 2654435761L, _, _)),
+        Row("image", w, h, null, null))
+    }
 
   /** m21's vision side (round 17): for each (caption, image-url)
     * pair, build the pair's REAL PNG (8-bit gray, one pixel row,
@@ -561,10 +620,8 @@ object Multimodal {
         while (x < lumas.length) {
           img.getRaster.setSample(x, 0, 0, lumas(x)); x += 1
         }
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", bos)
-        val back = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(bos.toByteArray))
+        // our own encode always decodes
+        val back = decodeImage(encodePng(img)).get
         val hist = new Array[Long](16)
         var k = 0
         while (k < back.getWidth) {
@@ -585,44 +642,11 @@ object Multimodal {
     * selectively, and the whole build runs distributed with the
     * codec-work-spreading repartition of the PNG builder. Frame count
     * 2 + id % 7; fixed frame geometry per asset (like real video). */
-  def syntheticVideoAssets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          val n = 2 + (id % 7).toInt
-          val bos = new java.io.ByteArrayOutputStream()
-          val zos = new java.util.zip.ZipOutputStream(bos)
-          var j = 0
-          while (j < n) {
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                img.setRGB(x, y,
-                  ((id * 2654435761L + j * 1013904223L + x * 97L + y * 31L)
-                    & 0xffffffL).toInt)
-                x += 1
-              }
-              y += 1
-            }
-            zos.putNextEntry(new java.util.zip.ZipEntry(f"f$j%03d.png"))
-            javax.imageio.ImageIO.write(img, "png", zos)
-            zos.closeEntry()
-            j += 1
-          }
-          zos.close()
-          Row(id, bos.toByteArray, Row("video", w, h, null, 40L * n))
-        }
-      }
-    spark.createDataFrame(rows, AssetSchema)
-  }
+  def syntheticVideoAssets(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      zipVideo(1 + (id % 16).toInt, 1 + (id % 8).toInt, 2 + (id % 7).toInt)(
+        j => id * 2654435761L + j * 1013904223L)
+    }
 
   /** Scene-STRUCTURED synthetic videos for the m17 cut detector: the
     * frame fill is keyed on scene = j div sceneLen instead of j, so
@@ -633,46 +657,12 @@ object Multimodal {
     * detector vacuous). n = 4 + id % 9 frames, sceneLen = 1 + id % 3;
     * same zip-of-PNG container and distributed build as the plain
     * builder. */
-  def syntheticSceneVideoAssets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val w = 1 + (id % 16).toInt
-          val h = 1 + (id % 8).toInt
-          val n = 4 + (id % 9).toInt
-          val sceneLen = 1 + (id % 3).toInt
-          val bos = new java.io.ByteArrayOutputStream()
-          val zos = new java.util.zip.ZipOutputStream(bos)
-          var j = 0
-          while (j < n) {
-            val scene = j / sceneLen
-            val img = new java.awt.image.BufferedImage(
-              w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                img.setRGB(x, y,
-                  ((id * 2654435761L + scene * 69069L + x * 97L + y * 31L)
-                    & 0xffffffL).toInt)
-                x += 1
-              }
-              y += 1
-            }
-            zos.putNextEntry(new java.util.zip.ZipEntry(f"f$j%03d.png"))
-            javax.imageio.ImageIO.write(img, "png", zos)
-            zos.closeEntry()
-            j += 1
-          }
-          zos.close()
-          Row(id, bos.toByteArray, Row("video", w, h, null, 40L * n))
-        }
-      }
-    spark.createDataFrame(rows, AssetSchema)
-  }
+  def syntheticSceneVideoAssets(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      val sceneLen = 1 + (id % 3).toInt
+      zipVideo(1 + (id % 16).toInt, 1 + (id % 8).toInt, 4 + (id % 9).toInt)(
+        j => id * 2654435761L + (j / sceneLen) * 69069L)
+    }
 
   private val FrameStatsSchema: StructType = StructType(Seq(
     StructField("asset_id", LongType, nullable = false),
@@ -700,48 +690,12 @@ object Multimodal {
       .rdd.mapPartitions { it =>
         it.flatMap { r =>
           val id = r.getLong(0)
-          val zis = new java.util.zip.ZipInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          try {
-            var j = 0
-            var e = zis.getNextEntry
-            while (e != null) {
-              if (j % everyNth == 0) {
-                // read THIS entry fully (readAllBytes stops at the entry
-                // boundary), decode from memory — ImageIO never touches
-                // the shared zip stream, so entry framing stays intact
-                val img = javax.imageio.ImageIO.read(
-                  new java.io.ByteArrayInputStream(zis.readAllBytes()))
-                if (img != null) {
-                  val w = img.getWidth
-                  val h = img.getHeight
-                  var luma = 0L
-                  var y = 0
-                  while (y < h) {
-                    var x = 0
-                    while (x < w) {
-                      val rgb = img.getRGB(x, y)
-                      luma += (((rgb >> 16) & 0xff) * 299 +
-                        ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  out += Row(id, j, w, h, luma, w * h)
-                }
-              }
-              zis.closeEntry()
-              j += 1
-              e = zis.getNextEntry
+          zipWalk(r.getAs[Array[Byte]](1), _ % everyNth == 0) { (j, png) =>
+            decodeImage(png).map { img =>
+              val (w, h) = (img.getWidth, img.getHeight)
+              Row(id, j, w, h, lumaSum(img), w * h)
             }
-          } catch {
-            // corrupt container → zero rows, same contract as
-            // [[zipFrameHashes]] (advisor, round 13)
-            case _: java.util.zip.ZipException => out.clear()
-            case _: java.io.IOException => out.clear()
           }
-          out
         }
       }
     spark.createDataFrame(rows, FrameStatsSchema)
@@ -790,47 +744,16 @@ object Multimodal {
         it.flatMap { r =>
           val id = r.getLong(0)
           val want = r.getAs[scala.collection.Seq[Int]](2).toSet
-          val zis = new java.util.zip.ZipInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          try {
-            var j = 0
-            // early exit counts PROCESSED wanted ordinals, not emitted
-            // rows: a wanted entry that fails ImageIO decode emits
-            // nothing, and an emitted-row test would then degrade the
-            // walk to a full-container scan (round-15 advisor note)
-            var done = 0
-            var e = zis.getNextEntry
-            while (e != null && done < want.size) {
-              if (want(j)) {
-                done += 1
-                val png = zis.readAllBytes()
-                val img = javax.imageio.ImageIO.read(
-                  new java.io.ByteArrayInputStream(png))
-                if (img != null) {
-                  val w = img.getWidth
-                  val h = img.getHeight
-                  val px = img.getRGB(0, 0, w, h, null, 0, w)
-                  var luma = 0L
-                  var k = 0
-                  while (k < px.length) {
-                    val rgb = px(k)
-                    luma += (((rgb >> 16) & 0xff) * 299 +
-                      ((rgb >> 8) & 0xff) * 587 + (rgb & 0xff) * 114) / 1000
-                    k += 1
-                  }
-                  out += Row(id, j, w, h, luma, png)
-                }
-              }
-              zis.closeEntry()
-              j += 1
-              e = zis.getNextEntry
+          // the walk stops after the last wanted ORDINAL, not after the
+          // last emitted row: a wanted entry that fails to decode emits
+          // nothing, and an emitted-row test would then degrade the
+          // walk to a full-container scan
+          zipWalk(r.getAs[Array[Byte]](1), want,
+              if (want.isEmpty) -1 else want.max) { (j, png) =>
+            decodeImage(png).map { img =>
+              Row(id, j, img.getWidth, img.getHeight, lumaSum(img), png)
             }
-          } catch {
-            case _: java.util.zip.ZipException => out.clear()
-            case _: java.io.IOException => out.clear()
           }
-          out
         }
       }
     spark.createDataFrame(rows, KeyframeSchema)
@@ -882,34 +805,10 @@ object Multimodal {
     * 20001 − 10000 ∈ [−10000, 10000] ⊂ int16), so a SQL oracle can
     * recompute any windowed sample statistic without an audio codec —
     * the m5/m6 id-pure-content trick applied to audio. */
-  def syntheticWavAssets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val n = 64 + (id % 64).toInt
-          val pcm = new Array[Byte](n * 2)
-          var k = 0
-          while (k < n) {
-            val v = ((id * 2654435761L + k * 1013904223L) % 20001L - 10000L).toInt
-            pcm(2 * k) = (v & 0xff).toByte
-            pcm(2 * k + 1) = ((v >> 8) & 0xff).toByte
-            k += 1
-          }
-          val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.sound.sampled.AudioSystem.write(ais,
-            javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-          Row(id, bos.toByteArray,
-            Row("audio", null, null, 8000, 1000L * n / 8000))
-        }
-      }
-    spark.createDataFrame(rows, AssetSchema)
-  }
+  def syntheticWavAssets(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      wav8k(Array.tabulate(64 + (id % 64).toInt)(wavSample(id, _)))
+    }
 
   /** Speech-SHAPED synthetic WAVs for the m19 silence segmenter: every
     * third 32-sample window is digital silence (v = 0), the rest carry
@@ -919,38 +818,11 @@ object Multimodal {
     * the detector vacuous). n = 256 + id % 128 samples (8–12 windows
     * → several silent stretches per asset); same real WAVE encode and
     * distributed build as the plain builder. */
-  def syntheticSpeechWavAssets(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val rows = df.select(col(idCol).cast("long"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val id = r.getLong(0)
-          val n = 256 + (id % 128).toInt
-          val pcm = new Array[Byte](n * 2)
-          var k = 0
-          while (k < n) {
-            val v =
-              if ((k / 32) % 3 == 2) 0
-              else ((id * 2654435761L + k * 1013904223L) % 20001L - 10000L)
-                .toInt
-            pcm(2 * k) = (v & 0xff).toByte
-            pcm(2 * k + 1) = ((v >> 8) & 0xff).toByte
-            k += 1
-          }
-          val fmt =
-            new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-          val ais = new javax.sound.sampled.AudioInputStream(
-            new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.sound.sampled.AudioSystem.write(ais,
-            javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-          Row(id, bos.toByteArray,
-            Row("audio", null, null, 8000, 1000L * n / 8000))
-        }
-      }
-    spark.createDataFrame(rows, AssetSchema)
-  }
+  def syntheticSpeechWavAssets(df: DataFrame, idCol: String): DataFrame =
+    synthesize(df, idCol) { id =>
+      wav8k(Array.tabulate(256 + (id % 128).toInt)(k =>
+        if ((k / 32) % 3 == 2) 0 else wavSample(id, k)))
+    }
 
   private val AudioWindowSchema: StructType = StructType(Seq(
     StructField("asset_id", LongType, nullable = false),
@@ -1131,29 +1003,11 @@ object Multimodal {
       .rdd.mapPartitions { it =>
         it.flatMap { r =>
           val id = r.getLong(0)
-          val zis = new java.util.zip.ZipInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-          try {
-            var j = 0
-            var e = zis.getNextEntry
-            while (e != null) {
-              if (j % everyNth == 0)
-                dHashKernel(zis.readAllBytes()).foreach { case (_, _, c) =>
-                  out += Row(id, j, c(0), c(1), c(2), c(3))
-                }
-              zis.closeEntry()
-              j += 1
-              e = zis.getNextEntry
+          zipWalk(r.getAs[Array[Byte]](1), _ % everyNth == 0) { (j, png) =>
+            dHashKernel(png).map { case (_, _, c) =>
+              Row(id, j, c(0), c(1), c(2), c(3))
             }
-          } catch {
-            // a partially-walked corrupt container emits NOTHING (not
-            // the frames before the corruption point) — deterministic,
-            // and the asset is uniformly "undecodable" downstream
-            case _: java.util.zip.ZipException => out.clear()
-            case _: java.io.IOException => out.clear()
           }
-          out
         }
       }
     spark.createDataFrame(rows, FrameHashSchema)

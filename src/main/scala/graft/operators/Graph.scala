@@ -80,9 +80,10 @@ object Graph {
       // zero-exchange step shape requires the probe side to stay the
       // dst-partitioned cache (an AQE demotion to sort-merge would
       // re-shuffle O(E) per step). Broadcast bounds V at the 8 GB /
-      // 512M-row relation cap — a deployment iterating over a V past
-      // that pre-partitions the edges on _src and drops the hint, or
-      // uses pageRankConverged's checkpointed form.
+      // 512M-row relation cap, and pageRankConverged and
+      // personalizedPageRank broadcast the same O(V) rank side, so
+      // neither is a way past it: a deployment iterating over a V past
+      // that pre-partitions the edges on _src and drops the hint.
       val rankw = ranks
         .join(broadcast(deg), "id")
         .select(col("id").as("_src"),

@@ -16,35 +16,34 @@ object PipelineQueries {
     * copy carried under its own asset_id. ONE definition, used by the
     * m8 query and the streaming stream≡batch spec so the planting
     * cannot drift between them. */
-  private[graft] def m8PlantedAssets(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), (col("doc_id") - col("doc_id") % 7).as("fill_id"))
-    val base = graft.multimodal.Multimodal.syntheticPngAssets(
-      d.select(col("fill_id").as("doc_id")).distinct(), "doc_id")
-    d.join(base.withColumnRenamed("asset_id", "fill_id"), "fill_id")
-      .select(col("doc_id").as("asset_id"), col("content"), col("meta"))
-  }
+  private[graft] def m8PlantedAssets(s: SparkSession, dir: String): DataFrame =
+    plantFillGroups(s, dir, 7)(graft.multimodal.Multimodal.syntheticPngAssets)
+
   /** m10's planted audio corpus: every run of 5 consecutive doc_ids
     * shares ONE WAV (content derives from fid = doc_id − doc_id % 5;
     * one encode per group, byte-identical copies — the re-uploaded-
     * audio case, m8's fill-group precedent). Each copy is still
     * independently decoded + fingerprinted. The WAV ENCODE is fixture
     * build work (a real corpus already has its media bytes), so the
-    * asset table materializes once per corpus fingerprint (the m7
-    * `wav1_` convention) and steady-state runs measure the
+    * asset table materializes once per corpus fingerprint through
+    * [[assetSidecar]] and steady-state runs measure the
     * decode + fingerprint + collapse — the operator under test. */
-  private[graft] def m10PlantedAssets(s: SparkSession, dir: String): DataFrame = {
-    val path = graft.store.AnnIndexes.materializeAtomic(s,
-        graft.store.AnnIndexes.key(s, "wav5", dir, "documents")) { tmp =>
-      val d = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), (col("doc_id") - col("doc_id") % 5).as("fid"))
-      val base = graft.multimodal.Multimodal.syntheticWavAssets(
-        d.select(col("fid").as("doc_id")).distinct(), "doc_id")
-      d.join(base.withColumnRenamed("asset_id", "fid"), "fid")
-        .select(col("doc_id").as("asset_id"), col("content"), col("meta"))
-        .write.parquet(tmp)
+  private[graft] def m10PlantedAssets(s: SparkSession, dir: String): DataFrame =
+    assetSidecar(s, dir, "wav5") {
+      plantFillGroups(s, dir, 5)(graft.multimodal.Multimodal.syntheticWavAssets)
     }
-    s.read.parquet(path)
+
+  /** The fill-group planter behind m8, m10 and m11: every run of
+    * `group` consecutive doc_ids shares ONE generated asset (content
+    * and meta derive from fid = doc_id − doc_id % group; one encode
+    * per group), each copy carried under its own doc_id as asset_id. */
+  private def plantFillGroups(s: SparkSession, dir: String, group: Int)(
+      generate: (DataFrame, String) => DataFrame): DataFrame = {
+    val d = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), (col("doc_id") - col("doc_id") % group).as("fid"))
+    val base = generate(d.select(col("fid").as("doc_id")).distinct(), "doc_id")
+    d.join(base.withColumnRenamed("asset_id", "fid"), "fid")
+      .select(col("doc_id").as("asset_id"), col("content"), col("meta"))
   }
 
   val Dim = 64
@@ -707,14 +706,8 @@ object PipelineQueries {
     * share one zip (one encode per group; every copy still pays its
     * own zip walk + selective decode). */
   private[graft] def m11PlantedAssets(
-      s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), (col("doc_id") - col("doc_id") % 3).as("fid"))
-    val base = graft.multimodal.Multimodal.syntheticVideoAssets(
-      d.select(col("fid").as("doc_id")).distinct(), "doc_id")
-    d.join(base.withColumnRenamed("asset_id", "fid"), "fid")
-      .select(col("doc_id").as("asset_id"), col("content"), col("meta"))
-  }
+      s: SparkSession, dir: String): DataFrame =
+    plantFillGroups(s, dir, 3)(graft.multimodal.Multimodal.syntheticVideoAssets)
 
   /** m11's dedup decision chain — ONE definition for the m11 query
     * and d22's audit (planted fill-group zips → frame hashes →

@@ -246,6 +246,12 @@ object AnnIndexes {
     "p8_", // unversioned schema-evolution batches → p8v2_ (round 8)
     "mh_") // whitespace-shingle MinHash index → mh2_ (round 11)
 
+  /** Retired sidecar NAMES whose prefix is still live: d14's state dir
+    * was `bloomstate_<fp>` before it carried the corpus key
+    * (`bloomstate_<keyOf(dir)>_<fp>`), so only the whole old-shape
+    * name — an 8-hex-digit fingerprint or `absent` — marks it dead. */
+  private val RetiredNames = "bloomstate_([0-9a-f]{8}|absent)".r
+
   /** Delete retired-recipe sidecars under [[root]] (idempotent; a
     * missing root is a no-op). Invoked at the start of every Verify
     * sweep, so orphans never outlive the round that retired them.
@@ -256,7 +262,8 @@ object AnnIndexes {
     if (!fs.exists(rootPath)) 0
     else fs.listStatus(rootPath).count { st =>
       val name = st.getPath.getName
-      val dead = RetiredPrefixes.exists(name.startsWith)
+      val dead = RetiredPrefixes.exists(name.startsWith) ||
+        RetiredNames.matches(name)
       if (dead) fs.delete(st.getPath, true)
       dead
     }

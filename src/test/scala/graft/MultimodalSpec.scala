@@ -9,6 +9,12 @@ import graft.multimodal.Multimodal
 class MultimodalSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
+  /** The generators' pixel formula and its integer luminance. */
+  private def fillLuma(seed: Long, x: Int, y: Int): Long = {
+    val v = (seed + x * 97L + y * 31L) & 0xffffffL
+    (((v >> 16) & 0xff) * 299 + ((v >> 8) & 0xff) * 587 + (v & 0xff) * 114) / 1000
+  }
+
   private lazy val assets = Multimodal.syntheticAssets(
     Tables.load(spark, "/root/testdata/sf0.001", "documents"), "doc_id", "text")
 
@@ -97,6 +103,22 @@ class MultimodalSpec extends AnyFunSuite {
     val again = Multimodal.decodeImages(png, featureDim = 16).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](6)).toMap
     got.foreach(r => assert(again(r.getLong(0)) == r.getSeq[Float](6)))
+    // the scaled-PNG builder: even id = 16 × 2·h0 master, odd id its
+    // 8 × h0 stride-2 export; dims and every pixel (through the luma
+    // sum of a resize whose box holds the whole image) round-trip
+    val scaled = Multimodal.resizeImages(
+      Multimodal.syntheticScaledPngAssets(docs, "doc_id"), maxDim = 16).collect()
+    assert(scaled.length == 50)
+    scaled.foreach { r =>
+      val id = r.getLong(0)
+      val g = id - id % 2
+      val h0 = (1 + (g / 2) % 4).toInt
+      val (w, h, st) = if (id % 2 == 0) (16, 2 * h0, 1) else (8, h0, 2)
+      val luma = (for (y <- 0 until h; x <- 0 until w)
+        yield fillLuma(g * 2654435761L, x * st, y * st)).sum
+      assert((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getLong(5)) ==
+        ((w, h, w, h, luma)), s"scaled asset $id")
+    }
   }
 
   test("non-decodable and non-image assets fall back to the stub, null dims") {
@@ -128,10 +150,8 @@ class MultimodalSpec extends AnyFunSuite {
     (0L until 40L).foreach { id =>
       val (w, h, n) = (1 + (id % 16).toInt, 1 + (id % 8).toInt, 2 + (id % 7).toInt)
       (0 until n).foreach { j =>
-        val expectLuma = (for (y <- 0 until h; x <- 0 until w) yield {
-          val v = (id * 2654435761L + j * 1013904223L + x * 97L + y * 31L) & 0xffffffL
-          (((v >> 16) & 0xff) * 299 + ((v >> 8) & 0xff) * 587 + (v & 0xff) * 114) / 1000
-        }).sum
+        val expectLuma = (for (y <- 0 until h; x <- 0 until w)
+          yield fillLuma(id * 2654435761L + j * 1013904223L, x, y)).sum
         assert(all((id, j)) == (w, h, expectLuma, w * h), s"id=$id j=$j")
       }
     }
@@ -139,6 +159,22 @@ class MultimodalSpec extends AnyFunSuite {
     val sampled = Multimodal.sampleZipFrames(vids, everyNth = 3).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSet
     assert(sampled == all.keySet.filter(_._2 % 3 == 0))
+    // the scene-video builder: n = 4 + id % 9 frames whose fill is keyed
+    // on the scene j / (1 + id % 3), not on the frame
+    val scenes = Multimodal.sampleZipFrames(
+        Multimodal.syntheticSceneVideoAssets(docs, "doc_id"), everyNth = 1)
+      .collect().map(r => (r.getLong(0), r.getInt(1)) ->
+        (r.getInt(2), r.getInt(3), r.getLong(4), r.getInt(5))).toMap
+    assert(scenes.size == (0 until 40).map(4 + _ % 9).sum)
+    (0L until 40L).foreach { id =>
+      val (w, h, n) = (1 + (id % 16).toInt, 1 + (id % 8).toInt, 4 + (id % 9).toInt)
+      (0 until n).foreach { j =>
+        val scene = j / (1 + (id % 3).toInt)
+        val expectLuma = (for (y <- 0 until h; x <- 0 until w)
+          yield fillLuma(id * 2654435761L + scene * 69069L, x, y)).sum
+        assert(scenes((id, j)) == (w, h, expectLuma, w * h), s"scene id=$id j=$j")
+      }
+    }
   }
 
   test("m7 WAV decode: real header parse round-trips the sample formula") {
@@ -162,6 +198,23 @@ class MultimodalSpec extends AnyFunSuite {
       wins.zipWithIndex.foreach { case (w, j) =>
         assert(got((id, j)) ==
           (w.length, w.map(_.toLong).sum, w.min, w.max), s"id=$id w=$j")
+      }
+    }
+    // the speech-WAV builder: n = 256 + id % 128 samples, every third
+    // 32-sample window digital silence
+    val speech = Multimodal.decodeWavWindows(
+        Multimodal.syntheticSpeechWavAssets(docs, "doc_id"), windowSamples = 32)
+      .collect().map(r => (r.getLong(0), r.getInt(1)) ->
+        (r.getInt(2), r.getLong(3), r.getInt(4), r.getInt(5))).toMap
+    (0L until 40L).foreach { id =>
+      val samples = (0 until 256 + (id % 128).toInt).map(k =>
+        if ((k / 32) % 3 == 2) 0
+        else ((id * 2654435761L + k * 1013904223L) % 20001L - 10000L).toInt)
+      val wins = samples.grouped(32).toSeq
+      assert(speech.keySet.count(_._1 == id) == wins.length, s"speech id=$id")
+      wins.zipWithIndex.foreach { case (w, j) =>
+        assert(speech((id, j)) ==
+          (w.length, w.map(_.toLong).sum, w.min, w.max), s"speech id=$id w=$j")
       }
     }
     // decode is REAL: corrupted bytes (no RIFF header) yield no rows,

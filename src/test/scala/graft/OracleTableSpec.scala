@@ -42,6 +42,13 @@ class OracleTableSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"corpus-derived oracles missing: $missing")
     val orphans = keys.diff(SparkEntry.queries.keySet)
     assert(orphans.isEmpty, s"oracles without a declared query: $orphans")
+    // the bench headline is 82 distinct declared queries, and every
+    // bench-only override replaces one of them
+    assert(Bench.Headline.distinct.size == 82)
+    val undeclared = Bench.Headline.filterNot(SparkEntry.queries.contains)
+    assert(undeclared.isEmpty, s"headline names no query declares: $undeclared")
+    val strays = Bench.BenchOverrides.keySet.diff(Bench.Headline.toSet)
+    assert(strays.isEmpty, s"overrides of no headline query: $strays")
   }
 
   test("a targeted dump writes exactly the selected oracles, for its own corpus") {

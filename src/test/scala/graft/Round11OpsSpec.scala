@@ -135,11 +135,18 @@ class Round11OpsSpec extends AnyFunSuite {
     new java.io.File(dead, "part-0").createNewFile()
     val dead2 = new java.io.File(root, "bpe_retired_test"); dead2.mkdirs()
     val live = new java.io.File(root, "mh2_live_test"); live.mkdirs()
+    // d14's state dir before it carried the corpus key is retired by
+    // its whole name; the keyed shape shares the prefix and is live
+    val oldBloom = new java.io.File(root, "bloomstate_0a1b2c3d"); oldBloom.mkdirs()
+    val liveBloom = new java.io.File(root,
+      s"bloomstate_${graft.store.AnnIndexes.keyOf("/gcspec/corpus")}_0a1b2c3d")
+    liveBloom.mkdirs()
     val n = graft.store.AnnIndexes.gcRetired(spark)
-    assert(n >= 2, s"expected >=2 retired entries removed, got $n")
+    assert(n >= 3, s"expected >=3 retired entries removed, got $n")
     assert(!dead.exists && !dead2.exists, "retired prefixes must be deleted")
-    assert(live.exists, "live recipe prefixes must survive")
-    live.delete()
+    assert(!oldBloom.exists, "the unkeyed bloomstate_<fp> shape must be deleted")
+    assert(live.exists && liveBloom.exists, "live recipe prefixes must survive")
+    live.delete(); liveBloom.delete()
   }
 
   test("d11 derived nCells: small corpora keep 16, growth is linear in N") {

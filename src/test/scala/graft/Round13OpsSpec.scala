@@ -125,6 +125,14 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(fs.contains(7L) && fs(7L) > 0)
     assert(!fs.contains(8L),
       "sampleZipFrames shares the corrupt-container contract")
+    // asset 7 has 2 + 7 % 7 = 2 frames; both are wanted from both assets
+    val wanted = Seq((7L, 0), (7L, 1), (8L, 0), (8L, 1))
+      .toDF("asset_id", "frame_number")
+    val ex = Multimodal.extractZipFrames(assets, wanted)
+      .select("asset_id", "frame_number").collect()
+      .map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(ex == Set((7L, 0), (7L, 1)),
+      "extractZipFrames shares the corrupt-container contract")
   }
 
   /** Crafted per-frame hash table: one row per (asset, frameIdx),

@@ -93,4 +93,16 @@ class SidecarKeySpec extends AnyFunSuite {
     assert(caches.isEmpty,
       s"module-level caches outside AnnIndexes:\n${caches.mkString("\n")}")
   }
+
+  test("every media codec step in Multimodal has exactly one site") {
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/multimodal/Multimodal.scala")), "UTF-8")
+    val steps = Seq("ImageIO.read", "ImageIO.write", "ZipInputStream(",
+      "ZipOutputStream(", "AudioSystem.write", "* 299",
+      "repartition(spark.sparkContext.defaultParallelism)")
+    val counts = steps.map(p =>
+      p -> java.util.regex.Pattern.quote(p).r.findAllMatchIn(src).size)
+    val copies = counts.filter(_._2 != 1)
+    assert(copies.isEmpty, s"codec steps not at exactly one site: $copies")
+  }
 }
