@@ -60,29 +60,43 @@ object Embedding {
     * with a Zipfian vocabulary that's the dominant embedding cost.
     * The cache is pure memoization (values are a pure function of
     * (word, dim)), so results are identical with or without it, under
-    * any executor placement or retry. Bounded: cleared wholesale when
-    * it exceeds `MaxCachedWords` entries (vocabularies are Zipf — the
-    * hot head re-fills immediately). */
-  private val MaxCachedWords = 65536
+    * any executor placement or retry. Bounded in bytes: cleared
+    * wholesale once the cached vectors (`entries × dim × 8` bytes)
+    * pass `MaxCachedBytes` — about 2,700 words at 1,536 dims, so a
+    * small hot vocabulary stays resident without the memo taking a
+    * large share of an executor heap. */
+  private val MaxCachedBytes = 32L << 20
   private val wordVecCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[Double]]()
+  private val cachedBytes = new java.util.concurrent.atomic.AtomicLong()
 
   private def wordVector(w: String, dim: Int): Array[Double] = {
-    if (wordVecCache.size > MaxCachedWords) wordVecCache.clear()
+    if (cachedBytes.get > MaxCachedBytes) {
+      wordVecCache.clear()
+      cachedBytes.set(0)
+    }
     wordVecCache.computeIfAbsent((w, dim), { case (word, d) =>
-      val r = new java.util.Random(seedFrom("MD5", word))
-      Array.fill(d)(r.nextGaussian())
+      cachedBytes.addAndGet(8L * d)
+      gaussians(seedFrom("MD5", word), d, 1.0)
     })
+  }
+
+  /** The first `n` gaussians of `java.util.Random(seed)`, each times
+    * `scale`. */
+  private def gaussians(seed: Long, n: Int, scale: Double): Array[Double] = {
+    val g = new Gaussians(seed)
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) { out(i) = scale * g.nextGaussian(); i += 1 }
+    out
   }
 
   /** Deterministic embedding: text → L2-normalized Array[Float] of `dim`. */
   def embed(text: String, dim: Int = DefaultDim): Array[Float] = {
-    val v = new Array[Double](dim)
     // 1. base vector seeded by sha256 of the whole text
     //    (reference src/lib/embedding.py:80-85)
-    val base = new java.util.Random(seedFrom("SHA-256", text))
+    val v = gaussians(seedFrom("SHA-256", text), dim, BaseWeight)
     var i = 0
-    while (i < dim) { v(i) = BaseWeight * base.nextGaussian(); i += 1 }
 
     // 2. per-word md5-seeded gaussian perturbation weighted by term
     //    frequency (reference src/lib/embedding.py:88-99)
@@ -125,4 +139,48 @@ object Embedding {
 
   def register(spark: SparkSession, dim: Int = DefaultDim): Unit =
     spark.udf.register("embed_text", embed_text(dim))
+}
+
+/** The gaussian stream of `java.util.Random(seed).nextGaussian()`, bit
+  * for bit, with its state in plain fields. `java.util.Random`'s
+  * generator, `nextDouble` and polar `nextGaussian` (with `StrictMath`)
+  * are fixed by its Javadoc for portability, so this is the same
+  * stream; but `Random.nextGaussian` takes a monitor and every draw
+  * CASes an `AtomicLong`, which cost about half of an embedding. An
+  * instance is for one thread. */
+private[graft] final class Gaussians(seed: Long) {
+  import Gaussians._
+  private var state = (seed ^ Multiplier) & Mask
+  private var spare = 0.0
+  private var haveSpare = false
+
+  private def next(bits: Int): Int = {
+    state = (state * Multiplier + 0xBL) & Mask
+    (state >>> (48 - bits)).toInt
+  }
+
+  private def nextDouble(): Double =
+    ((next(26).toLong << 27) + next(27)) * DoubleUnit
+
+  def nextGaussian(): Double =
+    if (haveSpare) { haveSpare = false; spare }
+    else {
+      var v1, v2, s = 0.0
+      while ({
+        v1 = 2 * nextDouble() - 1
+        v2 = 2 * nextDouble() - 1
+        s = v1 * v1 + v2 * v2
+        s >= 1 || s == 0
+      }) ()
+      val multiplier = StrictMath.sqrt(-2 * StrictMath.log(s) / s)
+      spare = v2 * multiplier
+      haveSpare = true
+      v1 * multiplier
+    }
+}
+
+private object Gaussians {
+  private val Multiplier = 0x5DEECE66DL
+  private val Mask = (1L << 48) - 1
+  private val DoubleUnit = 1.0 / (1L << 53)
 }

@@ -831,8 +831,11 @@ object PipelineQueries {
     "m4_image_decode" -> ((s, dir) => {
       val assets = graft.multimodal.Multimodal.syntheticPngAssets(
         Tables.load(s, dir, "documents"), "doc_id")
-      graft.multimodal.Multimodal.decodeImages(assets, featureDim = 16)
-        .select(col("asset_id"), col("width"), col("height"), col("decoded"))
+      // the decoded rows are cached before the sort, as in m7: the
+      // range partitioner's sample would otherwise re-run every decode
+      graft.Caches.shared(
+          graft.multimodal.Multimodal.decodeImages(assets, featureDim = 16)
+            .select(col("asset_id"), col("width"), col("height"), col("decoded")))
         .orderBy("asset_id")
     }),
 
@@ -865,7 +868,9 @@ object PipelineQueries {
     "m12_image_resize" -> ((s, dir) => {
       val assets = graft.multimodal.Multimodal.syntheticPngAssets(
         Tables.load(s, dir, "documents"), "doc_id")
-      graft.multimodal.Multimodal.resizeImages(assets, maxDim = 6)
+      // cached before the sort, as in m4
+      graft.Caches.shared(
+          graft.multimodal.Multimodal.resizeImages(assets, maxDim = 6))
         .orderBy("asset_id")
     }),
 
@@ -1051,7 +1056,8 @@ object PipelineQueries {
             .cast("long")): _*))
         .select("doc_id", "kind", "pos", "image_url", "caption_norm",
           "cap_hist")
-      graft.multimodal.Multimodal.captionAlignedHists(kept)
+      // the scored rows are cached before the sort, as in m4
+      graft.Caches.shared(graft.multimodal.Multimodal.captionAlignedHists(kept)
         .withColumn("cap_mass",
           expr("aggregate(cap_hist, 0L, (a, v) -> a + v)"))
         .withColumn("img_mass",
@@ -1072,7 +1078,7 @@ object PipelineQueries {
         .select(col("doc_id"), col("kind"), col("pos"), col("image_url"),
           col("caption_norm"), col("cap_mass"), col("img_mass"),
           round(col("raw_cos"), 6).as("cos_sim"),
-          (col("raw_cos") >= 0.8).as("aligned"))
+          (col("raw_cos") >= 0.8).as("aligned")))
         .orderBy("doc_id", "kind", "pos")
     }),
 

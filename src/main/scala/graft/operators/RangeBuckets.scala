@@ -3,7 +3,9 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sampled range boundaries + a pure map-side bucket expression — the
   * building block of the two-phase distributed prefix sums
@@ -39,17 +41,23 @@ import org.apache.spark.sql.functions._
   */
 object RangeBuckets {
 
-  /** Null-first ascending per-column ordering, lexicographic across
-    * columns — driver-side mirror of Spark's ascending sort order for
-    * the simple key types used here (numeric, string, date/time). Used
-    * only to order the SAMPLE for balanced boundary picking; per-row
-    * bucketing happens in Catalyst expressions, so a collation
-    * difference here could skew balance but never correctness. */
-  private[operators] val rowOrdering: Ordering[Row] = new Ordering[Row] {
+  /** Spark SQL's ascending order of a row, evaluated on the driver:
+    * per column nulls first, strings by UTF-8 bytes (not Java's UTF-16
+    * `compareTo`), floating point by Spark's NaN and -0.0 rules, other
+    * keys (integral, date/time) by their natural order; lexicographic
+    * across columns. It orders the sample for boundary picking here,
+    * where a difference could only skew balance, and numbers novel
+    * rows in [[graft.store.Catalog]]'s driver-side upserts, where it
+    * must equal `ORDER BY`. */
+  private[graft] val rowOrdering: Ordering[Row] = new Ordering[Row] {
     private def cmp(a: Any, b: Any): Int = (a, b) match {
       case (null, null) => 0
       case (null, _) => -1
       case (_, null) => 1
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+      case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+      case (x: Float, y: Float) => SQLOrderingUtil.compareFloats(x, y)
       case (x: java.lang.Comparable[_], y) =>
         x.asInstanceOf[java.lang.Comparable[Any]].compareTo(y)
       case (x, y) => x.toString.compareTo(y.toString)

@@ -1,6 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -11,8 +13,15 @@ import org.apache.spark.sql.types._
   * re-expressed as set operations (SURVEY.md §2.2 R8–R12, §7.4).
   *
   * Scale stances:
-  *  - `models` and `sources` are tiny dimensions: upserts are
-  *    left-anti joins + appends; every read side broadcasts them.
+  *  - `models` and `sources` are tiny dimensions: an upsert whose
+  *    table and batch each hold at most `DriverUpsertRows` rows runs
+  *    on the driver — one bounded collect of each, the dedup, key
+  *    match and numbering in plain Scala, one append — and returns
+  *    the table as a local relation, so a lookup or broadcast of it
+  *    costs no job. Past that size the same upsert is left-anti joins
+  *    + the distributed numbering of [[withSequentialIds]], several
+  *    jobs that each re-evaluate the batch. Every read side broadcasts
+  *    the table.
   *  - chunk tables are fact tables: append-only Parquet, partitioned
   *    by `model_id` (the reference's every query filters one model —
   *    partition pruning), vectors and text in separate *columns* (the
@@ -97,7 +106,10 @@ object Catalog {
     * are exactly `startId+1 .. startId+n` in (orderCols) order —
     * identical to `row_number() OVER (ORDER BY orderCols)` — for ANY
     * partition count (range boundaries move work between phases but
-    * never change the global order). */
+    * never change the global order). The shape is not free: the
+    * boundary sample and the subtotal aggregate are jobs of their own,
+    * each re-evaluating `df`, so the catalog upserts use it only past
+    * `DriverUpsertRows`. */
   private[graft] def withSequentialIds(
       df: DataFrame, orderCols: Seq[String], startId: Long): DataFrame = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -125,24 +137,85 @@ object Catalog {
       .drop("_part", "_rn", "_base")
   }
 
-  /** Insert-if-absent by `name`; returns the full models table.
-    * New ids continue from the current max, assigned by the
-    * distributed prefix sum (models is a tiny dimension, but the
-    * shape costs nothing and keeps one id-assignment code path). */
-  def upsertModels(
-      spark: SparkSession, path: String, incoming: DataFrame): DataFrame = {
-    val existing = readOrEmpty(spark, path, ModelsSchema)
+  /** Largest table, and largest batch, an upsert handles on the
+    * driver: a few MB of rows. Either one past it takes the
+    * distributed path. */
+  private val DriverUpsertRows = 20000
+
+  /** Insert-if-absent into the dimension table at `path`: drops
+    * within-batch duplicates of `keyCols` (the first in scan order
+    * wins) and rows whose key is already stored (null-safe, `<=>`),
+    * numbers the novel rows from the stored max id + 1 in `keyCols`
+    * order — `row_number() OVER (ORDER BY keyCols)` — appends them,
+    * and returns the full table. `keyCols` is the table's unique key,
+    * so the numbering order has no ties.
+    *
+    * The driver path's collects are bounded at `driverRows + 1` rows,
+    * so the collect that feeds it is also its size check. */
+  private def upsert(spark: SparkSession, path: String, schema: StructType,
+      incoming: DataFrame, keyCols: Seq[String], driverRows: Int): DataFrame = {
+    val fields = schema.fields.toIndexedSeq.filter(_.name != "id")
+    val batch = incoming.select(
+      fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
+    val stored = readOrEmpty(spark, path, schema).limit(driverRows + 1).collect()
+    lazy val rows = batch.limit(driverRows + 1).collect()
+    if (stored.length > driverRows || rows.length > driverRows)
+      upsertDistributed(spark, path, schema, batch, keyCols)
+    else {
+      def keyOf(r: Row): Seq[Any] = keyCols.map(r.getAs[Any](_))
+      val storedKeys = stored.iterator.map(keyOf).toSet
+      val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+      val novel = rows.toSeq
+        .filter { r => val k = keyOf(r); !storedKeys(k) && seen.add(k) }
+        .sortBy(r => Row.fromSeq(keyOf(r)))(
+          graft.operators.RangeBuckets.rowOrdering)
+      val maxId = stored.iterator.map(_.getAs[Long]("id")).maxOption.getOrElse(0L)
+      val numbered = novel.zipWithIndex.map { case (r, i) =>
+        Row.fromSeq(schema.fieldNames.toIndexedSeq.map(n =>
+          if (n == "id") maxId + 1 + i else r.getAs[Any](n)))
+      }
+      if (numbered.nonEmpty) {
+        val written = StructType(schema.fields.map(f =>
+          if (f.name == "id") f else batch.schema(f.name)))
+        spark.createDataFrame(numbered.asJava, written)
+          .coalesce(1).write.mode(SaveMode.Append).parquet(path)
+      }
+      // a file read declares every column nullable; so does this table
+      spark.createDataFrame((stored.toSeq ++ numbered).asJava,
+        StructType(schema.fields.map(_.copy(nullable = true))))
+    }
+  }
+
+  /** [[upsert]] past `DriverUpsertRows`: the same rows and ids from a
+    * null-safe left-anti join and [[withSequentialIds]]. */
+  private def upsertDistributed(spark: SparkSession, path: String,
+      schema: StructType, batch: DataFrame, keyCols: Seq[String]): DataFrame = {
+    val existing = readOrEmpty(spark, path, schema)
     val maxId = existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
+    val deduped = batch.dropDuplicates(keyCols)
     val novel = withSequentialIds(
-        incoming.select("name", "embedding_dim")
-          .dropDuplicates("name")
-          .join(existing, Seq("name"), "left_anti"),
-        Seq("name"), maxId)
-      .select("id", "name", "embedding_dim")
+        deduped.join(existing,
+          keyCols.map(c => deduped(c) <=> existing(c)).reduce(_ && _),
+          "left_anti"),
+        keyCols, maxId)
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
     if (!novel.isEmpty)
       novel.write.mode(SaveMode.Append).parquet(path)
-    spark.read.schema(ModelsSchema).parquet(path)
+    spark.read.schema(schema).parquet(path)
   }
+
+  /** Insert-if-absent by `name`; returns the full models table. New
+    * ids continue from the current max in `name` order. A small table
+    * costs at most two jobs here — the collect of the stored rows and
+    * the append — and comes back as a local relation. */
+  def upsertModels(
+      spark: SparkSession, path: String, incoming: DataFrame): DataFrame =
+    upsertModels(spark, path, incoming, DriverUpsertRows)
+
+  /** [[upsertModels]] with the driver path's row cap given. */
+  private[graft] def upsertModels(spark: SparkSession, path: String,
+      incoming: DataFrame, driverRows: Int): DataFrame =
+    upsert(spark, path, ModelsSchema, incoming, Seq("name"), driverRows)
 
   // -------------------------------------------------------------
   // R9/R10: sources null-safe upsert (first-writer-wins)
@@ -152,29 +225,20 @@ object Catalog {
     * reference's UNIQUE constraint + IS NOT DISTINCT FROM lookup
     * (reference `config/init.sql:23`, `src/lib/database.py:152-167`).
     * Spark's `<=>` is the exact semantic match. */
-  private def nullSafeKeyCond(l: DataFrame, r: DataFrame): Column =
-    l("model_id") <=> r("model_id") &&
-      l("author") <=> r("author") &&
-      l("title") <=> r("title") &&
-      l("year") <=> r("year")
+  private val SourceKey = Seq("model_id", "author", "title", "year")
 
   /** Dedup-within-batch + anti-join-against-existing + append: the
     * job-level equivalent of the reference's per-row
-    * insert-or-retry-on-IntegrityError (SURVEY.md §7.4 decision 4). */
+    * insert-or-retry-on-IntegrityError (SURVEY.md §7.4 decision 4).
+    * Returns the full sources table. */
   def upsertSources(
-      spark: SparkSession, path: String, incoming: DataFrame): DataFrame = {
-    val existing = readOrEmpty(spark, path, SourcesSchema)
-    val maxId = existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
-    val batch = incoming
-      .dropDuplicates("model_id", "author", "title", "year")
-    val novel = withSequentialIds(
-        batch.join(existing, nullSafeKeyCond(batch, existing), "left_anti"),
-        Seq("model_id", "author", "title", "year"), maxId)
-      .select(SourcesSchema.fieldNames.toIndexedSeq.map(col): _*)
-    if (!novel.isEmpty)
-      novel.write.mode(SaveMode.Append).parquet(path)
-    spark.read.schema(SourcesSchema).parquet(path)
-  }
+      spark: SparkSession, path: String, incoming: DataFrame): DataFrame =
+    upsertSources(spark, path, incoming, DriverUpsertRows)
+
+  /** [[upsertSources]] with the driver path's row cap given. */
+  private[graft] def upsertSources(spark: SparkSession, path: String,
+      incoming: DataFrame, driverRows: Int): DataFrame =
+    upsert(spark, path, SourcesSchema, incoming, SourceKey, driverRows)
 
   /** Null-safe point lookup (R9). */
   def lookupSource(

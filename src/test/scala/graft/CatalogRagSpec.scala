@@ -54,6 +54,94 @@ class CatalogRagSpec extends AnyFunSuite {
     assert(hit.count() == 1)
   }
 
+  /** Each upsert case runs on the driver (the library default) and on
+    * the distributed path (a driver cap of 0 rows). */
+  private val upsertPaths: Seq[(String, Option[Int])] =
+    Seq("driver" -> None, "distributed" -> Some(0))
+
+  /** The table an upsert of `batch` into `before` must return, keyed on
+    * `keys`: the stored rows, plus the batch's novel keys numbered by
+    * `row_number() OVER (ORDER BY keys)` from the stored max id. */
+  private def expectedIds(before: Seq[Row], batch: org.apache.spark.sql.DataFrame,
+      keys: Seq[String]): Set[Row] = {
+    val maxId = before.map(_.getLong(0)).maxOption.getOrElse(0L)
+    val stored = before.map(r => keys.indices.map(i => r.get(i + 1))).toSet
+    val novel = batch.select(keys.map(col): _*).distinct()
+      .withColumn("id", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy(keys.map(col): _*)))
+      .collect().filterNot(r => stored(keys.indices.map(r.get)))
+    // numbering the novel keys alone: re-rank the survivors in order
+    val ranked = novel.sortBy(_.getInt(keys.length)).zipWithIndex.map {
+      case (r, i) => Row.fromSeq((maxId + 1 + i) +: keys.indices.map(r.get)) }
+    before.toSet ++ ranked
+  }
+
+  private def idsOf(table: org.apache.spark.sql.DataFrame, keys: Seq[String]): Seq[Row] =
+    table.select(("id" +: keys).map(col): _*).collect().toSeq
+
+  test("R9/R10: upsert ids are row_number() over the key order on both paths") {
+    val schema = org.apache.spark.sql.types.StructType(
+      Catalog.SourcesSchema.fields.filterNot(_.name == "id"))
+    val keys = Seq("model_id", "author", "title", "year")
+    def src(author: String, title: String, year: Integer, url: String) =
+      Row(author, title, Int.box(1), url, null, null, year, Long.box(1L))
+    def df(rows: Row*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), schema)
+    val batch1 = df(
+      src("le guin", "the dispossessed", 1974, "first"),
+      src(null, "anon", null, "first"),
+      src("asimov", null, 1956, "first"),
+      src(null, "anon", null, "second"), // in-batch duplicate, null keys
+      src(null, null, null, "first"),
+      src("asimov", "robots", 1956, "first"),
+      src("le guin", "the dispossessed", 1974, "second"))
+    val batch2 = df(
+      src(null, "anon", null, "third"), // stored, null-safe match
+      src("asimov", "robots", 1950, "first"),
+      src(null, null, 2000, "first"),
+      src("asimov", "robots", 1956, "third"))
+    for ((name, cap) <- upsertPaths) {
+      val path = tmpDir() + "/sources"
+      def upsert(b: org.apache.spark.sql.DataFrame) = cap match {
+        case Some(c) => Catalog.upsertSources(spark, path, b, c)
+        case None => Catalog.upsertSources(spark, path, b)
+      }
+      val s1 = upsert(batch1)
+      val got1 = idsOf(s1, keys)
+      assert(got1.toSet == expectedIds(Nil, batch1, keys), name)
+      assert(got1.map(_.getLong(0)).sorted == (1L to 5L), name)
+      if (cap.isEmpty) // the driver path keeps the first row in scan order
+        assert(s1.filter(col("url") =!= "first").isEmpty, name)
+      val got2 = idsOf(upsert(batch2), keys)
+      assert(got2.toSet == expectedIds(got1, batch2, keys), name)
+      assert(got2.map(_.getLong(0)).sorted == (1L to 7L), name)
+      assert(idsOf(spark.read.parquet(path), keys).toSet == got2.toSet, name)
+    }
+  }
+
+  test("R8: model ids follow Spark's UTF-8 string order on both paths") {
+    import spark.implicits._
+    // "｡" (U+FF61) sorts before "😀" (U+1F600) by UTF-8 bytes, as Spark
+    // orders strings, but after it by Java's UTF-16 compareTo
+    def batch(names: String*) =
+      names.map(n => (n, n.length)).toDF("name", "embedding_dim")
+    val b1 = batch("😀", "｡", "b", "B", "a", "｡")
+    val b2 = batch("😀", "a😀", "a｡", "c")
+    for ((name, cap) <- upsertPaths) {
+      val path = tmpDir() + "/models"
+      def upsert(b: org.apache.spark.sql.DataFrame) = cap match {
+        case Some(c) => Catalog.upsertModels(spark, path, b, c)
+        case None => Catalog.upsertModels(spark, path, b)
+      }
+      val m1 = idsOf(upsert(b1), Seq("name"))
+      assert(m1.toSet == expectedIds(Nil, b1, Seq("name")), name)
+      val m2 = idsOf(upsert(b2), Seq("name"))
+      assert(m2.toSet == expectedIds(m1, b2, Seq("name")), name)
+      assert(m2.sortBy(_.getLong(0)).map(_.getString(1)) ==
+        Seq("B", "a", "b", "｡", "😀", "a｡", "a😀", "c"), name)
+    }
+  }
+
   test("R11: source type classification truth table") {
     import spark.implicits._
     val cases = Seq(

@@ -122,6 +122,38 @@ class CoreFunctionsSpec extends AnyFunSuite {
     assert(!a.sameElements(c))
   }
 
+  test("embedding: the gaussian stream is java.util.Random's, bit for bit") {
+    val rng = new scala.util.Random(7)
+    val seeds = Seq(0L, 1L, -1L, 42L, Long.MinValue, Long.MaxValue, 0x5DEECE66DL) ++
+      Seq.fill(200)(rng.nextLong())
+    for (seed <- seeds; n <- Seq(1, 2, 7, 64, 1535, 1536)) {
+      val want = new java.util.Random(seed)
+      val got = new graft.functions.Gaussians(seed)
+      (1 to n).foreach { i =>
+        val (w, g) = (want.nextGaussian(), got.nextGaussian())
+        assert(java.lang.Double.doubleToRawLongBits(g) ==
+          java.lang.Double.doubleToRawLongBits(w), s"seed $seed draw $i: $g vs $w")
+      }
+    }
+  }
+
+  test("embedding: output bits are pinned") {
+    // SHA-256 over the float bits of these embeddings, recorded before
+    // the embedder drew its gaussians from graft.functions.Gaussians
+    // instead of java.util.Random
+    val texts = Seq(
+      "Robots of the world, arise! The robots organize and demand rights; " +
+        "robots ask whether servitude is the only future for machines.",
+      "a b a c a b",
+      "")
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    for (t <- texts; d <- Seq(1536, 64); f <- Embedding.embed(t, d))
+      md.update(java.nio.ByteBuffer.allocate(4)
+        .putInt(java.lang.Float.floatToRawIntBits(f)).array())
+    assert(md.digest().map("%02x".format(_)).mkString ==
+      "69bbfe9b87b1f9f9b8aaac96709a67a6a8bc18fc547db0c25626e652fe8f430a")
+  }
+
   test("embedding via UDF on a DataFrame") {
     import spark.implicits._
     val df = Seq("one small step", "for a robot").toDF("text")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.Demo
@@ -133,8 +134,37 @@ class RagServeSpec extends AnyFunSuite {
     for (ann <- Seq("exact", "ivf")) assert(served(ann) == after, ann)
   }
 
+  /** Jobs and stages started while it is registered. */
+  private final class Counts extends SparkListener {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); ()
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+      stages.incrementAndGet(); ()
+    }
+  }
+
+  test("importing the demo corpus into a fresh store runs at most 5 jobs") {
+    // the catalog upserts, the model lookup, the sources broadcast and
+    // the [import] line cost no job of their own: what remains is the
+    // two catalog appends, the chunk write and its broadcast. Before
+    // the driver-side upserts this import ran 36 jobs and 36 stages.
+    val corpus = Demo.demoCorpus(spark)
+    val counts = new Counts
+    org.apache.spark.sql.GraftShim.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(counts)
+    try {
+      Demo.importDocs(spark, corpus, tmpDir() + "/store", "demo-model",
+        dim = 64, maxTokens = 32)
+      org.apache.spark.sql.GraftShim.flushListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(counts)
+    assert(counts.jobs.get <= 5,
+      s"${counts.jobs.get} jobs, ${counts.stages.get} stages")
+  }
+
   test("a served exact or ivf prompt runs one Spark job, one stage, no exchange") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.exchange.Exchange
     val store = tmpDir() + "/store"
@@ -143,16 +173,6 @@ class RagServeSpec extends AnyFunSuite {
     def serve(ann: String): String = Rag.aggregateChunkText(Demo.search(
       spark, store, "are robots friendly to humans", topK = 5,
       threshold = 0.01, dim = 64, ann = ann))
-    final class Counts extends SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-    }
     for (ann <- Seq("exact", "ivf")) {
       // the first request builds the index and opens the handles
       val warm = serve(ann)
