@@ -6,10 +6,10 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...},
   * followed by one non-contract provenance line (failed queries,
-  * per-trial times and loadavg samples) so a truncated capture can
-  * never eat the headline. A failed query is timed -1, makes the total
-  * -1 and the exit status 1; so does a Headline or BenchOverrides name
-  * that names no declared query.
+  * per-trial times, loadavg samples and Janino compiles) so a truncated
+  * capture can never eat the headline. A failed query is timed -1,
+  * makes the total -1 and the exit status 1; so does a Headline or
+  * BenchOverrides name that names no declared query.
   *
   * Each query is run three times and the fastest run reported: the
   * first run pays JVM/codegen warmup that a long-lived cluster
@@ -224,7 +224,8 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Tables.session(s"local[$cpus]", cpus)
 
-    def timeOnce(name: String): Double = {
+    // one trial: (seconds, Janino compiles); a failed trial is -1 s
+    def timeOnce(name: String): (Double, Long) = {
       // drop persisted intermediates between runs: queries that share
       // a projection via persist() must re-earn that work every timed
       // run (CacheManager matches canonicalized plans, so the second
@@ -235,18 +236,21 @@ object Bench {
       spark.catalog.clearCache()
       if (!SparkEntry.queries.contains(name)) {
         System.err.println(s"[bench] $name failed: not a declared query")
-        return -1.0
+        return (-1.0, 0L)
       }
       val t0 = System.nanoTime()
-      try {
-        BenchOverrides.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
-          .collect()
+      val (ok, compiles) = Compiles.of {
+        try {
+          BenchOverrides.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
+            .collect()
+          true
+        }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
+      (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0, compiles.count)
     }
 
     // machine-load provenance: best-of-3 hides most noise, but a loaded
@@ -282,35 +286,41 @@ object Bench {
     val strays = BenchOverrides.keys.toSeq.sorted.filterNot(Headline.contains)
     val results = Headline.map { name =>
       val trials = Seq.fill(3) {
-        val l = loadAvg1m(); (l, timeOnce(name))
+        val l = loadAvg1m(); val (t, c) = timeOnce(name); (l, t, c)
       }
       val times = trials.map(_._2)
       (name, if (times.exists(_ < 0)) -1.0 else times.min, times,
-        trials.map(_._1))
+        trials.map(_._1), trials.map(_._3))
     } ++ strays.map { name =>
       System.err.println(s"[bench] $name failed: override of no Headline query")
-      (name, -1.0, Seq(-1.0), Seq(loadAvg1m()))
+      (name, -1.0, Seq(-1.0), Seq(loadAvg1m()), Seq(0L))
     }
     val loadEnd = loadAvg1m()
 
     val qs = results
-      .map { case (k, v, _, _) => "\"" + k + "\":" + f"$v%.3f" }
+      .map { case (k, v, _, _, _) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val ts = results
-      .map { case (k, _, t, _) =>
+      .map { case (k, _, t, _, _) =>
         "\"" + k + "\":" + t.map(x => f"$x%.3f").mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val loads = results
-      .map { case (k, _, _, ls) => "\"" + k + "\":" + f"${ls.head}%.2f" }
+      .map { case (k, _, _, ls, _) => "\"" + k + "\":" + f"${ls.head}%.2f" }
       .mkString("{", ",", "}")
     val trialLoads = results
-      .map { case (k, _, _, ls) =>
+      .map { case (k, _, _, ls, _) =>
         "\"" + k + "\":" + ls.map(x => f"$x%.2f").mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
+    // per-trial Janino compiles: trials 2 and 3 reuse trial 1's
+    // generated classes, so a non-zero warm count is plan churn
+    val compiles = results
+      .map { case (k, _, _, _, cs) =>
+        "\"" + k + "\":" + cs.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     // a failed query has no time, so the headline has none either: the
     // total carries the same -1 sentinel as the failed query's entry
     // (never the smaller sum of the survivors) and the run exits 1
-    val failed = results.collect { case (k, v, _, _) if v < 0 => k }
+    val failed = results.collect { case (k, v, _, _, _) if v < 0 => k }
     val total = if (failed.nonEmpty) -1.0 else results.map(_._2).sum
     // explicit provenance for every bench-only shape override: a reader
     // of the JSON can see which timed entries differ from the declared,
@@ -327,7 +337,7 @@ object Bench {
     // capture can never eat the headline again.
     println(f"""{"metric":"headline_total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","overrides":$ov,"loadavg_1m_start":$loadStart%.2f,"loadavg_1m_end":$loadEnd%.2f,"java_procs":${javaProcs()}}""")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(f"""{"metric":"headline_provenance","failed":$failedJson,"loadavg_per_query":$loads,"loadavg_per_trial":$trialLoads,"trials":$ts}""")
+    println(f"""{"metric":"headline_provenance","failed":$failedJson,"loadavg_per_query":$loads,"loadavg_per_trial":$trialLoads,"trials":$ts,"compiles":$compiles}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

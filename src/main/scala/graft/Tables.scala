@@ -111,14 +111,35 @@ object Tables {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100), sized to the
+    * engine's working set so a warm query reuses its compiled classes:
+    *  - one pass of the curation rotation (t36, g1, d11, r3) compiles
+    *    about 200–225 classes (the driver's and the tasks' copy of each
+    *    whole-stage pipeline count apart);
+    *  - the cache is a Guava LRU split over 4 segments that each hold
+    *    a quarter of the bound, so the bound needs head-room over the
+    *    working set or one hot segment evicts early;
+    *  - a retained class costs about 14 KB of metaspace, so 1,024
+    *    entries cap the cache near 14 MB.
+    * Under the default, every pass of a rotation larger than the cache
+    * missed on every class: a 20–180 ms Janino compile each, plus a new
+    * class that runs interpreted until the JIT warms it again.
+    * A static conf: the cache is built once per JVM, from the session
+    * that is active when the first class compiles, so a JVM whose first
+    * session came from another builder keeps that builder's bound. */
+  val CodegenCacheEntries = 1024
+
   /** Session tuned for the target: AQE on, shuffle width sized to the
-    * local core count (the driver passes 32 via local[32]); at cluster
-    * scale the same settings defer partition sizing to AQE. */
+    * local core count (the driver passes 32 via local[32]), generated
+    * classes cached for the working set ([[CodegenCacheEntries]]); at
+    * cluster scale the same settings defer partition sizing to AQE. */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -8,8 +8,12 @@ import scala.collection.mutable
   * each query once (warm-up) then once measured, with a listener
   * recording every stage's wall time, task time, and the first line of
   * its call site — the local substitute for the Spark UI's stage table
-  * (Tables.session disables the UI). Caches are released between runs
-  * (the Bench discipline), so queries never read each other's cache.
+  * (Tables.session disables the UI). The TOTAL line also carries the
+  * measured run's Janino compiles (`compiles=`, `compile_ms=`; see
+  * [[graft.Compiles]]): after the warm-up they should be 0, and a
+  * non-zero count means the query generated different source the
+  * second time. Caches are released between runs (the Bench
+  * discipline), so queries never read each other's cache.
   * Usage:
   *   runMain graft.tools.ProfileQ <sfDir> <query>[,<query>...] [cpus]
   */
@@ -49,7 +53,8 @@ object ProfileQ {
       org.apache.spark.sql.GraftShim.flushListenerBus(spark)
       stages.clear()
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir).collect()
+      val (_, compiles) = graft.Compiles.of(
+        graft.SparkEntry.queries(name)(spark, sfDir).collect())
       val wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftShim.flushListenerBus(spark)
       val run = stages.toList
@@ -60,6 +65,7 @@ object ProfileQ {
       val memUsed = storage.map(_.memSize).sum
       val diskUsed = storage.map(_.diskSize).sum
       println(f"TOTAL $name $wall%.3f s, ${run.size} stages; " +
+        s"compiles=${compiles.count} compile_ms=${compiles.ms}; " +
         f"cached mem=${memUsed / 1e6}%.1f MB disk=${diskUsed / 1e6}%.1f MB " +
         f"(disk > 0 means the cache spilled); " +
         f"spill mem=${run.map(_.spillMem).sum / 1e6}%.1f MB " +
