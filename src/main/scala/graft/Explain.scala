@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq else Bench.Headline
+    val names = if (args.length > 1) args.drop(1).toSeq
+      else SparkEntry.specs.filter(_.headline).map(_.name)
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
     val spark = Tables.session("local[4]", 8)

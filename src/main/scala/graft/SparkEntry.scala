@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
 import graft.operators.{EventQueries, GraphQueries, PipelineQueries, RelationalQueries, TextQueries, VectorQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  *
-  * `queries` is the full declared operator inventory; each entry with a
-  * matching `oracles` entry is hash-checked against DuckDB by the driver
-  * (CORRECTNESS_r{N}.json); entries without oracle SQL get a rows-only
-  * check and are additionally covered by ScalaTest golden/property
-  * specs.
+/** The flagship [[entry]] query plus the registry of
+  * every declared query. Each query is one [[QuerySpec]] in its
+  * operator module's `specs`; [[specs]] concatenates the six modules
+  * and [[queries]]/[[oracles]] are name-keyed views built once from
+  * it. Every query's oracle is hash-checked against DuckDB by the
+  * correctness dump ([[Verify]]); ScalaTest golden/property specs
+  * cover the rest.
   */
 object SparkEntry {
 
@@ -33,25 +33,18 @@ object SparkEntry {
       .limit(10)
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ VectorQueries.queries ++
-      TextQueries.queries ++ PipelineQueries.queries ++
-      EventQueries.queries ++ GraphQueries.queries
+  /** Every declared query, in registry order (the order [[Bench]]
+    * times the headline in). */
+  val specs: Seq[QuerySpec] =
+    RelationalQueries.specs ++ VectorQueries.specs ++
+      TextQueries.specs ++ PipelineQueries.specs ++
+      EventQueries.specs ++ GraphQueries.specs
 
-  /** For each key in queries, equivalent SQL runnable by DuckDB on the
-    * same parquet tables, as a function of the corpus `(spark, dir)`
-    * and nothing else: a constant for most queries, derived from the
-    * corpus (a trained model, an emitted pair set, an alphabet) by the
-    * query's own deterministic builders for the rest. Omitted for
-    * non-SQL-expressible ops, and None for a degenerate corpus → the
-    * driver records a weaker rows-only check. */
-  lazy val oracles: Map[String, (SparkSession, String) => Option[String]] =
-    (RelationalQueries.oracleSql ++ VectorQueries.oracleSql ++
-      TextQueries.oracleSql ++ EventQueries.oracleSql ++
-      PipelineQueries.oracleSql ++ GraphQueries.oracleSql)
-      .map { case (name, sql) =>
-        name -> ((_: SparkSession, _: String) => Some(sql)) } ++
-      VectorQueries.corpusOracles ++ TextQueries.corpusOracles ++
-      PipelineQueries.corpusOracles
+  /** Each query's plan, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    specs.map(q => q.name -> q.run).toMap
+
+  /** Each query's oracle, by name (see [[QuerySpec.oracle]]). */
+  val oracles: Map[String, (SparkSession, String) => Option[String]] =
+    specs.map(q => q.name -> q.oracle).toMap
 }

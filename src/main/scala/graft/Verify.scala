@@ -47,28 +47,31 @@ object Verify {
       spark.catalog.clearCache()
       threw
     }.sorted
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // evaluated after the queries ran, so corpus-derived oracles reuse
     // the sidecars their queries built (run order changes only cost)
     val json = SparkEntry.oracles
       .filter { case (name, _) => selected.contains(name) }
       .flatMap { case (name, oracle) => oracle(spark, sfDir).map(name -> _) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/failed.json"),
-      failed.map(q).mkString("[", ",", "]"))
+      failed.map(jsonString).mkString("[", ",", "]"))
   }
+
+  /** `s` as a quoted JSON string. Escapes backslash, quote and ALL
+    * control chars (<0x20): a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * correctness check. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), rest) = args.splitAt(2)

@@ -904,30 +904,6 @@ object Dedup {
         xxhash64(slice(sigCol, bandIdx * rowsPer + 1, rowsPer)).as("key"))
     }: _*)
 
-  /** MinHash+LSH candidate pairs: docs sharing ≥1 band bucket.
-    * The scale path: explode bands (numBands rows/doc), equi-join on
-    * (band, key) — a hash-partitioned shuffle on small keys — then
-    * distinct pairs. No N² anywhere. */
-  def minHashCandidatePairs(
-      df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 2, numHashes: Int = 64, bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
-    val rowsPer = numHashes / bands
-    val sig = df.select(
-      col(idCol).cast("long").as("id"),
-      minHashSignature(TextAnalysis.shinglesSeg(col(textCol), shingleN),
-        numHashes, seed).as("sig"))
-    val banded = sig
-      .select(col("id"), explode(bandKeys(col("sig"), bands, rowsPer)).as("bk"))
-      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val a = banded.select(col("band"), col("key"), col("id").as("a_id"))
-    val b = banded.select(col("band"), col("key"), col("id").as("b_id"))
-    a.join(b, Seq("band", "key"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .distinct()
-  }
-
   /** Full MinHash near-dup detection: LSH candidates, then exact
     * Jaccard verification of candidates only (join back to shingles).
     * At scale: candidates ≪ N², and the verify join is candidate-sized.
@@ -1120,8 +1096,6 @@ object Dedup {
         .select("id", "label", "_moved")
         .localCheckpoint(true)
       changed = movedAcc.value
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CCROUND $iter changed=$changed")
       // `next` is materialized — free the old round's checkpoint
       // blocks before it goes unreachable
       org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(labels)

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
+import graft.QuerySpec.sql
 
 /** Distributed graph analytics over edge lists — the co-occurrence /
   * link-structure face of a training-data pipeline (domain authority
@@ -714,14 +715,21 @@ object GraphQueries {
     unpack(packedOrderPairs(s, dir)
       .groupBy("pk").agg(count(lit(1)).as("cnt")), Seq("cnt"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // G9: weighted shortest paths (4-round Bellman–Ford) from the
     // % 1000 == 0 seed parts over the co-purchase graph, traversal
     // cost = 1000000 div cnt (frequently co-purchased links are cheap
     // — the "relatedness distance" used for hard-negative mining and
     // taxonomy induction). Integer costs keep every distance an exact
     // sum; the oracle unrolls the same 4 relaxation rounds as CTEs.
-    "g9_weighted_sssp" -> ((s, dir) => {
+    // g9: the 4 Bellman–Ford relaxation rounds unrolled as CTEs over
+    // the order-count-weighted symmetric edge list; integer costs, so
+    // distances are exact sums in both engines.
+    // Not in the bench headline, for g3's reason: its per-trial cost is
+    // ~80% the same co-purchase pair build g1 already times (the 4
+    // relaxation rounds move only the O(V) distance table).
+    // Hash-checked at 3 SFs.
+    QuerySpec("g9_weighted_sssp", (s, dir) => {
       // weight computed ONCE on the undirected pair, then both
       // directions project it — the formula can't drift asymmetric
       // integral `div`, matching the oracle's `//` by construction
@@ -736,12 +744,50 @@ object GraphQueries {
       Graph.ssspRounds(edges, "src", "dst", "w", seeds, rounds = 4)
         .select(col("id").as("part_id"), col("d").as("dist"))
         .orderBy("part_id")
-    }),
+    }, sql(
+      """WITH op AS (SELECT DISTINCT a.l_orderkey AS ok,
+        |   a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |   ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        | wp AS (SELECT src, dst, COUNT(*) AS cnt FROM op
+        |  GROUP BY src, dst),
+        | we AS (SELECT src, dst, 1000000 // cnt AS w FROM wp
+        |  UNION ALL SELECT dst, src, 1000000 // cnt FROM wp),
+        | d0 AS (SELECT DISTINCT src AS id, 0 AS d FROM we
+        |  WHERE src % 1000 = 0),
+        | d1 AS (SELECT id, MIN(d) AS d FROM (
+        |   SELECT id, d FROM d0 UNION ALL
+        |   SELECT e.dst, p.d + e.w FROM d0 p JOIN we e ON e.src = p.id)
+        |  GROUP BY id),
+        | d2 AS (SELECT id, MIN(d) AS d FROM (
+        |   SELECT id, d FROM d1 UNION ALL
+        |   SELECT e.dst, p.d + e.w FROM d1 p JOIN we e ON e.src = p.id)
+        |  GROUP BY id),
+        | d3 AS (SELECT id, MIN(d) AS d FROM (
+        |   SELECT id, d FROM d2 UNION ALL
+        |   SELECT e.dst, p.d + e.w FROM d2 p JOIN we e ON e.src = p.id)
+        |  GROUP BY id),
+        | d4 AS (SELECT id, MIN(d) AS d FROM (
+        |   SELECT id, d FROM d3 UNION ALL
+        |   SELECT e.dst, p.d + e.w FROM d3 p JOIN we e ON e.src = p.id)
+        |  GROUP BY id)
+        | SELECT CAST(id AS BIGINT) AS part_id, CAST(d AS BIGINT) AS dist
+        | FROM d4 ORDER BY part_id""".stripMargin.replaceAll("\n", ""))),
 
     // G1: 5-iteration PageRank over the symmetric co-purchase graph.
     // rank_scaled = rank × N (mean 1.0 — stable 6dp resolution);
     // rounded BEFORE the sort so both engines cut the same top 100.
-    "g1_part_pagerank" -> ((s, dir) => {
+    // g1 is the headline's measured floor (round-8 decomposition at
+    // sf0.1, warm minima): pairs build 1.45 s + ~0.9 s fixed
+    // (degree/weight build, N, top-100) + ~0.75 s per rank iteration —
+    // each iteration is ONE broadcast join + ONE agg shuffle, i.e.
+    // local-mode stage latency, not algorithmic waste (round 7 already
+    // measured hinted shuffle/merge variants 1.2-1.3× slower and
+    // pointer-jump a net loss). The oracle pins 5 iterations; a tol-cut
+    // cannot reproduce the 6dp-rounded top-100 before iter 5, so fewer
+    // iterations would break the hash. On a cluster the per-stage
+    // latency amortizes and the same plan is the right one.
+    QuerySpec("g1_part_pagerank", (s, dir) => {
       // Round 18: the symmetrized edge list is built in ONE pass — an
       // explode emitting both orientations per pair — instead of a
       // union over a cached pairs table. pageRank now consumes its
@@ -768,11 +814,51 @@ object GraphQueries {
           round(col("rank") * col("_n"), 6).as("rank_scaled"))
         .orderBy(desc("rank_scaled"), asc("part_id"))
         .limit(100)
-    }),
+    }, sql(
+      """WITH pairs AS (
+        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        | edges AS (
+        |  SELECT src, dst FROM pairs
+        |  UNION ALL SELECT dst AS src, src AS dst FROM pairs),
+        | deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
+        | nn AS (SELECT COUNT(*) AS n FROM deg),
+        | r0 AS (SELECT src AS id, 1.0 / (SELECT n FROM nn) AS r FROM deg),
+        | r1 AS (SELECT e.dst AS id,
+        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
+        |   FROM edges e JOIN r0 r ON e.src = r.id JOIN deg ON deg.src = e.src
+        |   GROUP BY e.dst),
+        | r2 AS (SELECT e.dst AS id,
+        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
+        |   FROM edges e JOIN r1 r ON e.src = r.id JOIN deg ON deg.src = e.src
+        |   GROUP BY e.dst),
+        | r3 AS (SELECT e.dst AS id,
+        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
+        |   FROM edges e JOIN r2 r ON e.src = r.id JOIN deg ON deg.src = e.src
+        |   GROUP BY e.dst),
+        | r4 AS (SELECT e.dst AS id,
+        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
+        |   FROM edges e JOIN r3 r ON e.src = r.id JOIN deg ON deg.src = e.src
+        |   GROUP BY e.dst),
+        | r5 AS (SELECT e.dst AS id,
+        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
+        |   FROM edges e JOIN r4 r ON e.src = r.id JOIN deg ON deg.src = e.src
+        |   GROUP BY e.dst)
+        | SELECT CAST(id AS BIGINT) AS part_id,
+        |   ROUND(r * (SELECT n FROM nn), 6) AS rank_scaled
+        | FROM r5 ORDER BY rank_scaled DESC, part_id
+        | LIMIT 100""".stripMargin.replaceAll("\n", "")), headline = true),
 
     // G2: graph profile — node/edge/triangle counts of the
     // co-purchase graph (the clustering-structure audit).
-    "g2_triangle_count" -> ((s, dir) => {
+    // Not in the bench headline by design: triangle enumeration is
+    // Θ(Σ deg²) wedge work however it's partitioned — at sf0.1 the
+    // co-purchase graph yields ~20M wedges for a 1-row answer, ~10 s of
+    // honest compute that would triple the headline total while
+    // measuring the graph's density, not the engine. It remains
+    // oracle-checked per-round (CORRECTNESS at sf0.01).
+    QuerySpec("g2_triangle_count", (s, dir) => {
       import s.implicits._
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val nodes = pairs.select(col("src").as("id"))
@@ -781,13 +867,28 @@ object GraphQueries {
       val tris = Graph.triangleCount(pairs, "src", "dst")
       pairs.unpersist(blocking = false)
       Seq((nodes, nEdges, tris)).toDF("n_nodes", "n_edges", "n_triangles")
-    }),
+    }, sql(
+      """WITH pairs AS (
+        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)
+        | SELECT
+        |  (SELECT COUNT(*) FROM
+        |    (SELECT src AS id FROM pairs UNION SELECT dst FROM pairs)) AS n_nodes,
+        |  (SELECT COUNT(*) FROM pairs) AS n_edges,
+        |  (SELECT COUNT(*) FROM pairs p1
+        |    JOIN pairs p2 ON p1.dst = p2.src
+        |    JOIN pairs p3 ON p3.src = p1.src AND p3.dst = p2.dst) AS n_triangles
+        |""".stripMargin.replaceAll("\n", ""))),
 
     // G3: 3-hop multi-source BFS from the % 1000 == 0 seed parts —
     // hash-checked against a DuckDB recursive CTE, so the whole
     // level-synchronous traversal (frontier shuffles + visited
     // anti-joins) is pinned end-to-end, not just spec-sampled.
-    "g3_bfs_hops" -> ((s, dir) => {
+    // Not in the bench headline: the per-trial cost is dominated by the
+    // same co-purchase pair build g1 already times — benching g3/g4 would
+    // count that build thrice. Oracle-checked at 3 SFs.
+    QuerySpec("g3_bfs_hops", (s, dir) => {
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val edges = pairs.union(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -796,14 +897,29 @@ object GraphQueries {
       Graph.bfsHops(edges, "src", "dst", seeds, maxHops = 3)
         .select(col("id").as("part_id"), col("hops"))
         .orderBy("part_id")
-    }),
+    }, sql(
+      """WITH RECURSIVE pairs AS (
+        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        | edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+        | walk(id, hops) AS (
+        |  SELECT DISTINCT src AS id, 0 AS hops FROM edges WHERE src % 1000 = 0
+        |  UNION
+        |  SELECT e.dst, w.hops + 1 FROM walk w JOIN edges e ON e.src = w.id
+        |  WHERE w.hops < 3)
+        | SELECT CAST(id AS BIGINT) AS part_id, CAST(MIN(hops) AS BIGINT) AS hops
+        | FROM walk GROUP BY id ORDER BY part_id""".stripMargin.replaceAll("\n", ""))),
 
     // G4: Adamic–Adar link prediction over the co-purchase graph —
     // top-100 non-adjacent part pairs by discriminative common
     // neighbors, pivot-sampled (z % 16 == 0) so the wedge stage costs
     // Σ deg²/16; the oracle applies the identical sample, keeping the
     // estimator hash-checked.
-    "g4_adamic_adar" -> ((s, dir) => {
+    // Not in the bench headline, for g3's reason: its per-trial cost is
+    // dominated by the co-purchase pair build g1 already times.
+    // Oracle-checked at 3 SFs.
+    QuerySpec("g4_adamic_adar", (s, dir) => {
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val edges = pairs.union(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -811,7 +927,25 @@ object GraphQueries {
         .select(col("x").as("src"), col("y").as("dst"), col("score"))
         .orderBy(desc("score"), asc("src"), asc("dst"))
         .limit(100)
-    }),
+    }, sql(
+      """WITH pairs AS (
+        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        | edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+        | deg AS (SELECT src AS id, COUNT(*) AS d FROM edges GROUP BY src),
+        | wedge AS (
+        |  SELECT e1.dst AS x, e2.dst AS y, e1.src AS z
+        |  FROM edges e1 JOIN edges e2 ON e1.src = e2.src AND e1.dst < e2.dst
+        |  WHERE e1.src % 16 = 0),
+        | aa AS (
+        |  SELECT x, y, ROUND(SUM(1.0 / LN(d)), 6) AS score
+        |  FROM wedge JOIN deg ON deg.id = wedge.z GROUP BY x, y),
+        | nonedge AS (
+        |  SELECT a.* FROM aa a LEFT JOIN pairs p ON p.src = a.x AND p.dst = a.y
+        |  WHERE p.src IS NULL)
+        | SELECT CAST(x AS BIGINT) AS src, CAST(y AS BIGINT) AS dst, score
+        | FROM nonedge ORDER BY score DESC, src, dst LIMIT 100""".stripMargin.replaceAll("\n", ""))),
 
     // G5: 3-round synchronous label propagation over the co-purchase
     // graph — community sizes of the top-100 communities. The oracle
@@ -820,7 +954,7 @@ object GraphQueries {
     // hash-checked end-to-end. Stays out of the headline for g2–g4's
     // reason: its per-trial cost is dominated by the pair build g1
     // already times.
-    "g5_label_prop" -> ((s, dir) => {
+    QuerySpec("g5_label_prop", (s, dir) => {
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val edges = pairs.union(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -829,7 +963,12 @@ object GraphQueries {
         .agg(count(lit(1)).as("n_members"))
         .orderBy(desc("n_members"), asc("community"))
         .limit(100)
-    }),
+    }, sql(
+      s"""WITH $g5LabelCtes
+        | SELECT CAST(label AS BIGINT) AS community,
+        |   COUNT(*) AS n_members
+        | FROM l3 GROUP BY 1 ORDER BY n_members DESC, community
+        | LIMIT 100""".stripMargin.replaceAll("\n", ""))),
 
     // G10: Newman–Girvan MODULARITY of g5's communities (round 14) —
     // the quality metric completing the t49/d22/t52 report pattern
@@ -843,7 +982,11 @@ object GraphQueries {
     // degree and community-degree tables are keyed aggs, the
     // intra-edge count is two label joins on the endpoints — the
     // edges shuffle once per join, nothing quadratic.
-    "g10_modularity" -> ((s, dir) => {
+    // g10: the SAME g5 label chain, folded into Newman–Girvan
+    // modularity via the integer identity
+    // Q = (4m·Σm_c − Σd_c²) / (4m²) — one division, no
+    // order-dependent float summation over communities.
+    QuerySpec("g10_modularity", (s, dir) => {
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val edges = pairs.union(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -868,7 +1011,23 @@ object GraphQueries {
               col("sum_deg_sq")).cast("double") /
             (lit(4L) * col("m_edges") * col("m_edges")), 6)
             .as("modularity"))
-    }),
+    }, sql(
+      s"""WITH $g5LabelCtes,
+        | deg AS (SELECT src AS id, CAST(COUNT(*) AS BIGINT) AS d
+        |  FROM edges GROUP BY src),
+        | dc AS (SELECT l.label, CAST(SUM(deg.d) AS BIGINT) AS dsum
+        |  FROM l3 l JOIN deg USING (id) GROUP BY l.label),
+        | ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
+        |   CAST(SUM(dsum * dsum) AS BIGINT) AS sum_deg_sq FROM dc),
+        | mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m_edges FROM pairs),
+        | ia AS (SELECT CAST(COUNT(*) AS BIGINT) AS intra_edges
+        |  FROM pairs p JOIN l3 a ON p.src = a.id
+        |   JOIN l3 b ON p.dst = b.id WHERE a.label = b.label)
+        | SELECT m_edges, n_communities, intra_edges, sum_deg_sq,
+        |  ROUND((4 * m_edges * intra_edges - sum_deg_sq)::DOUBLE
+        |    / (4 * m_edges * m_edges), 6) AS modularity
+        | FROM mm, ag, ia""".stripMargin.replaceAll("\n", "")),
+      sf1Chains = Some((_, _) => g10Sf1Chains)),
 
     // G6: 5-iteration PERSONALIZED PageRank from the % 1000 == 0 seed
     // parts (g3's seed set) — proximity-to-seeds ranking, the quality/
@@ -876,7 +1035,7 @@ object GraphQueries {
     // g1, with the teleport vector concentrated on the seeds and the
     // float ops mirrored term-for-term ((1.0 − 0.85)·p, rank·(1/deg)).
     // Out of the headline for g2–g5's reason (pair-build domination).
-    "g6_personalized_pagerank" -> ((s, dir) => {
+    QuerySpec("g6_personalized_pagerank", (s, dir) => {
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val edges = pairs.union(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
@@ -891,7 +1050,42 @@ object GraphQueries {
           round(col("rank") * col("_n"), 6).as("rank_scaled"))
         .orderBy(desc("rank_scaled"), asc("part_id"))
         .limit(100)
-    }),
+    }, sql({
+      // unrolled like g1, with the teleport on the seed vector and the
+      // step arithmetic mirrored term-for-term against
+      // Graph.personalizedPageRank: (1.0 - 0.85)·p and rank·(1.0/deg)
+      // reproduce Spark's exact float ops (not the algebraic
+      // equivalents 0.15·p and rank/deg)
+      val steps = (1 to 5).map { i =>
+        s""" r$i AS (SELECT pv.id,
+           |   (1.0 - 0.85) * pv.p + 0.85 * COALESCE(m.mass, 0.0) AS r
+           |  FROM pv LEFT JOIN (
+           |   SELECT e.dst AS id, SUM(r.r * (1.0 / deg.d)) AS mass
+           |   FROM edges e JOIN r${i - 1} r ON e.src = r.id
+           |    JOIN deg ON deg.src = e.src
+           |   GROUP BY e.dst) m ON m.id = pv.id)""".stripMargin
+      }.mkString(",")
+      ("""WITH pairs AS (
+        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        | edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+        | deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
+        | nodes AS (SELECT DISTINCT src AS id FROM edges),
+        | nn AS (SELECT COUNT(*) AS n FROM nodes),
+        | sd AS (SELECT id FROM nodes WHERE id % 1000 = 0),
+        | ns AS (SELECT COUNT(*) AS s FROM sd),
+        | pv AS (SELECT n.id,
+        |   CASE WHEN s.id IS NULL THEN 0.0
+        |    ELSE 1.0 / (SELECT s FROM ns) END AS p
+        |  FROM nodes n LEFT JOIN sd s ON n.id = s.id),
+        | r0 AS (SELECT id, p AS r FROM pv),""".stripMargin
+        + steps +
+        """ SELECT CAST(id AS BIGINT) AS part_id,
+        |   ROUND(r * (SELECT n FROM nn), 6) AS rank_scaled
+        | FROM r5 ORDER BY rank_scaled DESC, part_id
+        | LIMIT 100""".stripMargin).replaceAll("\n", "")
+    })),
 
     // G7: HITS over the bipartite customer→supplier purchase graph —
     // authorities = suppliers reinforced by strong buyers, the classic
@@ -901,7 +1095,10 @@ object GraphQueries {
     // +,/ chain mirrorable term-for-term; top-50 authorities, scaled
     // by the authority count like g1. Out of the headline for g2–g5's
     // reason (the lineitem⋈orders edge build dominates per-trial).
-    "g7_supplier_hits" -> ((s, dir) => {
+    // g7: HITS unrolled as 6 L1-normalized half-step CTEs — the same
+    // +,/ float chain the engine runs (raw sum, then divide by the
+    // 1-row normalizer), mirrored term-for-term.
+    QuerySpec("g7_supplier_hits", (s, dir) => {
       val edges = graft.Tables.load(s, dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
         .join(graft.Tables.load(s, dir, "orders")
@@ -916,7 +1113,27 @@ object GraphQueries {
           round(col("auth") * col("_n"), 6).as("auth_scaled"))
         .orderBy(desc("auth_scaled"), asc("supp_key"))
         .limit(50)
-    }),
+    }, sql({
+      val steps = (1 to 3).map { i =>
+        s""" a${i}r AS (SELECT e.dst AS id, SUM(h.hub) AS a
+           |  FROM edges e JOIN h${i - 1} h ON e.src = h.id GROUP BY e.dst),
+           | a$i AS (SELECT id, a / (SELECT SUM(a) FROM a${i}r) AS auth
+           |  FROM a${i}r),
+           | h${i}r AS (SELECT e.src AS id, SUM(a.auth) AS h
+           |  FROM edges e JOIN a$i a ON e.dst = a.id GROUP BY e.src),
+           | h$i AS (SELECT id, h / (SELECT SUM(h) FROM h${i}r) AS hub
+           |  FROM h${i}r)""".stripMargin
+      }.mkString(",")
+      ("""WITH edges AS (
+        |  SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+        | h0 AS (SELECT DISTINCT src AS id, 1.0 AS hub FROM edges),""".stripMargin
+        + steps +
+        """ SELECT CAST(id AS BIGINT) AS supp_key,
+        |  ROUND(auth * (SELECT COUNT(*) FROM a3), 6) AS auth_scaled
+        | FROM a3 ORDER BY auth_scaled DESC, supp_key
+        | LIMIT 50""".stripMargin).replaceAll("\n", "")
+    })),
 
     // G8: 130-core of the co-purchase graph — the density filter
     // (median degree is ~115 at sf0.01, so k=130 peels roughly 3/4 of
@@ -927,14 +1144,62 @@ object GraphQueries {
     // covers the deep-peel case oracles can't — a path peels one
     // endpoint layer per round). Out of the headline for g2–g5's
     // reason (pair-build domination).
-    "g8_kcore" -> ((s, dir) => {
+    // g8: peeling unrolled 10 rounds — each round recomputes degrees
+    // on the surviving edge list and keeps ≥ 70-degree nodes. k = 70
+    // is chosen NON-VACUOUS at the gate SF (sf0.01: 1996-node core;
+    // sf0.1: 19674; sf0.001's fixpoint is empty — probed), and the
+    // unroll depth covers the measured worst convergence (8 rounds at
+    // sf0.001, ≤4 at the larger SFs) with margin; rounds past the
+    // fixpoint are idempotent.
+    QuerySpec("g8_kcore", (s, dir) => {
       val pairs = graft.Caches.shared(copurchasePairs(s, dir))
       val edges = pairs.union(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
       Graph.kCore(edges, "src", "dst", k = 70)
         .select(col("id").as("part_id"), col("core_deg"))
         .orderBy("part_id")
-    })
+    }, sql({
+      // every e_i is read THREE times by round i+1 (k_i twice + the
+      // edge filter) — without MATERIALIZED, DuckDB may inline the
+      // reference chain and re-evaluate the pair build 3^6 times
+      // (observed: >78 GB of spill at sf0.1 before running out of
+      // disk). Materializing each round makes the unroll linear.
+      val rounds = (1 to 11).map { i =>
+        s""" k$i AS MATERIALIZED (SELECT src AS id FROM e${i - 1}
+           |  GROUP BY src HAVING COUNT(*) >= 70),
+           | e$i AS MATERIALIZED (SELECT e.src, e.dst FROM e${i - 1} e
+           |  JOIN k$i a ON e.src = a.id JOIN k$i b ON e.dst = b.id)"""
+          .stripMargin
+      }.mkString(",")
+      ("""WITH pairs AS MATERIALIZED (
+        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+        |  FROM lineitem a JOIN lineitem b
+        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+        | e0 AS MATERIALIZED (SELECT src, dst FROM pairs
+        |  UNION ALL SELECT dst AS src, src AS dst FROM pairs),""".stripMargin
+        + rounds +
+        // peeling only removes edges, so e11 ⊆ e10 and equal COUNTs ⇒
+        // equal sets ⇒ round 11 was idempotent ⇒ e10 IS the fixpoint.
+        // The guard compares the LAST TWO unrolled rounds, so a
+        // dataset converging exactly at round 10 passes (round 11 is
+        // purely the idempotence witness; the emitted result stays
+        // e10). A dataset needing >10 peel rounds fails LOUDLY
+        // (error()) instead of surfacing as an opaque hash mismatch.
+        // The guard is a CASE in a 1-row CTE joined in, NOT an
+        // `= .. OR error(..)` predicate: DuckDB does not short-circuit
+        // OR in a decorrelated WHERE (measured — the OR form fired on
+        // converged data), while the CASE branch is evaluated lazily.
+        """, guard AS (SELECT CASE
+        |   WHEN (SELECT COUNT(*) FROM e10) = (SELECT COUNT(*) FROM e11)
+        |   THEN 1
+        |   ELSE error('g8 oracle: peel not converged in 10 rounds')
+        |  END AS ok)
+        | SELECT CAST(src AS BIGINT) AS part_id,
+        |  CAST(COUNT(*) AS BIGINT) AS core_deg
+        | FROM e10 JOIN guard ON guard.ok = 1
+        | GROUP BY src ORDER BY part_id""".stripMargin)
+        .replaceAll("\n", "")
+    })),
   )
 
   /** g5's 3-round label-propagation replay as a CTE block ending in
@@ -979,15 +1244,13 @@ object GraphQueries {
   private lazy val g5LabelCtes: String =
     s"$g5PairsCte,\n $g5LabelFromPairsCtes"
 
-  /** sf1 chain-at-a-time oracle plan for g10 (round 15): the one-WITH
-    * replay (pairs self-join + 3 LP rounds) exceeds DuckDB temp disk
-    * at sf1; materializing the pair build once and feeding the label
-    * rounds and the rollup from parquet bounds peak temp usage to one
-    * chain. Each entry is (name, sql); `__CHAIN_<name>__` placeholders
-    * are replaced with read_parquet refs by tools/sf1_chain_oracle.py;
-    * the last entry ("rollup") must hash-match the engine output. */
-  private[graft] def sf1ChainPlan: Map[String, Seq[(String, String)]] = Map(
-    "g10_modularity" -> Seq(
+  /** g10's sf1 chain plan ([[graft.QuerySpec.sf1Chains]]): the
+    * one-WITH replay (pairs self-join + 3 LP rounds) exceeds DuckDB
+    * temp disk at sf1; materializing the pair build once and feeding
+    * the label rounds and the rollup from parquet bounds peak temp
+    * usage to one chain. */
+  private def g10Sf1Chains: Seq[(String, String)] =
+    Seq(
       "pairs" -> s"WITH $g5PairsCte SELECT src, dst FROM pairs",
       "labels" -> (s"WITH pairs AS (SELECT src, dst FROM __CHAIN_pairs__)," +
         s" $g5LabelFromPairsCtes SELECT id, label FROM l3")
@@ -1009,255 +1272,6 @@ object GraphQueries {
         | SELECT m_edges, n_communities, intra_edges, sum_deg_sq,
         |  ROUND((4 * m_edges * intra_edges - sum_deg_sq)::DOUBLE
         |    / (4 * m_edges * m_edges), 6) AS modularity
-        | FROM mm, ag, ia""".stripMargin.replaceAll("\n", ""))))
+        | FROM mm, ag, ia""".stripMargin.replaceAll("\n", "")))
 
-  lazy val oracleSql: Map[String, String] = Map(
-    // g9: the 4 Bellman–Ford relaxation rounds unrolled as CTEs over
-    // the order-count-weighted symmetric edge list; integer costs, so
-    // distances are exact sums in both engines.
-    "g9_weighted_sssp" ->
-      """WITH op AS (SELECT DISTINCT a.l_orderkey AS ok,
-        |   a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |   ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        | wp AS (SELECT src, dst, COUNT(*) AS cnt FROM op
-        |  GROUP BY src, dst),
-        | we AS (SELECT src, dst, 1000000 // cnt AS w FROM wp
-        |  UNION ALL SELECT dst, src, 1000000 // cnt FROM wp),
-        | d0 AS (SELECT DISTINCT src AS id, 0 AS d FROM we
-        |  WHERE src % 1000 = 0),
-        | d1 AS (SELECT id, MIN(d) AS d FROM (
-        |   SELECT id, d FROM d0 UNION ALL
-        |   SELECT e.dst, p.d + e.w FROM d0 p JOIN we e ON e.src = p.id)
-        |  GROUP BY id),
-        | d2 AS (SELECT id, MIN(d) AS d FROM (
-        |   SELECT id, d FROM d1 UNION ALL
-        |   SELECT e.dst, p.d + e.w FROM d1 p JOIN we e ON e.src = p.id)
-        |  GROUP BY id),
-        | d3 AS (SELECT id, MIN(d) AS d FROM (
-        |   SELECT id, d FROM d2 UNION ALL
-        |   SELECT e.dst, p.d + e.w FROM d2 p JOIN we e ON e.src = p.id)
-        |  GROUP BY id),
-        | d4 AS (SELECT id, MIN(d) AS d FROM (
-        |   SELECT id, d FROM d3 UNION ALL
-        |   SELECT e.dst, p.d + e.w FROM d3 p JOIN we e ON e.src = p.id)
-        |  GROUP BY id)
-        | SELECT CAST(id AS BIGINT) AS part_id, CAST(d AS BIGINT) AS dist
-        | FROM d4 ORDER BY part_id""".stripMargin.replaceAll("\n", ""),
-    "g1_part_pagerank" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        | edges AS (
-        |  SELECT src, dst FROM pairs
-        |  UNION ALL SELECT dst AS src, src AS dst FROM pairs),
-        | deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-        | nn AS (SELECT COUNT(*) AS n FROM deg),
-        | r0 AS (SELECT src AS id, 1.0 / (SELECT n FROM nn) AS r FROM deg),
-        | r1 AS (SELECT e.dst AS id,
-        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
-        |   FROM edges e JOIN r0 r ON e.src = r.id JOIN deg ON deg.src = e.src
-        |   GROUP BY e.dst),
-        | r2 AS (SELECT e.dst AS id,
-        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
-        |   FROM edges e JOIN r1 r ON e.src = r.id JOIN deg ON deg.src = e.src
-        |   GROUP BY e.dst),
-        | r3 AS (SELECT e.dst AS id,
-        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
-        |   FROM edges e JOIN r2 r ON e.src = r.id JOIN deg ON deg.src = e.src
-        |   GROUP BY e.dst),
-        | r4 AS (SELECT e.dst AS id,
-        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
-        |   FROM edges e JOIN r3 r ON e.src = r.id JOIN deg ON deg.src = e.src
-        |   GROUP BY e.dst),
-        | r5 AS (SELECT e.dst AS id,
-        |    0.15 / (SELECT n FROM nn) + 0.85 * SUM(r.r / deg.d) AS r
-        |   FROM edges e JOIN r4 r ON e.src = r.id JOIN deg ON deg.src = e.src
-        |   GROUP BY e.dst)
-        | SELECT CAST(id AS BIGINT) AS part_id,
-        |   ROUND(r * (SELECT n FROM nn), 6) AS rank_scaled
-        | FROM r5 ORDER BY rank_scaled DESC, part_id
-        | LIMIT 100""".stripMargin.replaceAll("\n", ""),
-    "g2_triangle_count" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)
-        | SELECT
-        |  (SELECT COUNT(*) FROM
-        |    (SELECT src AS id FROM pairs UNION SELECT dst FROM pairs)) AS n_nodes,
-        |  (SELECT COUNT(*) FROM pairs) AS n_edges,
-        |  (SELECT COUNT(*) FROM pairs p1
-        |    JOIN pairs p2 ON p1.dst = p2.src
-        |    JOIN pairs p3 ON p3.src = p1.src AND p3.dst = p2.dst) AS n_triangles
-        |""".stripMargin.replaceAll("\n", ""),
-    "g3_bfs_hops" ->
-      """WITH RECURSIVE pairs AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        | edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-        | walk(id, hops) AS (
-        |  SELECT DISTINCT src AS id, 0 AS hops FROM edges WHERE src % 1000 = 0
-        |  UNION
-        |  SELECT e.dst, w.hops + 1 FROM walk w JOIN edges e ON e.src = w.id
-        |  WHERE w.hops < 3)
-        | SELECT CAST(id AS BIGINT) AS part_id, CAST(MIN(hops) AS BIGINT) AS hops
-        | FROM walk GROUP BY id ORDER BY part_id""".stripMargin.replaceAll("\n", ""),
-    "g4_adamic_adar" ->
-      """WITH pairs AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        | edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-        | deg AS (SELECT src AS id, COUNT(*) AS d FROM edges GROUP BY src),
-        | wedge AS (
-        |  SELECT e1.dst AS x, e2.dst AS y, e1.src AS z
-        |  FROM edges e1 JOIN edges e2 ON e1.src = e2.src AND e1.dst < e2.dst
-        |  WHERE e1.src % 16 = 0),
-        | aa AS (
-        |  SELECT x, y, ROUND(SUM(1.0 / LN(d)), 6) AS score
-        |  FROM wedge JOIN deg ON deg.id = wedge.z GROUP BY x, y),
-        | nonedge AS (
-        |  SELECT a.* FROM aa a LEFT JOIN pairs p ON p.src = a.x AND p.dst = a.y
-        |  WHERE p.src IS NULL)
-        | SELECT CAST(x AS BIGINT) AS src, CAST(y AS BIGINT) AS dst, score
-        | FROM nonedge ORDER BY score DESC, src, dst LIMIT 100""".stripMargin.replaceAll("\n", ""),
-    "g5_label_prop" ->
-      s"""WITH $g5LabelCtes
-        | SELECT CAST(label AS BIGINT) AS community,
-        |   COUNT(*) AS n_members
-        | FROM l3 GROUP BY 1 ORDER BY n_members DESC, community
-        | LIMIT 100""".stripMargin.replaceAll("\n", ""),
-    // g10: the SAME g5 label chain, folded into Newman–Girvan
-    // modularity via the integer identity
-    // Q = (4m·Σm_c − Σd_c²) / (4m²) — one division, no
-    // order-dependent float summation over communities.
-    "g10_modularity" ->
-      s"""WITH $g5LabelCtes,
-        | deg AS (SELECT src AS id, CAST(COUNT(*) AS BIGINT) AS d
-        |  FROM edges GROUP BY src),
-        | dc AS (SELECT l.label, CAST(SUM(deg.d) AS BIGINT) AS dsum
-        |  FROM l3 l JOIN deg USING (id) GROUP BY l.label),
-        | ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_communities,
-        |   CAST(SUM(dsum * dsum) AS BIGINT) AS sum_deg_sq FROM dc),
-        | mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m_edges FROM pairs),
-        | ia AS (SELECT CAST(COUNT(*) AS BIGINT) AS intra_edges
-        |  FROM pairs p JOIN l3 a ON p.src = a.id
-        |   JOIN l3 b ON p.dst = b.id WHERE a.label = b.label)
-        | SELECT m_edges, n_communities, intra_edges, sum_deg_sq,
-        |  ROUND((4 * m_edges * intra_edges - sum_deg_sq)::DOUBLE
-        |    / (4 * m_edges * m_edges), 6) AS modularity
-        | FROM mm, ag, ia""".stripMargin.replaceAll("\n", ""),
-    "g6_personalized_pagerank" -> {
-      // unrolled like g1, with the teleport on the seed vector and the
-      // step arithmetic mirrored term-for-term against
-      // Graph.personalizedPageRank: (1.0 - 0.85)·p and rank·(1.0/deg)
-      // reproduce Spark's exact float ops (not the algebraic
-      // equivalents 0.15·p and rank/deg)
-      val steps = (1 to 5).map { i =>
-        s""" r$i AS (SELECT pv.id,
-           |   (1.0 - 0.85) * pv.p + 0.85 * COALESCE(m.mass, 0.0) AS r
-           |  FROM pv LEFT JOIN (
-           |   SELECT e.dst AS id, SUM(r.r * (1.0 / deg.d)) AS mass
-           |   FROM edges e JOIN r${i - 1} r ON e.src = r.id
-           |    JOIN deg ON deg.src = e.src
-           |   GROUP BY e.dst) m ON m.id = pv.id)""".stripMargin
-      }.mkString(",")
-      ("""WITH pairs AS (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        | edges AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-        | deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-        | nodes AS (SELECT DISTINCT src AS id FROM edges),
-        | nn AS (SELECT COUNT(*) AS n FROM nodes),
-        | sd AS (SELECT id FROM nodes WHERE id % 1000 = 0),
-        | ns AS (SELECT COUNT(*) AS s FROM sd),
-        | pv AS (SELECT n.id,
-        |   CASE WHEN s.id IS NULL THEN 0.0
-        |    ELSE 1.0 / (SELECT s FROM ns) END AS p
-        |  FROM nodes n LEFT JOIN sd s ON n.id = s.id),
-        | r0 AS (SELECT id, p AS r FROM pv),""".stripMargin
-        + steps +
-        """ SELECT CAST(id AS BIGINT) AS part_id,
-        |   ROUND(r * (SELECT n FROM nn), 6) AS rank_scaled
-        | FROM r5 ORDER BY rank_scaled DESC, part_id
-        | LIMIT 100""".stripMargin).replaceAll("\n", "")
-    },
-    // g7: HITS unrolled as 6 L1-normalized half-step CTEs — the same
-    // +,/ float chain the engine runs (raw sum, then divide by the
-    // 1-row normalizer), mirrored term-for-term.
-    "g7_supplier_hits" -> {
-      val steps = (1 to 3).map { i =>
-        s""" a${i}r AS (SELECT e.dst AS id, SUM(h.hub) AS a
-           |  FROM edges e JOIN h${i - 1} h ON e.src = h.id GROUP BY e.dst),
-           | a$i AS (SELECT id, a / (SELECT SUM(a) FROM a${i}r) AS auth
-           |  FROM a${i}r),
-           | h${i}r AS (SELECT e.src AS id, SUM(a.auth) AS h
-           |  FROM edges e JOIN a$i a ON e.dst = a.id GROUP BY e.src),
-           | h$i AS (SELECT id, h / (SELECT SUM(h) FROM h${i}r) AS hub
-           |  FROM h${i}r)""".stripMargin
-      }.mkString(",")
-      ("""WITH edges AS (
-        |  SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        | h0 AS (SELECT DISTINCT src AS id, 1.0 AS hub FROM edges),""".stripMargin
-        + steps +
-        """ SELECT CAST(id AS BIGINT) AS supp_key,
-        |  ROUND(auth * (SELECT COUNT(*) FROM a3), 6) AS auth_scaled
-        | FROM a3 ORDER BY auth_scaled DESC, supp_key
-        | LIMIT 50""".stripMargin).replaceAll("\n", "")
-    },
-    // g8: peeling unrolled 10 rounds — each round recomputes degrees
-    // on the surviving edge list and keeps ≥ 70-degree nodes. k = 70
-    // is chosen NON-VACUOUS at the gate SF (sf0.01: 1996-node core;
-    // sf0.1: 19674; sf0.001's fixpoint is empty — probed), and the
-    // unroll depth covers the measured worst convergence (8 rounds at
-    // sf0.001, ≤4 at the larger SFs) with margin; rounds past the
-    // fixpoint are idempotent.
-    "g8_kcore" -> {
-      // every e_i is read THREE times by round i+1 (k_i twice + the
-      // edge filter) — without MATERIALIZED, DuckDB may inline the
-      // reference chain and re-evaluate the pair build 3^6 times
-      // (observed: >78 GB of spill at sf0.1 before running out of
-      // disk). Materializing each round makes the unroll linear.
-      val rounds = (1 to 11).map { i =>
-        s""" k$i AS MATERIALIZED (SELECT src AS id FROM e${i - 1}
-           |  GROUP BY src HAVING COUNT(*) >= 70),
-           | e$i AS MATERIALIZED (SELECT e.src, e.dst FROM e${i - 1} e
-           |  JOIN k$i a ON e.src = a.id JOIN k$i b ON e.dst = b.id)"""
-          .stripMargin
-      }.mkString(",")
-      ("""WITH pairs AS MATERIALIZED (
-        |  SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-        |  FROM lineitem a JOIN lineitem b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-        | e0 AS MATERIALIZED (SELECT src, dst FROM pairs
-        |  UNION ALL SELECT dst AS src, src AS dst FROM pairs),""".stripMargin
-        + rounds +
-        // peeling only removes edges, so e11 ⊆ e10 and equal COUNTs ⇒
-        // equal sets ⇒ round 11 was idempotent ⇒ e10 IS the fixpoint.
-        // The guard compares the LAST TWO unrolled rounds, so a
-        // dataset converging exactly at round 10 passes (round 11 is
-        // purely the idempotence witness; the emitted result stays
-        // e10). A dataset needing >10 peel rounds fails LOUDLY
-        // (error()) instead of surfacing as an opaque hash mismatch.
-        // The guard is a CASE in a 1-row CTE joined in, NOT an
-        // `= .. OR error(..)` predicate: DuckDB does not short-circuit
-        // OR in a decorrelated WHERE (measured — the OR form fired on
-        // converged data), while the CASE branch is evaluated lazily.
-        """, guard AS (SELECT CASE
-        |   WHEN (SELECT COUNT(*) FROM e10) = (SELECT COUNT(*) FROM e11)
-        |   THEN 1
-        |   ELSE error('g8 oracle: peel not converged in 10 rounds')
-        |  END AS ok)
-        | SELECT CAST(src AS BIGINT) AS part_id,
-        |  CAST(COUNT(*) AS BIGINT) AS core_deg
-        | FROM e10 JOIN guard ON guard.ok = 1
-        | GROUP BY src ORDER BY part_id""".stripMargin)
-        .replaceAll("\n", "")
-    }
-  )
 }

@@ -387,13 +387,6 @@ object Similarity {
       .select(col("query_id"), col(idCol).as("neighbor_id"), col("similarity"))
   }
 
-  /** Materialize a corpus with its LSH bucket — written
-    * `partitionBy("lsh_bucket")` this gives partition-pruned ANN. */
-  def withLshBucket(
-      corpus: DataFrame, embCol: String, bits: Int = 12, dim: Int,
-      seed: Long = 42L): DataFrame =
-    corpus.withColumn("lsh_bucket", lshBucket(col(embCol), hyperplanes(bits, dim, seed)))
-
   // ---------------------------------------------------------------
   // Binary (sign-bit) quantization — the 64×-compression rung of the
   // storage ladder (float32 → matryoshka → int8 → PQ → binary): one

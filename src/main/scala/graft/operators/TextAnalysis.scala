@@ -219,11 +219,6 @@ object TextAnalysis {
   def typeTokenRatio(text: Column): Column =
     distinctTokenCount(text).cast("double") / tokenCount(text)
 
-  /** Mean token length; for single-space-joined text this is
-    * (chars - (n-1)) / n — pure arithmetic, identical in any engine. */
-  def avgTokenLength(text: Column): Column =
-    (length(text) - (tokenCount(text) - 1)).cast("double") / tokenCount(text)
-
   val EnglishStopwords: Seq[String] = Seq(
     "the", "and", "of", "to", "in", "is", "that", "it", "was", "for",
     "a", "an", "on", "with", "as", "at", "by", "be", "this", "are")

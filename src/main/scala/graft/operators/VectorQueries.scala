@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QuerySpec, Tables}
+import graft.QuerySpec.sql
 import graft.functions.{Embedding, VectorFunctions}
 import graft.store.AnnIndexes
 
@@ -411,27 +412,36 @@ object VectorQueries {
     s"SELECT vec_id, $cols FROM embeddings ORDER BY vec_id"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The IVF/PQ top-k and recall oracles (v7, v11, v12, v21–v23) and
+    * the PCA one (v24) inline a trained model: each takes it from the
+    * same build-once index or fingerprint-keyed fit the query reads,
+    * so the SQL is a function of the corpus alone. The LSH ones (v6,
+    * v8, v20) are constants: their hyperplanes are seed-derived. */
+  val specs: Seq[QuerySpec] = Seq(
     // V1: the reference's core retrieval shape — exact cosine top-k
     // with threshold (R1+R3+R4+R5+R6+R7) → TakeOrderedAndProject.
-    "v1_cosine_topk" -> ((s, dir) => {
+    QuerySpec("v1_cosine_topk", (s, dir) => {
       Similarity.topK(emb(s, dir), "embedding", probeVec,
           k = 20, threshold = -1.0, tieBreak = Seq("vec_id"))
         .select("vec_id", "label", "similarity")
-    }),
+    }, sql(
+      s"""SELECT vec_id, label, ${simSql("embedding", probeLit)} AS similarity
+         | FROM embeddings ORDER BY similarity DESC, vec_id LIMIT 20"""
+        .stripMargin.replaceAll("\n", "")), headline = true),
 
     // V2: threshold semantics alone (R4) — exact row count ≥ t.
-    "v2_threshold_count" -> ((s, dir) => {
+    QuerySpec("v2_threshold_count", (s, dir) => {
       emb(s, dir)
         .withColumn("similarity", round(
           VectorFunctions.cosine_similarity(col("embedding"), typedLit(probeVec)), 6))
         .filter(col("similarity") >= 0.1)
         .agg(count(lit(1)).as("cnt"))
-    }),
+    }, sql(
+      s"SELECT COUNT(*) AS cnt FROM embeddings WHERE ${simSql("embedding", probeLit)} >= 0.1")),
 
     // V3: item-to-item neighbors — query vector drawn from the corpus
     // itself (broadcast 1-row join; no driver collect in the plan).
-    "v3_self_neighbors" -> ((s, dir) => {
+    QuerySpec("v3_self_neighbors", (s, dir) => {
       val e = emb(s, dir)
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>").as("q_emb"))
@@ -442,7 +452,12 @@ object VectorQueries {
         .select("vec_id", "similarity")
         .orderBy(desc("similarity"), asc("vec_id"))
         .limit(10)
-    }),
+    }, sql(
+      s"""SELECT vec_id, ${simSql("embedding",
+          "(SELECT embedding FROM embeddings WHERE vec_id = 0)")} AS similarity
+         | FROM embeddings WHERE vec_id <> 0
+         | ORDER BY similarity DESC, vec_id LIMIT 10"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V4: embedding-cosine near-duplicate pairs (the dedup-suite scale
     // shape): self-join restricted to the upper triangle. Exact
@@ -453,7 +468,7 @@ object VectorQueries {
     // Norms are hoisted out of the join (computed N times, not N²):
     // dot/(‖a‖·‖b‖) with precomputed sqrt norms is bit-identical to
     // the fused cosine expression, at a third of the pairwise flops.
-    "v4_neardup_pairs" -> ((s, dir) => {
+    QuerySpec("v4_neardup_pairs", (s, dir) => {
       val e = emb(s, dir).filter(col("vec_id") < 1000).select(
         col("vec_id"), col("embedding"),
         VectorFunctions.l2_norm(col("embedding")).as("nrm"))
@@ -469,33 +484,39 @@ object VectorQueries {
         .filter(col("similarity") >= 0.3)
         .select("a_id", "b_id", "similarity")
         .orderBy("a_id", "b_id")
-    }),
+    }, sql(
+      s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+         | ${simSql("a.embedding", "b.embedding")} AS similarity
+         | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+         | WHERE a.vec_id < 1000 AND b.vec_id < 1000
+         |   AND ${simSql("a.embedding", "b.embedding")} >= 0.3
+         | ORDER BY a_id, b_id""".stripMargin.replaceAll("\n", ""))),
 
     // V6: approximate top-k against the materialized multi-table LSH
     // index — every table prunes parquet partitions to its probe
     // buckets, so the scan reads a small fraction of the files.
     // HASH-CHECKED (round 7): DuckDB re-runs the whole search from
     // inlined hyperplanes (see lshTopKSql); pruning spec'd in ScalaTest.
-    "v6_lsh_topk" -> ((s, dir) => {
+    QuerySpec("v6_lsh_topk", (s, dir) => {
       Similarity.lshTopKFromIndex(
           opened(s, lshIndex(s, dir)),
           "vec_id", "embedding",
           probeVec, k = 10, bits = LshBits, tables = LshTables,
           probes = 1, seed = 42L, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
-    }),
+    }, sql(lshTopKSql), headline = true),
 
     // V7: approximate top-k against the materialized IVF index — the
     // codebook is trained once at index build; the query ranks cells
     // driver-side and scans only the nprobe matching partitions.
     // HASH-CHECKED (round 7): DuckDB re-runs assignment + search from
     // the inlined codebook (ivfTopKSql); pruning spec'd in ScalaTest.
-    "v7_ivf_topk" -> ((s, dir) => {
+    QuerySpec("v7_ivf_topk", (s, dir) => {
       val (path, model) = ivfIndex(s, dir)
       Ivf.search(opened(s, path), "embedding",
           probeVec, model, k = 10, nprobe = 4, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
-    }),
+    }, (s, dir) => Some(ivfTopKSql(ivfIndex(s, dir)._2)), headline = true),
 
     // V8: many-query ANN against the materialized LSH index — the
     // distributed batch-retrieval shape (broadcast probe-bucket join,
@@ -503,7 +524,7 @@ object VectorQueries {
     // recomputes every query's AND every corpus row's per-table bucket
     // from the inlined hyperplanes and re-runs the per-query rank/cut
     // (batchAnnSql); recall vs exact v5 stays spec'd.
-    "v8_batch_ann" -> ((s, dir) => {
+    QuerySpec("v8_batch_ann", (s, dir) => {
       val queries = emb(s, dir).filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
       Similarity.lshTopKBatchFromIndex(
@@ -512,7 +533,7 @@ object VectorQueries {
           "vec_id", "embedding", k = 5, dim = Dim,
           bits = LshBits, tables = LshTables, seed = 42L)
         .orderBy(asc("query_id"), desc("similarity"), asc("neighbor_id"))
-    }),
+    }, sql(batchAnnSql), headline = true),
 
     // V11: PQ ANN — ADC lookup-table scan over the 8-int codes (16×
     // smaller than the float vectors) fused into TakeOrderedAndProject,
@@ -520,35 +541,38 @@ object VectorQueries {
     // (round 7): DuckDB re-encodes every row from the inlined
     // codebooks, ADC-ranks and re-ranks (pqTopKSql); recall vs exact
     // v9 stays asserted in ScalaTest.
-    "v11_pq_topk" -> ((s, dir) => {
+    QuerySpec("v11_pq_topk", (s, dir) => {
       val (path, model) = pqIndex(s, dir)
       Pq.search(opened(s, path),
           "vec_id", "embedding", probeVec, model, topK = 10, refine = 4)
         .select("vec_id", "l2_dist")
-    }),
+    }, (s, dir) => Some(pqTopKSql(pqIndex(s, dir)._2)), headline = true),
 
     // V12: composed IVFPQ — partition pruning to nprobe cells (I/O)
     // times ADC lookup scoring within them (flops), the FAISS
     // production layout. HASH-CHECKED (round 7): coarse assignment +
     // PQ re-encode + ADC + exact re-rank all reproduced in SQL from
     // inlined centroids/codebooks (ivfPqTopKSql); file-pruning spec'd.
-    "v12_ivfpq_topk" -> ((s, dir) => {
+    QuerySpec("v12_ivfpq_topk", (s, dir) => {
       val (path, (coarse, fine)) = ivfPqIndex(s, dir)
       Pq.searchIvfPq(opened(s, path),
           "vec_id", "embedding", probeVec, coarse, fine, topK = 10, nprobe = 4)
         .select("vec_id", "l2_dist")
-    }),
+    }, (s, dir) => {
+      val (coarse, fine) = ivfPqIndex(s, dir)._2
+      Some(ivfPqTopKSql(coarse, fine))
+    }, headline = true),
 
     // V20–V23: hash-checked recall@10 per ANN family — each joins the
     // family's index search against the exact top-10 (the reference's
     // brute-force contract, src/lib/database.py:299-309) and outputs
     // (hits, recall). The DuckDB oracle RE-RUNS the approximate search
     // itself: the LSH hyperplanes are seed-derived and the IVF/PQ
-    // codebooks are inlined as literals (corpusOracles takes them from
+    // codebooks are inlined as literals (their oracles take them from
     // the same build-once index the query reads), so bucket assignment,
     // cell argmax and ADC scoring are all reproduced independently —
     // ANN quality is a hash-checked invariant, not a spec-only bound.
-    "v20_lsh_recall" -> ((s, dir) => {
+    QuerySpec("v20_lsh_recall", (s, dir) => {
       recallVs(
         Similarity.lshTopKFromIndex(
           opened(s, lshIndex(s, dir)),
@@ -556,32 +580,35 @@ object VectorQueries {
           tables = LshTables,
           probes = 1, seed = 42L, tieBreak = Seq("vec_id")),
         exactCosineTopK(s, dir))
-    }),
+    }, sql(lshRecallSql)),
 
-    "v21_ivf_recall" -> ((s, dir) => {
+    QuerySpec("v21_ivf_recall", (s, dir) => {
       val (path, model) = ivfIndex(s, dir)
       recallVs(
         Ivf.search(opened(s, path),
           "embedding", probeVec, model, k = RecallK, nprobe = RecallNprobe,
           tieBreak = Seq("vec_id")),
         exactCosineTopK(s, dir))
-    }),
+    }, (s, dir) => Some(ivfRecallSql(ivfIndex(s, dir)._2))),
 
-    "v22_pq_recall" -> ((s, dir) => {
+    QuerySpec("v22_pq_recall", (s, dir) => {
       val (path, model) = pqIndex(s, dir)
       recallVs(
         Pq.search(opened(s, path),
           "vec_id", "embedding", probeVec, model, topK = RecallK, refine = 4),
         exactL2TopK(s, dir))
-    }),
+    }, (s, dir) => Some(pqRecallSql(pqIndex(s, dir)._2))),
 
-    "v23_ivfpq_recall" -> ((s, dir) => {
+    QuerySpec("v23_ivfpq_recall", (s, dir) => {
       val (path, (coarse, fine)) = ivfPqIndex(s, dir)
       recallVs(
         Pq.searchIvfPq(opened(s, path),
           "vec_id", "embedding", probeVec, coarse, fine, topK = RecallK,
           nprobe = RecallNprobe),
         exactL2TopK(s, dir))
+    }, (s, dir) => {
+      val (coarse, fine) = ivfPqIndex(s, dir)._2
+      Some(ivfPqRecallSql(coarse, fine))
     }),
 
     // V25: binary (sign-bit) quantized search — the 64×-compression
@@ -590,11 +617,11 @@ object VectorQueries {
     // candidate ranking (xor + popcount), exact re-rank of the
     // bounded pool. HASH-CHECKED end-to-end (binaryTopKSql — fully
     // static, nothing trained).
-    "v25_binary_topk" -> ((s, dir) => {
+    QuerySpec("v25_binary_topk", (s, dir) => {
       Similarity.binaryTopK(emb(s, dir), "embedding", probeVec,
           k = 20, pool = 100, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
-    }),
+    }, sql(binaryTopKSql), headline = true),
 
     // V26: MMR-diversified retrieval — the redundancy-penalized
     // re-rank a RAG pipeline applies so its k chunks don't all say
@@ -602,42 +629,57 @@ object VectorQueries {
     // pairwise sims; O(k·pool) greedy on collected BOUNDED rows.
     // HASH-CHECKED including the un-rounded mmr scores (mmrRerankSql
     // re-runs the greedy as unrolled CTEs).
-    "v26_mmr_rerank" -> ((s, dir) => {
+    QuerySpec("v26_mmr_rerank", (s, dir) => {
       Similarity.mmrRerank(emb(s, dir), "vec_id", "embedding", probeVec,
         k = 10, poolSize = 50)
-    }),
+    }, sql(mmrRerankSql)),
 
     // V9: L2-distance top-k — pgvector's `<->` operator family (the
     // reference exposes cosine only; pgvector users also rank by
     // Euclidean and inner product, so the engine covers all three).
-    "v9_l2_topk" -> ((s, dir) => {
+    QuerySpec("v9_l2_topk", (s, dir) => {
       emb(s, dir)
         .withColumn("dist", round(
           VectorFunctions.l2_distance(col("embedding"), typedLit(probeVec)), 6))
         .select("vec_id", "dist")
         .orderBy(asc("dist"), asc("vec_id"))
         .limit(20)
-    }),
+    }, sql(
+      s"""SELECT vec_id,
+         | ROUND(list_distance(CAST(embedding AS DOUBLE[]), CAST($probeLit AS DOUBLE[])), 6) AS dist
+         | FROM embeddings ORDER BY dist, vec_id LIMIT 20"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V10: inner-product top-k — pgvector's `<#>`.
-    "v10_ip_topk" -> ((s, dir) => {
+    QuerySpec("v10_ip_topk", (s, dir) => {
       emb(s, dir)
         .withColumn("ip", round(
           VectorFunctions.dot_product(col("embedding"), typedLit(probeVec)), 6))
         .select("vec_id", "ip")
         .orderBy(desc("ip"), asc("vec_id"))
         .limit(20)
-    }),
+    }, sql(
+      s"""SELECT vec_id,
+         | ROUND(list_inner_product(CAST(embedding AS DOUBLE[]), CAST($probeLit AS DOUBLE[])), 6) AS ip
+         | FROM embeddings ORDER BY ip DESC, vec_id LIMIT 20"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V5: many-query exact top-k via the bounded-heap Aggregator
     // (map-side partial top-k; the scalable per-key form).
-    "v5_cross_topk" -> ((s, dir) => {
+    QuerySpec("v5_cross_topk", (s, dir) => {
       val e = emb(s, dir)
       val queries = e.filter(col("vec_id") < 5)
       Similarity.crossTopK(
           queries, "vec_id", "embedding", e, "vec_id", "embedding", k = 5)
         .orderBy(asc("query_id"), desc("similarity"), asc("neighbor_id"))
-    }),
+    }, sql(
+      s"""SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         | ${simSql("c.embedding", "q.embedding")} AS similarity
+         | FROM embeddings q JOIN embeddings c ON q.vec_id < 5
+         | QUALIFY row_number() OVER (PARTITION BY q.vec_id
+         |   ORDER BY ${simSql("c.embedding", "q.embedding")} DESC, c.vec_id) <= 5
+         | ORDER BY query_id, similarity DESC, neighbor_id"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V16: int8 scalar-quantized search — per-vector symmetric
     // quantization (scale = max|x|/127, codes = round(x/scale)) and
@@ -653,23 +695,34 @@ object VectorQueries {
     // filter (plan-pinned in PlanShapeSpec), so the cosine kernel only
     // touches surviving row groups; at scale a label-partitioned store
     // turns the same predicate into partition pruning.
-    "v19_filtered_topk" -> ((s, dir) => {
+    QuerySpec("v19_filtered_topk", (s, dir) => {
       Similarity.topK(
           emb(s, dir).filter(col("label").isin(1, 3, 5)),
           "embedding", probeVec, k = 20, threshold = -1.0,
           tieBreak = Seq("vec_id"))
         .select("vec_id", "label", "similarity")
-    }),
+    }, sql(
+      s"""SELECT vec_id, label, ${simSql("embedding", probeLit)} AS similarity
+         | FROM embeddings WHERE label IN (1, 3, 5)
+         | ORDER BY similarity DESC, vec_id LIMIT 20"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V18: matryoshka two-stage search — coarse top-100 by cosine over
     // the first 16 dims (4× less arithmetic/IO per row), exact 64-dim
     // re-rank of the pool to top-20. Both stages bounded top-k; the
     // storage ladder's cheap first rung beside int8 (v16) and PQ (v11).
-    "v18_matryoshka_topk" -> ((s, dir) => {
+    QuerySpec("v18_matryoshka_topk", (s, dir) => {
       Similarity.matryoshkaTopK(emb(s, dir), "embedding", probeVec,
           k = 20, prefixDim = 16, rerank = 100, tieBreak = Seq("vec_id"))
         .select("vec_id", "similarity")
-    }),
+    }, sql(
+      s"""WITH coarse AS (SELECT vec_id, embedding,
+         |  ROUND(list_cosine_similarity(CAST(embedding[1:16] AS DOUBLE[]),
+         |    CAST($probePrefixLit AS DOUBLE[])), 6) AS csim
+         | FROM embeddings ORDER BY csim DESC, vec_id LIMIT 100)
+         | SELECT vec_id, ${simSql("embedding", probeLit)} AS similarity
+         | FROM coarse ORDER BY similarity DESC, vec_id LIMIT 20"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V17: k-NN label classification — predict each "unlabeled" query
     // vector's label by majority vote of its 5 nearest labeled train
@@ -679,15 +732,25 @@ object VectorQueries {
     // product); the vote is two tiny keyed aggs over 5·|queries| rows.
     // Ties: neighbor ties break (similarity desc, vec_id asc); vote
     // ties break to the smaller label — all deterministic.
-    "v17_knn_classify" -> ((s, dir) => {
+    QuerySpec("v17_knn_classify", (s, dir) => {
       val e = emb(s, dir)
       Similarity.knnClassify(
           e.filter(col("vec_id") < 50), e.filter(col("vec_id") >= 50),
           "vec_id", "embedding", "label", k = 5)
         .orderBy("vec_id")
-    }),
+    }, sql(
+      s"""WITH nn AS (SELECT q.vec_id AS qid, c.label
+         |  FROM embeddings q JOIN embeddings c
+         |   ON q.vec_id < 50 AND c.vec_id >= 50
+         |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
+         |   ORDER BY ${simSql("c.embedding", "q.embedding")} DESC, c.vec_id) <= 5),
+         | v AS (SELECT qid, label, COUNT(*) AS votes FROM nn GROUP BY 1, 2)
+         | SELECT qid AS vec_id, CAST(label AS INTEGER) AS predicted FROM v
+         | QUALIFY row_number() OVER (PARTITION BY qid
+         |  ORDER BY votes DESC, label) = 1
+         | ORDER BY vec_id""".stripMargin.replaceAll("\n", ""))),
 
-    "v16_int8_topk" -> ((s, dir) => {
+    QuerySpec("v16_int8_topk", (s, dir) => {
       val embD = col("embedding").cast("array<double>")
       emb(s, dir)
         .withColumn("scale",
@@ -701,7 +764,18 @@ object VectorQueries {
         .select("vec_id", "similarity")
         .orderBy(desc("similarity"), asc("vec_id"))
         .limit(20)
-    }),
+    }, sql(
+      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
+         |   FROM embeddings),
+         | s AS (SELECT vec_id, emb,
+         |   list_max(list_transform(emb, x -> abs(x))) / 127 AS scale FROM e),
+         | d AS (SELECT vec_id, CASE WHEN scale = 0 THEN emb
+         |   ELSE list_transform(emb, x -> floor(x / scale + 0.5) * scale)
+         |   END AS dq FROM s)
+         | SELECT vec_id, ROUND(list_cosine_similarity(dq,
+         |   CAST($probeLit AS DOUBLE[])), 6) AS similarity
+         | FROM d ORDER BY similarity DESC, vec_id LIMIT 20"""
+        .stripMargin.replaceAll("\n", ""))),
 
     // V27: storage-ladder distortion audit — per quantization rung,
     // the corpus-average cosine between each vector and its
@@ -714,7 +788,12 @@ object VectorQueries {
     // transform + codegen'd cosine inside the scan projection)
     // followed by a 3-group aggregate. Per-row cosines mirror
     // term-for-term in the oracle; the averages round to 6.
-    "v27_distortion_ladder" -> ((s, dir) => {
+    // zero-norm guards mirror graft's CosineSimilarity contract
+    // (cos := 0.0 when either side has zero norm) — DuckDB's
+    // list_cosine_similarity would yield NaN there. Binary/int8
+    // reconstructions are zero only when e itself is; the half
+    // prefix can be zero independently.
+    QuerySpec("v27_distortion_ladder", (s, dir) => {
       val embD = col("embedding").cast("array<double>")
       def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
         VectorFunctions.cosine_similarity(a, b)
@@ -738,158 +817,7 @@ object VectorQueries {
         .agg(round(avg(col("r.c")), 6).as("avg_cos"),
           count(lit(1)).as("n_vecs"))
         .orderBy("rung")
-    }),
-
-    // V15: embedding drift — per-label L2 distance between the class
-    // centroids of two deterministic halves of the corpus (the
-    // batch-over-batch distribution-shift monitor an embedding
-    // pipeline runs after every re-embed). Two VectorMean aggregations
-    // (fixed map-side buffers), a labels-sized join, and an ordered
-    // zip_with fold for the distance — the corpus shuffles only
-    // centroid buffers.
-    "v15_centroid_drift" -> ((s, dir) => {
-      val mean = graft.functions.VectorAggregates.meanVector(Dim)
-      val e = emb(s, dir)
-      val ca = e.filter(pmod(col("vec_id"), lit(2)) === 0)
-        .groupBy("label").agg(mean(col("embedding")).as("ca"))
-      val cb = e.filter(pmod(col("vec_id"), lit(2)) === 1)
-        .groupBy("label").agg(mean(col("embedding")).as("cb"))
-      ca.join(cb, "label")
-        .select(col("label"), round(sqrt(aggregate(
-            zip_with(col("ca"), col("cb"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, v) => acc + v)), 6).as("drift"))
-        .orderBy("label")
-    }),
-
-    // V14: hard-negative mining — for each query vector, the top
-    // near-misses in a similarity band (similar enough to confuse,
-    // below the positive bar): the contrastive-training sampler for
-    // retrieval/embedding models. Scale shape: the query set
-    // broadcasts (it is small by construction), the corpus is scanned
-    // once, the band filter cuts candidates in the codegen stage, and
-    // the per-query rank<=k compiles to WindowGroupLimit — so each
-    // partition forwards at most k rows per query.
-    "v14_hard_negatives" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
-      e.crossJoin(broadcast(q))
-        .withColumn("sim", round(
-          VectorFunctions.cosine_similarity(col("embedding"), col("q_emb")), 6))
-        .filter(col("sim") >= 0.1 && col("sim") < 0.5 &&
-          col("vec_id") =!= col("query_id"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 8)
-        .select("query_id", "vec_id", "sim")
-        .orderBy(asc("query_id"), desc("sim"), asc("vec_id"))
-    }),
-
-    // V13: per-label mean embedding (class centroids) via the
-    // fixed-buffer VectorMean Aggregator — partial elementwise sums
-    // combine map-side, so the shuffle carries one (dim doubles,
-    // count) buffer per label per partition, NOT the corpus ×dim
-    // explode the naive posexplode+groupBy(label, pos) form would
-    // shuffle. The final posexplode runs on the tiny aggregated
-    // result only (labels × dim rows) to give the oracle a flat
-    // comparable shape.
-    "v13_label_centroids" -> ((s, dir) => {
-      val mean = graft.functions.VectorAggregates.meanVector(Dim)
-      emb(s, dir)
-        .groupBy("label")
-        .agg(mean(col("embedding")).as("centroid"))
-        .select(col("label"), posexplode(col("centroid")))
-        .select(col("label"), (col("pos") + 1).cast("long").as("i"),
-          round(col("col"), 6).as("c"))
-        .orderBy("label", "i")
-    }),
-
-    // V24: PCA projection — fit top-4 principal components in ONE
-    // moment-aggregation pass (fixed dim·(dim+3)/2-double partials
-    // combine map-side; the eigensolve is driver-side on the dim×dim
-    // covariance), then project every vector with broadcast centered
-    // dot products: pure map-side codegen, zero shuffles over the
-    // corpus. The oracle re-applies the trained projection from
-    // inlined constants, so the fit→transform arithmetic is
-    // hash-checked end-to-end (see pcaOracle).
-    "v24_pca_project" -> ((s, dir) => {
-      val m = pcaModel(s, dir)
-      Pca.project(emb(s, dir).select("vec_id", "embedding"), "embedding", m)
-        .drop("embedding")
-        .orderBy("vec_id")
-    }),
-  )
-
-  /** Oracles that inline a trained model: the IVF/PQ codebooks (v7,
-    * v11, v12 top-k; v21–v23 recall) and the PCA projection (v24). Each
-    * takes the model from the same build-once index or
-    * fingerprint-keyed fit the query reads, so the SQL is a function of
-    * the corpus alone. */
-  val corpusOracles: Map[String, (SparkSession, String) => Option[String]] = Map(
-    "v7_ivf_topk" -> ((s, dir) => Some(ivfTopKSql(ivfIndex(s, dir)._2))),
-    "v11_pq_topk" -> ((s, dir) => Some(pqTopKSql(pqIndex(s, dir)._2))),
-    "v12_ivfpq_topk" -> ((s, dir) => {
-      val (coarse, fine) = ivfPqIndex(s, dir)._2
-      Some(ivfPqTopKSql(coarse, fine))
-    }),
-    "v21_ivf_recall" -> ((s, dir) => Some(ivfRecallSql(ivfIndex(s, dir)._2))),
-    "v22_pq_recall" -> ((s, dir) => Some(pqRecallSql(pqIndex(s, dir)._2))),
-    "v23_ivfpq_recall" -> ((s, dir) => {
-      val (coarse, fine) = ivfPqIndex(s, dir)._2
-      Some(ivfPqRecallSql(coarse, fine))
-    }),
-    "v24_pca_project" -> ((s, dir) => Some(pcaSql(pcaModel(s, dir)))))
-
-  /** v6/v8/v20 are static too: their LSH hyperplanes are seed-derived. */
-  lazy val oracleSql: Map[String, String] = Map(
-    "v6_lsh_topk" -> lshTopKSql,
-    "v8_batch_ann" -> batchAnnSql,
-    "v20_lsh_recall" -> lshRecallSql,
-    "v25_binary_topk" -> binaryTopKSql,
-    "v26_mmr_rerank" -> mmrRerankSql,
-    "v19_filtered_topk" ->
-      s"""SELECT vec_id, label, ${simSql("embedding", probeLit)} AS similarity
-         | FROM embeddings WHERE label IN (1, 3, 5)
-         | ORDER BY similarity DESC, vec_id LIMIT 20"""
-        .stripMargin.replaceAll("\n", ""),
-    "v18_matryoshka_topk" ->
-      s"""WITH coarse AS (SELECT vec_id, embedding,
-         |  ROUND(list_cosine_similarity(CAST(embedding[1:16] AS DOUBLE[]),
-         |    CAST($probePrefixLit AS DOUBLE[])), 6) AS csim
-         | FROM embeddings ORDER BY csim DESC, vec_id LIMIT 100)
-         | SELECT vec_id, ${simSql("embedding", probeLit)} AS similarity
-         | FROM coarse ORDER BY similarity DESC, vec_id LIMIT 20"""
-        .stripMargin.replaceAll("\n", ""),
-    "v17_knn_classify" ->
-      s"""WITH nn AS (SELECT q.vec_id AS qid, c.label
-         |  FROM embeddings q JOIN embeddings c
-         |   ON q.vec_id < 50 AND c.vec_id >= 50
-         |  QUALIFY row_number() OVER (PARTITION BY q.vec_id
-         |   ORDER BY ${simSql("c.embedding", "q.embedding")} DESC, c.vec_id) <= 5),
-         | v AS (SELECT qid, label, COUNT(*) AS votes FROM nn GROUP BY 1, 2)
-         | SELECT qid AS vec_id, CAST(label AS INTEGER) AS predicted FROM v
-         | QUALIFY row_number() OVER (PARTITION BY qid
-         |  ORDER BY votes DESC, label) = 1
-         | ORDER BY vec_id""".stripMargin.replaceAll("\n", ""),
-    "v16_int8_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-         |   FROM embeddings),
-         | s AS (SELECT vec_id, emb,
-         |   list_max(list_transform(emb, x -> abs(x))) / 127 AS scale FROM e),
-         | d AS (SELECT vec_id, CASE WHEN scale = 0 THEN emb
-         |   ELSE list_transform(emb, x -> floor(x / scale + 0.5) * scale)
-         |   END AS dq FROM s)
-         | SELECT vec_id, ROUND(list_cosine_similarity(dq,
-         |   CAST($probeLit AS DOUBLE[])), 6) AS similarity
-         | FROM d ORDER BY similarity DESC, vec_id LIMIT 20"""
-        .stripMargin.replaceAll("\n", ""),
-    // zero-norm guards mirror graft's CosineSimilarity contract
-    // (cos := 0.0 when either side has zero norm) — DuckDB's
-    // list_cosine_similarity would yield NaN there. Binary/int8
-    // reconstructions are zero only when e itself is; the half
-    // prefix can be zero independently.
-    "v27_distortion_ladder" ->
+    }, sql(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
         |   FROM embeddings),
         | s AS (SELECT vec_id, e,
@@ -916,8 +844,28 @@ object VectorQueries {
         | SELECT rung, ROUND(AVG(c), 6) AS avg_cos,
         |  CAST(COUNT(*) AS BIGINT) AS n_vecs
         | FROM r GROUP BY rung ORDER BY rung"""
-        .stripMargin.replaceAll("\n", ""),
-    "v15_centroid_drift" ->
+        .stripMargin.replaceAll("\n", ""))),
+
+    // V15: embedding drift — per-label L2 distance between the class
+    // centroids of two deterministic halves of the corpus (the
+    // batch-over-batch distribution-shift monitor an embedding
+    // pipeline runs after every re-embed). Two VectorMean aggregations
+    // (fixed map-side buffers), a labels-sized join, and an ordered
+    // zip_with fold for the distance — the corpus shuffles only
+    // centroid buffers.
+    QuerySpec("v15_centroid_drift", (s, dir) => {
+      val mean = graft.functions.VectorAggregates.meanVector(Dim)
+      val e = emb(s, dir)
+      val ca = e.filter(pmod(col("vec_id"), lit(2)) === 0)
+        .groupBy("label").agg(mean(col("embedding")).as("ca"))
+      val cb = e.filter(pmod(col("vec_id"), lit(2)) === 1)
+        .groupBy("label").agg(mean(col("embedding")).as("cb"))
+      ca.join(cb, "label")
+        .select(col("label"), round(sqrt(aggregate(
+            zip_with(col("ca"), col("cb"), (x, y) => (x - y) * (x - y)),
+            lit(0.0), (acc, v) => acc + v)), 6).as("drift"))
+        .orderBy("label")
+    }, sql(
       """WITH u AS (SELECT vec_id, label, unnest(embedding) AS x,
         |   generate_subscripts(embedding, 1) AS i FROM embeddings),
         | pa AS (SELECT label, i, AVG(x) AS c FROM u WHERE vec_id % 2 = 0
@@ -927,8 +875,32 @@ object VectorQueries {
         | SELECT pa.label, ROUND(SQRT(SUM((pa.c - pb.c) * (pa.c - pb.c))), 6)
         |   AS drift
         | FROM pa JOIN pb ON pa.label = pb.label AND pa.i = pb.i
-        | GROUP BY pa.label ORDER BY pa.label""".stripMargin.replaceAll("\n", ""),
-    "v14_hard_negatives" ->
+        | GROUP BY pa.label ORDER BY pa.label""".stripMargin.replaceAll("\n", ""))),
+
+    // V14: hard-negative mining — for each query vector, the top
+    // near-misses in a similarity band (similar enough to confuse,
+    // below the positive bar): the contrastive-training sampler for
+    // retrieval/embedding models. Scale shape: the query set
+    // broadcasts (it is small by construction), the corpus is scanned
+    // once, the band filter cuts candidates in the codegen stage, and
+    // the per-query rank<=k compiles to WindowGroupLimit — so each
+    // partition forwards at most k rows per query.
+    QuerySpec("v14_hard_negatives", (s, dir) => {
+      val e = emb(s, dir)
+      val q = e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("query_id").orderBy(desc("sim"), asc("vec_id"))
+      e.crossJoin(broadcast(q))
+        .withColumn("sim", round(
+          VectorFunctions.cosine_similarity(col("embedding"), col("q_emb")), 6))
+        .filter(col("sim") >= 0.1 && col("sim") < 0.5 &&
+          col("vec_id") =!= col("query_id"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 8)
+        .select("query_id", "vec_id", "sim")
+        .orderBy(asc("query_id"), desc("sim"), asc("vec_id"))
+    }, sql(
       s"""SELECT q.vec_id AS query_id, c.vec_id,
          | ${simSql("c.embedding", "q.embedding")} AS sim
          | FROM embeddings c JOIN embeddings q
@@ -937,48 +909,51 @@ object VectorQueries {
          |   AND ${simSql("c.embedding", "q.embedding")} < 0.5
          | QUALIFY row_number() OVER (PARTITION BY query_id
          |   ORDER BY sim DESC, c.vec_id) <= 8
-         | ORDER BY 1, 3 DESC, 2""".stripMargin.replaceAll("\n", ""),
-    "v13_label_centroids" ->
+         | ORDER BY 1, 3 DESC, 2""".stripMargin.replaceAll("\n", ""))),
+
+    // V13: per-label mean embedding (class centroids) via the
+    // fixed-buffer VectorMean Aggregator — partial elementwise sums
+    // combine map-side, so the shuffle carries one (dim doubles,
+    // count) buffer per label per partition, NOT the corpus ×dim
+    // explode the naive posexplode+groupBy(label, pos) form would
+    // shuffle. The final posexplode runs on the tiny aggregated
+    // result only (labels × dim rows) to give the oracle a flat
+    // comparable shape.
+    QuerySpec("v13_label_centroids", (s, dir) => {
+      val mean = graft.functions.VectorAggregates.meanVector(Dim)
+      emb(s, dir)
+        .groupBy("label")
+        .agg(mean(col("embedding")).as("centroid"))
+        .select(col("label"), posexplode(col("centroid")))
+        .select(col("label"), (col("pos") + 1).cast("long").as("i"),
+          round(col("col"), 6).as("c"))
+        .orderBy("label", "i")
+    }, sql(
       """SELECT label, CAST(i AS BIGINT) AS i, ROUND(AVG(x), 6) AS c
         | FROM (SELECT label, unnest(embedding) AS x,
         |        generate_subscripts(embedding, 1) AS i FROM embeddings)
-        | GROUP BY label, i ORDER BY label, i""".stripMargin.replaceAll("\n", ""),
-    "v1_cosine_topk" ->
-      s"""SELECT vec_id, label, ${simSql("embedding", probeLit)} AS similarity
-         | FROM embeddings ORDER BY similarity DESC, vec_id LIMIT 20"""
-        .stripMargin.replaceAll("\n", ""),
-    "v2_threshold_count" ->
-      s"SELECT COUNT(*) AS cnt FROM embeddings WHERE ${simSql("embedding", probeLit)} >= 0.1",
-    "v3_self_neighbors" ->
-      s"""SELECT vec_id, ${simSql("embedding",
-          "(SELECT embedding FROM embeddings WHERE vec_id = 0)")} AS similarity
-         | FROM embeddings WHERE vec_id <> 0
-         | ORDER BY similarity DESC, vec_id LIMIT 10"""
-        .stripMargin.replaceAll("\n", ""),
-    "v4_neardup_pairs" ->
-      s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         | ${simSql("a.embedding", "b.embedding")} AS similarity
-         | FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         | WHERE a.vec_id < 1000 AND b.vec_id < 1000
-         |   AND ${simSql("a.embedding", "b.embedding")} >= 0.3
-         | ORDER BY a_id, b_id""".stripMargin.replaceAll("\n", ""),
-    "v9_l2_topk" ->
-      s"""SELECT vec_id,
-         | ROUND(list_distance(CAST(embedding AS DOUBLE[]), CAST($probeLit AS DOUBLE[])), 6) AS dist
-         | FROM embeddings ORDER BY dist, vec_id LIMIT 20"""
-        .stripMargin.replaceAll("\n", ""),
-    "v10_ip_topk" ->
-      s"""SELECT vec_id,
-         | ROUND(list_inner_product(CAST(embedding AS DOUBLE[]), CAST($probeLit AS DOUBLE[])), 6) AS ip
-         | FROM embeddings ORDER BY ip DESC, vec_id LIMIT 20"""
-        .stripMargin.replaceAll("\n", ""),
-    "v5_cross_topk" ->
-      s"""SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         | ${simSql("c.embedding", "q.embedding")} AS similarity
-         | FROM embeddings q JOIN embeddings c ON q.vec_id < 5
-         | QUALIFY row_number() OVER (PARTITION BY q.vec_id
-         |   ORDER BY ${simSql("c.embedding", "q.embedding")} DESC, c.vec_id) <= 5
-         | ORDER BY query_id, similarity DESC, neighbor_id"""
-        .stripMargin.replaceAll("\n", ""),
+        | GROUP BY label, i ORDER BY label, i""".stripMargin.replaceAll("\n", "")),
+      headline = true),
+
+    // V24: PCA projection — fit top-4 principal components in ONE
+    // moment-aggregation pass (fixed dim·(dim+3)/2-double partials
+    // combine map-side; the eigensolve is driver-side on the dim×dim
+    // covariance), then project every vector with broadcast centered
+    // dot products: pure map-side codegen, zero shuffles over the
+    // corpus. The oracle re-applies the trained projection from
+    // inlined constants, so the fit→transform arithmetic is
+    // hash-checked end-to-end (see pcaOracle).
+    // Bench: pcaModel caches the fit by dataset fingerprint, so only the
+    // first of the three trials pays the moment pass + eigensolve — the
+    // recorded min is PROJECTION cost (fit amortized, the steady-state
+    // serving shape). Time the fit separately if end-to-end PCA cost is
+    // the question.
+    QuerySpec("v24_pca_project", (s, dir) => {
+      val m = pcaModel(s, dir)
+      Pca.project(emb(s, dir).select("vec_id", "embedding"), "embedding", m)
+        .drop("embedding")
+        .orderBy("vec_id")
+    }, (s, dir) => Some(pcaSql(pcaModel(s, dir))), headline = true),
   )
+
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Cdc, Dedup, TextAnalysis, TextQueries}
 
@@ -69,13 +68,6 @@ object FunnelStreams {
         col("n_chars").cast("long").as("n_chars"), col("lang"),
         col("pii_free"), col("bin"))
 
-  /** Fold an append document stream into the per-doc gate-flag
-    * state. */
-  def streamingGateFlags(
-      docs: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
-    Cdc.streamingRollup(docs, statePath, Seq("doc_id"),
-      gateFlagBatch, checkpoint, mergeMin)
-
   /** One batch's per-(doc, token) count delta — the classifier's
     * posting-list state (additive merge: an append corpus
     * contributes each doc once; replays ride the version protocol). */
@@ -83,13 +75,6 @@ object FunnelStreams {
     batch.select(col("doc_id"),
         explode(TextAnalysis.segTokens(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("m"))
-
-  /** Fold an append document stream into the per-(doc, token) count
-    * state. */
-  def streamingDocTokCounts(
-      docs: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
-    Cdc.streamingRollup(docs, statePath, Seq("doc_id", "tok"),
-      docTokBatch, checkpoint)
 
   /** One TRAIN batch's contamination-flag delta, screened against
     * the benchmark-gram state COMMITTED at ingest time (None until a
@@ -104,14 +89,6 @@ object FunnelStreams {
       .select(col("doc_id"), col("contaminated").cast("long")
         .as("contaminated"))
   }
-
-  /** Fold an append TRAIN stream into the per-doc contamination-flag
-    * state (screen-at-ingest). */
-  def streamingContamFlags(
-      train: DataFrame, benchGramState: String, statePath: String,
-      checkpoint: String): StreamingQuery =
-    Cdc.streamingRollup(train, statePath, Seq("doc_id"),
-      contamFlagBatch(benchGramState), checkpoint, mergeMin)
 
   /** The t52 funnel report from the four committed states — ZERO
     * corpus re-reads: gate flags (map stages), the winnowing posting

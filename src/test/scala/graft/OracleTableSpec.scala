@@ -42,13 +42,29 @@ class OracleTableSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"corpus-derived oracles missing: $missing")
     val orphans = keys.diff(SparkEntry.queries.keySet)
     assert(orphans.isEmpty, s"oracles without a declared query: $orphans")
+    // every query is declared once, in one spec
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.size == 233 && names.distinct.size == 233,
+      s"${names.size} specs, ${names.distinct.size} distinct names")
     // the bench headline is 82 distinct declared queries, and every
     // bench-only override replaces one of them
-    assert(Bench.Headline.distinct.size == 82)
-    val undeclared = Bench.Headline.filterNot(SparkEntry.queries.contains)
+    val headline = SparkEntry.specs.filter(_.headline).map(_.name)
+    assert(headline.distinct.size == 82)
+    val undeclared = headline.filterNot(SparkEntry.queries.contains)
     assert(undeclared.isEmpty, s"headline names no query declares: $undeclared")
-    val strays = Bench.BenchOverrides.keySet.diff(Bench.Headline.toSet)
+    val strays = SparkEntry.specs.filter(_.bench.isDefined).map(_.name)
+      .toSet.diff(headline.toSet)
     assert(strays.isEmpty, s"overrides of no headline query: $strays")
+  }
+
+  test("no name-keyed query table is declared outside the registry") {
+    val table = """\b(?:val|def)\s+(oracleSql|corpusOracles|sf1ChainPlan|Headline|BenchOverrides)\b""".r
+    val found = Files.walk(Paths.get("src/main")).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { f =>
+        table.findAllMatchIn(Files.readString(f)).map(m => s"$f: ${m.group(1)}")
+      }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("a targeted dump writes exactly the selected oracles, for its own corpus") {

@@ -101,8 +101,7 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("quality deciles partition the corpus into ordered, disjoint score ranges") {
-    val rows = graft.operators.TextQueries
-      .queries("t18_quality_deciles")(spark, sfDir)
+    val rows = SparkEntry.queries("t18_quality_deciles")(spark, sfDir)
       .collect()
     assert(rows.map(_.getLong(0)).toSeq == (1L to 10L))
     assert(rows.map(_.getLong(1)).sum == docs.count())
@@ -213,8 +212,7 @@ class Round4OpsSpec extends AnyFunSuite {
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // exact pairwise oracle (corpus is small at sf0.001)
-    val exact = graft.operators.VectorQueries
-      .queries("v4_neardup_pairs")(spark, sfDir)
+    val exact = SparkEntry.queries("v4_neardup_pairs")(spark, sfDir)
       .select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
@@ -235,8 +233,7 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("grouped split: every domain lands wholly in one split") {
-    val leaky = graft.operators.TextQueries
-      .queries("t19_grouped_split")(spark, sfDir)
+    val leaky = SparkEntry.queries("t19_grouped_split")(spark, sfDir)
       .groupBy("domain").agg(countDistinct("split").as("ns"))
       .filter(col("ns") > 1).count()
     assert(leaky == 0)
@@ -263,8 +260,7 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("freq-items holds the Misra-Gries guarantee: no true heavy hitter missed") {
-    val got = graft.operators.TextQueries
-      .queries("t25_freq_items")(spark, sfDir)
+    val got = SparkEntry.queries("t25_freq_items")(spark, sfDir)
       .collect().map(_.getString(0)).toSet
     val toks = docs.select(explode(split(col("text"), " ")).as("tok"))
     val total = toks.count()
@@ -277,8 +273,7 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("source KL divergence is non-negative (Gibbs) and finite") {
-    val kl = graft.operators.TextQueries
-      .queries("t22_source_divergence")(spark, sfDir)
+    val kl = SparkEntry.queries("t22_source_divergence")(spark, sfDir)
       .collect().map(r => r.getString(0) -> r.getDouble(1))
     assert(kl.nonEmpty)
     kl.foreach { case (src, v) =>
@@ -288,8 +283,7 @@ class Round4OpsSpec extends AnyFunSuite {
 
   test("dup-window rate is in [0,1]; planted exact duplicates score 1.0") {
     import spark.implicits._
-    val rates = graft.operators.TextQueries
-      .queries("t23_dup_window_rate")(spark, sfDir)
+    val rates = SparkEntry.queries("t23_dup_window_rate")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(rates.nonEmpty && rates.values.forall(v => v >= 0.0 && v <= 1.0))
     // planted signal on a constructed corpus: an exact twin pair has
@@ -310,8 +304,7 @@ class Round4OpsSpec extends AnyFunSuite {
   }
 
   test("domain cap never keeps more than the cap per domain") {
-    val perDomain = graft.operators.TextQueries
-      .queries("u3_domain_cap")(spark, sfDir)
+    val perDomain = SparkEntry.queries("u3_domain_cap")(spark, sfDir)
       .groupBy("domain").agg(count(lit(1)).as("n"))
       .collect().map(_.getLong(1))
     assert(perDomain.nonEmpty && perDomain.forall(_ <= 5))

@@ -150,8 +150,7 @@ class Round5OpsSpec extends AnyFunSuite {
       hits.map(h => labels(h._2)).groupBy(identity).view.mapValues(_.size)
         .toSeq.minBy { case (l, votes) => (-votes, l) }._1
     }.toMap
-    val predicted = graft.operators.VectorQueries
-      .queries("v17_knn_classify")(spark, sfDir)
+    val predicted = SparkEntry.queries("v17_knn_classify")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(predicted == expected)
     // exactly one prediction per query, drawn from its neighbor labels
@@ -164,8 +163,7 @@ class Round5OpsSpec extends AnyFunSuite {
     // "every near-dup must appear" is NOT an invariant here; the
     // invariants are the pair canon, the cosine bounds, and that
     // identical texts which DO appear score exactly 1.)
-    val pairs = graft.operators.TextQueries
-      .queries("t28_tfidf_neardup")(spark, sfDir)
+    val pairs = SparkEntry.queries("t28_tfidf_neardup")(spark, sfDir)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
     assert(pairs.nonEmpty)
     pairs.foreach { case ((a, b), c) =>
@@ -206,8 +204,7 @@ class Round5OpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.typedLit
     val e = Tables.load(spark, sfDir, "embeddings")
     val probe = graft.operators.VectorQueries.probeVec
-    val df = graft.operators.VectorQueries
-      .queries("v18_matryoshka_topk")(spark, sfDir)
+    val df = SparkEntry.queries("v18_matryoshka_topk")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"), p.take(1500))

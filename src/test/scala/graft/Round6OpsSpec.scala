@@ -106,7 +106,7 @@ class Round6OpsSpec extends AnyFunSuite {
   }
 
   test("recall queries: one row, hits in [0,k], recall = hits/10; oracles present") {
-    val q = graft.operators.VectorQueries.queries
+    val q = SparkEntry.queries
     for (name <- Seq("v20_lsh_recall", "v21_ivf_recall", "v22_pq_recall",
         "v23_ivfpq_recall")) {
       val rows = q(name)(spark, sfDir).collect()
@@ -206,7 +206,7 @@ class Round6OpsSpec extends AnyFunSuite {
   }
 
   test("t30 DSIR weights rank the target language above every other") {
-    val w = graft.operators.TextQueries.queries("t30_dsir_weights")(spark, sfDir)
+    val w = SparkEntry.queries("t30_dsir_weights")(spark, sfDir)
     val byLang = w.join(Tables.load(spark, sfDir, "documents")
         .select("doc_id", "lang"), "doc_id")
       .groupBy("lang").agg(avg("dsir_weight").as("aw"))
@@ -271,7 +271,7 @@ class Round6OpsSpec extends AnyFunSuite {
   }
 
   test("s17 transition probabilities sum to 1 per source state") {
-    val q = graft.operators.EventQueries.queries("s17_markov_transitions")
+    val q = SparkEntry.queries("s17_markov_transitions")
     val rows = q(spark, sfDir).groupBy("src")
       .agg(sum("p").as("tot"), sum("cnt").as("n")).collect()
     rows.foreach { r =>

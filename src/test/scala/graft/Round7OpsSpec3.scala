@@ -34,7 +34,7 @@ class Round7OpsSpec3 extends AnyFunSuite {
       "x x x x x", // 9 chars: maximal repetition — fractions EXCEED 1
       "a b c d e", // 9 chars: all distinct — dup_frac 0 everywhere
       "a b a b")) // 7 chars: 4 tokens — NO n=5 row
-    val rows = TextQueries.queries("t35_gopher_repetition")(spark, dir)
+    val rows = SparkEntry.queries("t35_gopher_repetition")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getDouble(2), r.getDouble(3))).toMap
@@ -62,7 +62,7 @@ class Round7OpsSpec3 extends AnyFunSuite {
     // count-1 bigram has MORE chars than the count-2 top: top must
     // still be the count-2 gram.
     val dir = docsDir(Seq("z z z longword1 longword2")) // 25 chars
-    val r = TextQueries.queries("t35_gopher_repetition")(spark, dir)
+    val r = SparkEntry.queries("t35_gopher_repetition")(spark, dir)
       .filter(col("n") === 2).collect().head
     // "z z" (count 2, 3 chars → 6) wins over "longword1 longword2"
     // (count 1, 19 chars): 2·3/25, NOT 19/25
@@ -95,13 +95,13 @@ class Round7OpsSpec3 extends AnyFunSuite {
     assert(within(est(1L to 500L, 251L to 750L), 250L))
     assert(within(est(1L to 5000L, 10001L to 15000L), 0L))
     // the declared query's contract holds on testdata
-    val row = RelationalQueries.queries("a41_join_overlap")(spark, sfDir)
+    val row = SparkEntry.queries("a41_join_overlap")(spark, sfDir)
       .head()
     assert(row.getLong(0) > 0 && row.getBoolean(1))
   }
 
   test("p8 schema evolution: merged read surfaces the late column as NULL on old batches") {
-    val rows = TextQueries.queries("p8_schema_evolution")(spark, sfDir)
+    val rows = SparkEntry.queries("p8_schema_evolution")(spark, sfDir)
       .collect()
     val d = Tables.load(spark, sfDir, "documents")
     val nEven = d.filter(col("doc_id") % 2 === 0).count()
@@ -113,7 +113,7 @@ class Round7OpsSpec3 extends AnyFunSuite {
 
   test("v27 distortion ladder: int8 nearly lossless and above the coarser rungs") {
     import graft.operators.VectorQueries
-    val rows = VectorQueries.queries("v27_distortion_ladder")(spark, sfDir)
+    val rows = SparkEntry.queries("v27_distortion_ladder")(spark, sfDir)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2)))
       .toMap
     assert(rows.keySet == Set("binary", "half", "int8"))
@@ -144,14 +144,14 @@ class Round7OpsSpec3 extends AnyFunSuite {
     // hand NB: en counts {hello 3, world 1, again 1} tot 5, fr counts
     // {bonjour 2, monde 1} tot 3, V=5 → every doc classifies to its
     // gold language (doc 4 hinges on miss_en = ln(1/10) < ln(2/8)+gap)
-    val conf = TextQueries.queries("t36_nb_langid")(spark, dir)
+    val conf = SparkEntry.queries("t36_nb_langid")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
     assert(conf == Map(("en", "en") -> 4L, ("fr", "fr") -> 3L))
   }
 
   test("t36: learns — diagonal beats chance on sf0.001") {
-    val conf = TextQueries.queries("t36_nb_langid")(spark, sfDir).collect()
+    val conf = SparkEntry.queries("t36_nb_langid")(spark, sfDir).collect()
     val tot = conf.map(_.getLong(2)).sum
     val diag = conf.filter(r => r.getString(0) == r.getString(1))
       .map(_.getLong(2)).sum
@@ -167,7 +167,7 @@ class Round7OpsSpec3 extends AnyFunSuite {
     val dir = docsDir(Seq(
       "low low low low low lower lower widest widest widest",
       "newest newest newest newest newest newest"))
-    val merges = TextQueries.queries("t37_bpe_train")(spark, dir)
+    val merges = SparkEntry.queries("t37_bpe_train")(spark, dir)
       .collect().map(r =>
         (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(merges.toSeq == Seq(
@@ -211,7 +211,7 @@ class Round7OpsSpec3 extends AnyFunSuite {
     val dir = docsDir(Seq(
       "low low low low low lower lower widest widest widest",
       "newest newest newest newest newest newest"))
-    val rows = TextQueries.queries("t38_bpe_encode")(spark, dir)
+    val rows = SparkEntry.queries("t38_bpe_encode")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
     assert(rows == Map(
@@ -239,7 +239,7 @@ class Round7OpsSpec3 extends AnyFunSuite {
   }
 
   test("s21 sliding distinct: window set, hop bounds, and sketch contract on sf0.001") {
-    val out = EventQueries.queries("s21_sliding_distinct")(spark, sfDir)
+    val out = SparkEntry.queries("s21_sliding_distinct")(spark, sfDir)
       .collect()
     assert(out.nonEmpty)
     // every window satisfied the 10% sketch contract (also the oracle's

@@ -49,7 +49,7 @@ class Round7PropertySpec2 extends AnyFunSuite {
         .map { case (t, i) => (i.toLong, t, "en", "unit", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val got = TextQueries.queries("t35_gopher_repetition")(spark, dir)
+      val got = SparkEntry.queries("t35_gopher_repetition")(spark, dir)
         .collect()
         .map(r => (r.getLong(0), r.getLong(1)) ->
           (r.getDouble(2), r.getDouble(3))).toMap
@@ -143,7 +143,7 @@ class Round7PropertySpec2 extends AnyFunSuite {
         docs.map { case (i, t, l) => (i, t, l, "unit", t.length.toLong) }
           .toDF("doc_id", "text", "lang", "source", "n_chars")
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-        val got = TextQueries.queries("t36_nb_langid")(spark, dir)
+        val got = SparkEntry.queries("t36_nb_langid")(spark, dir)
           .collect()
           .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
           .toMap
@@ -187,7 +187,7 @@ class Round7PropertySpec2 extends AnyFunSuite {
           (toks.map(w => refBpe(w, merges).size.toLong).sum,
             toks.length.toLong)
       }.toMap
-      val got = TextQueries.queries("t38_bpe_encode")(spark, dir)
+      val got = SparkEntry.queries("t38_bpe_encode")(spark, dir)
         .collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == want)

@@ -10,7 +10,7 @@ class Round9OpsSpec extends AnyFunSuite {
   val Dir = "/root/testdata/sf0.001"
 
   test("s21 bench override is a fragment of the declared query") {
-    // The headline times BenchOverrides(s21) — the production sketch
+    // The headline times s21's bench shape — the production sketch
     // rollup alone — while Verify hash-checks the DECLARED query (the
     // rollup joined against exact ballast). This pins the containment:
     // re-deriving the declared output from the OVERRIDE's rows plus
@@ -19,8 +19,8 @@ class Round9OpsSpec extends AnyFunSuite {
     // one.
     val hopUs = 900L * 1000 * 1000
     val hops = 4
-    val overridden =
-      Bench.BenchOverrides("s21_sliding_distinct")(spark, Dir)
+    val overridden = SparkEntry.specs
+      .find(_.name == "s21_sliding_distinct").get.bench.get(spark, Dir)
     val e = Tables.eventsUs(spark, Dir)
     val exact = e
       .select(explode(sequence(

@@ -480,7 +480,7 @@ class StreamingSpec extends AnyFunSuite {
         Option(r.get(2)).map(_.toString)))
       .toSet
     val want = keyed(
-      graft.operators.RelationalQueries.queries("a38_cdc_apply")(spark, dir))
+      SparkEntry.queries("a38_cdc_apply")(spark, dir))
     val got = keyed(graft.operators.Cdc.readSnapshot(spark, statePath).get)
     assert(got == want,
       s"stream ${got.size} rows vs batch ${want.size}; " +
@@ -550,7 +550,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming attribution equals batch s16 across 3 time-ordered batches") {
     import spark.implicits._
-    val batch = graft.operators.EventQueries.queries("s16_attribution")(
+    val batch = SparkEntry.queries("s16_attribution")(
         spark, sfDir)
       .collect()
       .map(r => (r.getString(0), Option(r.getString(1)), r.getLong(2)))

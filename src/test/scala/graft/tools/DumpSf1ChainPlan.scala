@@ -1,7 +1,8 @@
 package graft.tools
 
-/** Dev dump: the sf1 chain-at-a-time oracle plan (the composite
-  * d22/m15/g10/t52 replays, staged one chain per statement) as JSON
+/** Dev dump: the sf1 chain-at-a-time oracle plan of every query that
+  * declares one ([[graft.QuerySpec.sf1Chains]]: the composite
+  * d22/m15/g10/t52/t55 replays, staged one chain per statement) as JSON
   * for tools/sf1_chain_oracle.py. The t52 plan is session-scoped
   * (its decon chain embeds the dump-time canon chain built from the
   * TARGET corpus's alphabet), so the dump takes the sf dir being
@@ -9,37 +10,26 @@ package graft.tools
   *   sbt "Test/runMain graft.tools.DumpSf1ChainPlan /tmp/chain_plan.json <sfDir>"
   */
 object DumpSf1ChainPlan extends App {
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\t' => "\\t"
-      case '\r' => "\\r"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  import graft.Verify.jsonString
 
   val out = args.headOption.getOrElse("/tmp/chain_plan.json")
   val sfDir = args.lift(1).getOrElse("/tmp/graft_sf1")
 
-  val plan: Map[String, Seq[(String, String)]] = {
+  val plan: Seq[(String, Seq[(String, String)])] = {
     val s = graft.Tables.session("local[8]", shufflePartitions = 8)
-    try
-      graft.operators.PipelineQueries.sf1ChainPlan ++
-        graft.operators.GraphQueries.sf1ChainPlan ++
-        graft.operators.TextQueries.sf1ChainPlan(s, sfDir)
+    try graft.SparkEntry.specs.flatMap { q =>
+      q.sf1Chains.map(chains => q.name -> chains(s, sfDir)) }
     finally {
       graft.Caches.release(s)
       s.stop()
     }
   }
 
-  val json = plan.toSeq.sortBy(_._1).map { case (q, chains) =>
+  val json = plan.sortBy(_._1).map { case (q, chains) =>
     val arr = chains.map { case (n, sql) =>
-      s"""[\"${esc(n)}\", \"${esc(sql)}\"]"""
+      s"""[${jsonString(n)}, ${jsonString(sql)}]"""
     }.mkString("[", ", ", "]")
-    s"""\"${esc(q)}\": $arr"""
+    s"""${jsonString(q)}: $arr"""
   }.mkString("{", ", ", "}")
 
   java.nio.file.Files.write(java.nio.file.Paths.get(out),

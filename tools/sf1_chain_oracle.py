@@ -12,7 +12,7 @@ exact check_correctness.py compare (row count, sorted column names,
 sorted canonical values).
 
 Usage:
-  sbt "Test/runMain graft.tools.DumpSf1ChainPlan /tmp/chain_plan.json"
+  sbt "Test/runMain graft.tools.DumpSf1ChainPlan /tmp/chain_plan.json <sf1Dir>"
   sbt "runMain graft.Verify <sf1Dir> <outDir> d22_dedup_audit,m15_caption_consolidation,g10_modularity"
   python3 tools/sf1_chain_oracle.py <sf1Dir> <outDir> /tmp/chain_plan.json [report.json]
 """
