@@ -1245,33 +1245,28 @@ object Dedup {
     * ((id, label = component min), one row per node of `pairs`);
     * equality across all three spec-pinned on random graphs with the
     * threshold forced both ways. */
-  def dupClustersAuto(pairs: DataFrame): DataFrame = {
+  def dupClustersAuto(pairs: DataFrame): DataFrame =
+    dupClustersAuto(pairs, MaxDriverPairs)
+
+  /** The threshold is a per-16-byte-pair proxy, but collect()
+    * materializes Rows + the union-find maps at ~10× that estimate, so
+    * an absolute pair cap keeps a session that tunes
+    * autoBroadcastJoinThreshold into the hundreds of MB (common for
+    * wide dim joins) from pushing tens of millions of pairs through the
+    * driver: 4M pairs ≈ 350 MB of driver heap, safe under any plausible
+    * driver size, and far past the crossover where star contraction's
+    * fixed stage latency stops dominating anyway. */
+  private val MaxDriverPairs = 4L * 1000 * 1000
+
+  /** [[dupClustersAuto]] with the driver branch's pair cap given. */
+  private[graft] def dupClustersAuto(
+      pairs: DataFrame, maxDriverPairs: Long): DataFrame = {
     val spark = pairs.sparkSession
     val p = graft.Caches.shared(pairs
       .select(col("a_id").cast("long").as("a_id"),
         col("b_id").cast("long").as("b_id")))
     val bcast = org.apache.spark.sql.GraftShim.autoBroadcastBytes(spark)
     val n = p.count()
-    // the threshold is a per-16-byte-pair proxy, but collect()
-    // materializes Rows + the union-find maps at ~10× that estimate —
-    // an absolute pair cap keeps a session that tunes
-    // autoBroadcastJoinThreshold into the hundreds of MB (common for
-    // wide dim joins) from pushing tens of millions of pairs through
-    // the driver: 4M pairs ≈ 350 MB of driver heap, safe under any
-    // plausible driver size, and far past the crossover where star
-    // contraction's fixed stage latency stops dominating anyway
-    val maxDriverPairs = spark.conf
-      .getOption("graft.dedup.maxDriverPairs").map { v =>
-        // fail HERE with the conf name, not with a bare
-        // NumberFormatException three operators deep
-        val parsed = scala.util.Try(v.trim.toLong).getOrElse(
-          throw new IllegalArgumentException(
-            s"graft.dedup.maxDriverPairs must be a long, got '$v'"))
-        require(parsed > 0,
-          s"graft.dedup.maxDriverPairs must be positive, got $parsed")
-        parsed
-      }
-      .getOrElse(4L * 1000 * 1000)
     if (bcast >= 0 && n * 16L <= bcast && n <= maxDriverPairs) {
       val edges = p.collect().map(r => (r.getLong(0), r.getLong(1)))
       // union–find, path-halving; roots resolved to component MIN id

@@ -169,10 +169,27 @@ object Ivf {
   def loadModel(
       spark: org.apache.spark.sql.SparkSession, path: String): IvfModel =
     IvfModel(
-      spark.read.parquet(path)
+      readCodebook(spark, path)
         .orderBy("cell")
         .collect()
         .map(r => r.getSeq[Double](1).toArray))
+
+  /** The part files of a codebook dir, read by name. Codebooks sit in
+    * `_`-prefixed dirs (`_model`, `_coarse`) so the index scan never
+    * lists them, and Spark also treats such a dir, named as a read
+    * root, as hidden: it logs "All paths were ignored" and reads it
+    * only because it keeps an explicit root. A glob of the part files
+    * trades that for a logged stack trace (Spark probes the glob, as a
+    * single path, for a streaming-sink metadata dir), so the files are
+    * listed here. */
+  private[graft] def readCodebook(
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val parts = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dir).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+  }
 
   /** ANN search: top-k within the query's `nprobe` nearest cells, of
     * the rows whose similarity is at least `threshold`. */

@@ -10,27 +10,11 @@ import org.apache.spark.sql.functions._
   * offset lands in — the standard pre-training step that turns a
   * ragged corpus into dense ctx-sized training examples.
   *
-  * The naive formulation is a running total over the whole corpus —
-  * `SUM(n_tokens) OVER (ORDER BY id)` — which Spark executes as a
-  * single-partition Window: one task sorts and scans 100 TB. This
-  * implementation is the classic two-phase distributed prefix sum
-  * instead:
-  *
-  *   1. bucket rows into contiguous id ranges ([[RangeBuckets]]: a
-  *      sampled-boundary bucket expression — a pure map-side function
-  *      of the id, no range exchange) and compute each row's prefix
-  *      WITHIN its bucket (partitioned Window — parallel, no skew);
-  *   2. aggregate one subtotal row per bucket (a few hundred rows,
-  *      not corpus rows), prefix-sum THAT tiny list (the only
-  *      unpartitioned window, over #buckets rows), and broadcast-join
-  *      the bucket base offsets back.
-  *
-  * Global offset = bucket base + local prefix. The result is
-  * identical for ANY bucket count or boundary placement — boundaries
-  * shift work between phases but never change the global order — and
-  * because the bucket label is a deterministic function of the key
-  * (not a runtime partition id), both plan branches agree under any
-  * AQE re-planning with nothing persisted.
+  * The offset is a running token total over the packing order, never
+  * a single-partition `SUM(n_tokens) OVER (ORDER BY id)`: every
+  * `*PackOffsets` form is [[RangeBuckets.runningSums]], the two-phase
+  * distributed prefix sum (its scaladoc holds the algorithm and why
+  * it stays exact under AQE with nothing persisted).
   */
 object Packing {
 
@@ -38,7 +22,7 @@ object Packing {
     * concatenated stream), `pack_id` (= start_offset / ctxSize) and
     * `n_spans` (how many ctx windows the row touches; rows longer than
     * ctxSize straddle several). `idCol` must be unique — it defines
-    * the packing order. */
+    * the packing order. Requires a deterministic `df`. */
   def withPackOffsets(
       df: DataFrame, idCol: String, tokensCol: String,
       ctxSize: Int, numParts: Int = 0): DataFrame = {
@@ -46,46 +30,23 @@ object Packing {
     val parts =
       if (numParts > 0) numParts
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // The bucket label feeds BOTH the local-prefix window and the
-    // subtotal aggregate, so the two branches must agree on bucket
-    // assignment under ANY re-planning. `_part` is therefore a PURE
-    // map-side function of the key: range boundaries are computed once
-    // (one narrow sample job over idCol — what RangePartitioner does
-    // internally) and frozen into the plan as broadcast literals, so
-    // AQE can re-plan each branch freely and both still compute
-    // identical buckets. No corpus materialization (round 5 persisted
-    // the ranged frame instead, doubling the operator's IO at scale),
-    // and the subtotal branch now combines map-side — only #parts
-    // subtotal rows ever shuffle on that leg. Requires `df` to be
-    // deterministic (both branches re-evaluate it), which every caller
-    // here satisfies.
-    val bounds = RangeBuckets.boundaries(df, Seq(idCol), parts)
-    val parted = df.withColumn("_part",
-      RangeBuckets.bucket(Seq(col(idCol)), bounds))
-    // Phase 1: local prefix (exclusive) inside each id-range bucket.
-    val wLocal = Window.partitionBy("_part").orderBy(idCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted.withColumn("_local_end", sum(col(tokensCol)).over(wLocal))
-    // Phase 2: one row per bucket; the unpartitioned window runs
-    // over #buckets rows, not corpus rows.
-    val wParts = Window.orderBy("_part")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = parted.groupBy("_part")
-      .agg(sum(col(tokensCol)).as("_part_total"))
-      .withColumn("_base",
-        coalesce(sum(col("_part_total")).over(wParts) - col("_part_total"), lit(0L)))
-      .select("_part", "_base")
-    local
-      .join(broadcast(bases), "_part")
-      .withColumn("start_offset", col("_base") + col("_local_end") - col(tokensCol))
-      .withColumn("pack_id", floor(col("start_offset") / ctxSize))
+    RangeBuckets.runningSums(df, Nil, Seq(idCol),
+        Seq("_end" -> col(tokensCol)), parts)
+      .withColumn("start_offset", col("_end") - col(tokensCol))
+      .transform(withSpans(_, tokensCol, ctxSize))
+      .drop("_end")
+  }
+
+  /** `pack_id` (the ctx window `start_offset` lands in) and `n_spans`
+    * (how many windows the row's tokens touch; 1 for an empty row). */
+  private def withSpans(
+      df: DataFrame, tokensCol: String, ctxSize: Int): DataFrame =
+    df.withColumn("pack_id", floor(col("start_offset") / ctxSize))
       .withColumn("n_spans",
         when(col(tokensCol) > 0,
           floor((col("start_offset") + col(tokensCol) - lit(1)) / ctxSize)
             - col("pack_id") + lit(1))
           .otherwise(lit(1L)))
-      .drop("_part", "_local_end", "_base")
-  }
 
   /** The materialized packing plan: one row per (document, context
     * window) segment — a document spanning several ctx windows emits
@@ -147,17 +108,11 @@ object Packing {
     * `start_offset`, `pack_id`, `n_spans`, `shard_id` (= pack_id div
     * packsPerShard) per row.
     *
-    * ONE generalized two-phase prefix sum, not a pass per phase (the
-    * first cut looped [[withPackOffsets]] over the 4 slices and paid
-    * the boundary-sample + window machinery 8×, measured 6.7 s at
-    * sf0.1 — the slowest headline entry): rows bucket by sampled
-    * (phase, md5, id) range boundaries, the local window partitions by
-    * (phase, bucket) computing the running token sum AND the running
-    * row count in one frame, and the per-(phase, bucket) subtotal
-    * table — #phases × #buckets rows — prefix-sums PER PHASE before
-    * broadcasting back. A bucket spanning two phases is fine: both
-    * windows key on the phase, so the reset at a phase boundary is
-    * structural. Never a global sort; one corpus pass. */
+    * ONE [[RangeBuckets.runningSums]] partitioned by phase, ordered by
+    * (preOrderCols, md5, id), carrying the token sum and the position
+    * count together: never a global sort, never a pass per phase, one
+    * corpus pass. `seeds` (one row per phase: `_tok_base`,
+    * `_pos_base`) continue an existing artifact's per-phase streams. */
   def perPhasePackOffsets(
       df: DataFrame, idCol: String, tokensCol: String, phaseCol: String,
       salt: String, ctxSize: Int, packsPerShard: Int,
@@ -167,29 +122,10 @@ object Packing {
     require(packsPerShard > 0, "packsPerShard must be positive")
     val parts = df.sparkSession.conf
       .get("spark.sql.shuffle.partitions").toInt
-    val hashed = df.withColumn("_h",
-      md5(concat(col(idCol).cast("string"), lit(salt))))
-    val orderNames = preOrderCols ++ Seq("_h", idCol)
-    val keys = col(phaseCol) +: orderNames.map(col)
-    val bounds = RangeBuckets.boundaries(hashed, phaseCol +: orderNames,
-      parts)
-    val parted = hashed.withColumn("_part",
-      RangeBuckets.bucket(keys, bounds))
-    val wLocal = Window.partitionBy(phaseCol, "_part")
-      .orderBy(orderNames.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = parted
-      .withColumn("_local_end", sum(col(tokensCol)).over(wLocal))
-      .withColumn("_local_rn", count(lit(1)).over(wLocal))
-    val wParts = Window.partitionBy(phaseCol).orderBy("_part")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = parted.groupBy(col(phaseCol), col("_part"))
-      .agg(sum(col(tokensCol)).as("_pt"), count(lit(1)).as("_pc"))
-      .withColumn("_tbase",
-        coalesce(sum(col("_pt")).over(wParts) - col("_pt"), lit(0L)))
-      .withColumn("_cbase",
-        coalesce(sum(col("_pc")).over(wParts) - col("_pc"), lit(0L)))
-      .select(col(phaseCol), col("_part"), col("_tbase"), col("_cbase"))
+    val running = RangeBuckets.runningSums(
+      df.withColumn("_h", md5(concat(col(idCol).cast("string"), lit(salt)))),
+      Seq(phaseCol), preOrderCols ++ Seq("_h", idCol),
+      Seq("_end" -> col(tokensCol), "_pos" -> lit(1L)), parts)
     // incremental seed (round 16): per-phase token/position bases from
     // an existing artifact's manifest — the new batch's offsets
     // CONTINUE each phase's stream instead of restarting at 0. Phases
@@ -197,30 +133,20 @@ object Packing {
     // row per phase — always broadcastable.
     val seeded = seeds match {
       case Some(sd) =>
-        local.join(broadcast(sd
+        running.join(broadcast(sd
             .select(col(phaseCol), col("_tok_base"), col("_pos_base"))),
           Seq(phaseCol), "left")
       case None =>
-        local.withColumn("_tok_base", lit(0L))
+        running.withColumn("_tok_base", lit(0L))
           .withColumn("_pos_base", lit(0L))
     }
     seeded
-      .join(broadcast(bases), Seq(phaseCol, "_part"))
-      .withColumn("pos",
-        coalesce(col("_pos_base"), lit(0L)) + col("_cbase") +
-          col("_local_rn"))
+      .withColumn("pos", coalesce(col("_pos_base"), lit(0L)) + col("_pos"))
       .withColumn("start_offset",
-        coalesce(col("_tok_base"), lit(0L)) + col("_tbase") +
-          col("_local_end") - col(tokensCol))
-      .withColumn("pack_id", floor(col("start_offset") / ctxSize))
-      .withColumn("n_spans",
-        when(col(tokensCol) > 0,
-          floor((col("start_offset") + col(tokensCol) - lit(1)) / ctxSize)
-            - col("pack_id") + lit(1))
-          .otherwise(lit(1L)))
+        coalesce(col("_tok_base"), lit(0L)) + col("_end") - col(tokensCol))
+      .transform(withSpans(_, tokensCol, ctxSize))
       .withColumn("shard_id", expr(s"pack_id div $packsPerShard"))
-      .drop("_h", "_part", "_local_end", "_local_rn", "_tbase", "_cbase",
-        "_tok_base", "_pos_base")
+      .drop("_h", "_end", "_pos", "_tok_base", "_pos_base")
   }
 
   /** The curriculum segment plan: [[perPhasePackOffsets]]' output

@@ -265,7 +265,7 @@ object Pq {
 
   /** Load a codebook written by saveModel. */
   def loadModel(spark: SparkSession, path: String): PqModel = {
-    val rows = spark.read.parquet(path)
+    val rows = Ivf.readCodebook(spark, path)
       .orderBy("subspace", "cell")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))

@@ -4,40 +4,14 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Sampled range boundaries + a pure map-side bucket expression — the
-  * building block of the two-phase distributed prefix sums
-  * ([[Packing.withPackOffsets]], [[graft.store.Catalog.withSequentialIds]]).
-  *
-  * Why not `repartitionByRange` + `spark_partition_id()`: those ops
-  * read the ranged frame on TWO plan branches (per-partition local
-  * ranks, per-partition subtotals), and the partition label is only
-  * consistent across branches if both observe the SAME sampled range
-  * boundaries. Plan-level exchange reuse usually guarantees that, but
-  * AQE can re-plan the branches differently when the op nests above
-  * another range exchange (observed round 5: shuffled packing at
-  * sf0.1 — silently wrong offsets). Round 5 fixed it by persisting the
-  * ranged frame, which is correct but writes the whole corpus to
-  * memory/disk once per call — at 100 TB that doubles the operator's
-  * IO.
-  *
-  * This helper removes the materialization: compute the range
-  * boundaries ONCE (one driver-side sample job over just the key
-  * columns — the same reservoir sampling `RangePartitioner` runs
-  * internally), then derive the bucket as a broadcast-literal
-  * comparison chain — a pure, deterministic function of the key
-  * evaluated map-side. Both consumer branches recompute identical
-  * bucket values under ANY AQE re-planning, because the boundaries are
-  * frozen constants in the plan, not runtime partition ids.
-  *
-  * Correctness note: the downstream prefix-sum result is invariant to
-  * WHERE the boundaries fall (they move work between the local and
-  * subtotal phases but never change the global key order) — the only
-  * requirement is that the bucket is monotone in the key's sort order,
-  * which `count of (key >= boundary)` guarantees for any boundary set.
-  * Sampling quality therefore affects only balance, never values.
+/** Sampled range boundaries, a pure map-side bucket expression, and
+  * the one two-phase distributed prefix sum built on them
+  * ([[runningSums]]). [[Skyline]] reuses the boundaries for its prefix
+  * max.
   */
 object RangeBuckets {
 
@@ -152,4 +126,78 @@ object RangeBuckets {
         .reduce(_ && _)
       when(ge, 1).otherwise(0)
     }.reduce(_ + _)
+
+  /** Inclusive running sums without a global sort: for each
+    * `(name, value)` of `sums`, adds `name` = `SUM(value) OVER
+    * (PARTITION BY partitionCols ORDER BY orderCols ROWS UNBOUNDED
+    * PRECEDING)`; a `lit(1L)` value numbers the rows like
+    * `row_number()`. The naive window sorts each partition (the whole
+    * frame when `partitionCols` is empty) in one task. This is the
+    * classic two-phase distributed prefix sum instead:
+    *
+    *   1. bucket rows into contiguous key ranges ([[bucket]] over
+    *      `parts` [[boundaries]] sampled on `partitionCols ++
+    *      orderCols`) and take each row's running sum WITHIN its
+    *      (partition, bucket): a partitioned window, parallel;
+    *   2. aggregate one subtotal row per (partition, bucket), prefix-sum
+    *      those per partition (the only window not keyed by a bucket,
+    *      over #partitions × #buckets rows, never frame rows), and
+    *      broadcast-join each bucket's base back.
+    *
+    * Running sum = bucket base + local running sum. A bucket that spans
+    * two partitions is fine: both windows key on the partition, so the
+    * restart at a partition boundary is structural. The result is the
+    * same for ANY `parts` and boundary placement: boundaries move work
+    * between the phases but never change the order, since [[bucket]]
+    * is monotone in it. Sampling quality affects balance, never values.
+    *
+    * Why a bucket expression and not `repartitionByRange` +
+    * `spark_partition_id()`: the bucket label feeds TWO plan branches
+    * (the local window and the subtotal aggregate), and a runtime
+    * partition id is only consistent across them if both observe the
+    * same sampled range boundaries. AQE can re-plan the branches
+    * differently when this nests above another range exchange (this
+    * gave silently wrong offsets for shuffled packing at sf0.1), and
+    * persisting the ranged frame instead writes the whole input once
+    * more. Here the boundaries are computed ONCE (one narrow sample job
+    * over the key columns) and frozen into the plan as literals, so the
+    * bucket is a pure function of the key: both branches compute
+    * identical buckets under any re-planning, with nothing persisted,
+    * and the subtotal branch combines map-side.
+    *
+    * Requires a deterministic `df` (both branches re-evaluate it),
+    * non-null partition keys (the join back is an equi-join) and
+    * non-null values (a null local sum would not fall back to the
+    * bucket base). Order keys may be null (they sort first); ties in
+    * the order fall in scan order, as in any `ROWS` frame. */
+  def runningSums(
+      df: DataFrame, partitionCols: Seq[String], orderCols: Seq[String],
+      sums: Seq[(String, Column)], parts: Int): DataFrame = {
+    require(sums.nonEmpty, "runningSums needs at least one value")
+    val keys = partitionCols ++ orderCols
+    val bucketKeys = partitionCols :+ "_part"
+    val parted = df.withColumn("_part",
+      bucket(keys.map(col), boundaries(df, keys, parts)))
+    val wLocal = Window.partitionBy(bucketKeys.map(col): _*)
+      .orderBy(orderCols.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val wParts = Window.partitionBy(partitionCols.map(col): _*)
+      .orderBy("_part")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val local = sums.foldLeft(parted) { case (d, (n, v)) =>
+      d.withColumn(s"_local_$n", sum(v).over(wLocal))
+    }
+    val totals = sums.map { case (n, v) => sum(v).as(s"_total_$n") }
+    val bases = parted.groupBy(bucketKeys.map(col): _*)
+      .agg(totals.head, totals.tail: _*)
+      .select(bucketKeys.map(col) ++ sums.map { case (n, _) =>
+        val t = col(s"_total_$n")
+        coalesce(sum(t).over(wParts) - t, lit(0L)).as(s"_base_$n")
+      }: _*)
+    sums.foldLeft(local.join(broadcast(bases), bucketKeys)) {
+      case (d, (n, _)) =>
+        d.withColumn(n, col(s"_base_$n") + col(s"_local_$n"))
+    }.drop("_part" +: sums.flatMap { case (n, _) =>
+      Seq(s"_local_$n", s"_base_$n") }: _*)
+  }
 }

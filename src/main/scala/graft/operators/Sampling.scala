@@ -95,23 +95,17 @@ object Sampling {
     * `pos` (1..N) in md5-keyed order — the reproducible global shuffle
     * a training pipeline runs before packing, so example order is
     * decorrelated from ingest order yet identical across runs, engines
-    * and partition counts. The position assignment is the distributed
-    * two-phase prefix sum ([[graft.store.Catalog.withSequentialIds]]):
-    * range-partition on the hash key, row_number within partitions,
-    * subtotal offsets — never a single-task global sort. `salt` picks
-    * the permutation (a new salt is a fresh shuffle of the same
+    * and partition counts. `pos` is [[RangeBuckets.runningSums]] of
+    * `lit(1L)` over (md5, id), never a single-task global sort. `salt`
+    * picks the permutation (a new salt is a fresh shuffle of the same
     * corpus). */
   def shufflePositions(
-      df: DataFrame, idCol: String, salt: String): DataFrame = {
-    require(!df.columns.contains("id"),
-      "shufflePositions: rename the existing 'id' column first " +
-        "(the position assignment uses that name internally)")
-    graft.store.Catalog.withSequentialIds(
+      df: DataFrame, idCol: String, salt: String): DataFrame =
+    RangeBuckets.runningSums(
         df.withColumn("_h", md5(concat(col(idCol).cast("string"), lit(salt)))),
-        Seq("_h", idCol), 0L)
-      .withColumnRenamed("id", "pos")
+        Nil, Seq("_h", idCol), Seq("pos" -> lit(1L)),
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
       .drop("_h")
-  }
 
   /** Deterministic weighted sampling without replacement (the
     * Efraimidis–Spirakis A-Res priority scheme, public): each row gets

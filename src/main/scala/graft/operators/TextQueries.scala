@@ -221,6 +221,29 @@ object TextQueries {
   private def q6(x: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     round(x * 1e6).cast("long")
 
+  /** t18's bounded-histogram quantile bucket. `hist` holds one row per
+    * (partitionCols, valueCol) with its row count in `countCol`; `n`
+    * holds the row total in column `n` (one row, or one per partition
+    * keyed by partitionCols). Adds `as` = floor(before·k/n)+1 (bigint),
+    * where `before` counts the rows of smaller value in the partition:
+    * the exact 1..k quantile, equal values sharing one. The window runs
+    * over the histogram, never over the rows it counts, so a rounded
+    * value domain caps its input. */
+  private def quantileBucket(
+      hist: DataFrame, partitionCols: Seq[String], valueCol: String,
+      countCol: String, n: DataFrame, k: Int, as: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(partitionCols.map(col): _*).orderBy(valueCol)
+      .rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)
+    val ranked = hist
+      .withColumn("before", sum(countCol).over(w) - col(countCol))
+    (if (partitionCols.isEmpty) ranked.crossJoin(n)
+     else ranked.join(n, partitionCols))
+      .withColumn(as, floor(col("before") * k / col("n")) + 1)
+  }
+
   /** The t36 scoring pipeline from its two TRAINING-STATE tables
     * (token counts + doc counts): derive the quantized model, pivot it
     * wide, score every doc of `d` — a (doc_id, lang, tk)
@@ -322,8 +345,8 @@ object TextQueries {
     * assumed broadcastable (bigram vocab grows far past the driver at
     * web scale) — per-doc gram counts pre-aggregate map-side and join
     * the model on (w1, w2), one exchange per side; the tercile is
-    * t18's bounded-histogram prefix sum (the rounded score domain
-    * caps the window input), never an ntile over the corpus. */
+    * [[quantileBucket]] over the rounded score histogram, never an
+    * ntile over the corpus. */
   private[graft] def lmPerplexity(
       d: DataFrame, uniIn: DataFrame, bigIn: DataFrame): DataFrame = {
     val uni = graft.Caches.shared(uniIn)
@@ -368,17 +391,10 @@ object TextQueries {
       .withColumn("avg_nll6",
         expr("(2 * nll6 + n_big) div (2 * n_big)")))
     val hist = scored.groupBy("avg_nll6").agg(count(lit(1)).as("hc"))
-    val wCum = org.apache.spark.sql.expressions.Window.orderBy("avg_nll6")
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val n = broadcast(scored.agg(count(lit(1)).as("n")))
-    val buckets = broadcast(hist
-      .withColumn("before", sum("hc").over(wCum) - col("hc"))
-      .crossJoin(n)
-      .select(col("avg_nll6"),
-        (floor(col("before") * 3 / col("n")) + 1).cast("int")
-          .as("bucket")))
+    val buckets = broadcast(
+      quantileBucket(hist, Nil, "avg_nll6", "hc", n, 3, "bucket")
+        .select(col("avg_nll6"), col("bucket").cast("int").as("bucket")))
     scored.join(buckets, Seq("avg_nll6"))
       .select("doc_id", "n_big", "nll6", "avg_nll6", "bucket")
       .orderBy("doc_id")
@@ -590,18 +606,11 @@ object TextQueries {
       .withColumn("avg_nll6",
         expr("(2 * nll6 + n_big) div (2 * n_big)")))
     val hist = scored.groupBy("lang", "avg_nll6").agg(count(lit(1)).as("hc"))
-    val wCum = org.apache.spark.sql.expressions.Window
-      .partitionBy("lang").orderBy("avg_nll6")
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     val n = broadcast(scored.groupBy("lang").agg(count(lit(1)).as("n")))
-    val buckets = broadcast(hist
-      .withColumn("before", sum("hc").over(wCum) - col("hc"))
-      .join(n, "lang")
-      .select(col("lang"), col("avg_nll6"),
-        (floor(col("before") * 3 / col("n")) + 1).cast("int")
-          .as("bucket")))
+    val buckets = broadcast(
+      quantileBucket(hist, Seq("lang"), "avg_nll6", "hc", n, 3, "bucket")
+        .select(col("lang"), col("avg_nll6"),
+          col("bucket").cast("int").as("bucket")))
     scored.join(buckets, Seq("lang", "avg_nll6"))
       .select("doc_id", "lang", "n_big", "nll6", "avg_nll6", "bucket")
       .orderBy("doc_id")
@@ -2074,13 +2083,8 @@ object TextQueries {
       val q = docs(s, dir)
         .select(TextAnalysis.qualityScore(col("text")).as("q"))
       val hist = q.groupBy("q").agg(count(lit(1)).as("c"))
-      val wCum = org.apache.spark.sql.expressions.Window.orderBy("q")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
       val n = broadcast(q.agg(count(lit(1)).as("n")))
-      hist.withColumn("before", sum("c").over(wCum) - col("c"))
-        .crossJoin(n)
-        .withColumn("decile", floor(col("before") * 10 / col("n")) + 1)
+      quantileBucket(hist, Nil, "q", "c", n, 10, "decile")
         .groupBy("decile")
         .agg(sum("c").as("n_docs"), min("q").as("min_q"), max("q").as("max_q"))
         .orderBy("decile")
@@ -4442,9 +4446,9 @@ object TextQueries {
 
   /** p9's phase assignment — ONE definition shared by the p9 query and
     * p10's packing: FK decibin (bounded integer domain), phase =
-    * quartile of the bin distribution via t18's bounded-histogram
-    * prefix sum (the window runs on the HISTOGRAM, never the corpus),
-    * broadcast-joined back. Returns (doc_id, fk, bin, phase). */
+    * quartile of the bin distribution via [[quantileBucket]] (the
+    * window runs on the HISTOGRAM, never the corpus), broadcast-joined
+    * back. Returns (doc_id, fk, bin, phase). */
   private[graft] def curriculumPhases(d: DataFrame): DataFrame =
     curriculumPhasesOver(Tables.balanced(d)
       .transform(withReadability)
@@ -4463,19 +4467,11 @@ object TextQueries {
     val binned =
       if (cacheInput) graft.Caches.shared(binnedIn) else binnedIn
     val hist = binned.groupBy("bin").agg(count(lit(1)).as("c"))
-    val wCum = org.apache.spark.sql.expressions.Window.orderBy("bin")
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
     // coalesce: on an empty input sum aggregates to one NULL row where
     // count(lit(1)) yielded 0 — keep the old count semantics (ADVICE r17)
     val n = broadcast(hist.agg(coalesce(sum("c"), lit(0L)).as("n")))
-    val phases = hist
-      .withColumn("before", sum("c").over(wCum) - col("c"))
-      .crossJoin(n)
-      .select(col("bin"),
-        (floor(col("before") * 4 / col("n")) + 1).cast("long")
-          .as("phase"))
+    val phases = quantileBucket(hist, Nil, "bin", "c", n, 4, "phase")
+      .select(col("bin"), col("phase"))
     binned.join(broadcast(phases), "bin")
   }
 

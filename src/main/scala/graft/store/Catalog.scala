@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 /** Parquet-backed catalog mirroring the reference's relational schema
@@ -19,8 +18,9 @@ import org.apache.spark.sql.types._
   *    match and numbering in plain Scala, one append — and returns
   *    the table as a local relation, so a lookup or broadcast of it
   *    costs no job. Past that size the same upsert is left-anti joins
-  *    + the distributed numbering of [[withSequentialIds]], several
-  *    jobs that each re-evaluate the batch. Every read side broadcasts
+  *    + the distributed numbering of
+  *    [[graft.operators.RangeBuckets.runningSums]], several jobs that
+  *    each re-evaluate the batch. Every read side broadcasts
   *    the table.
   *  - chunk tables are fact tables: append-only Parquet, partitioned
   *    by `model_id` (the reference's every query filters one model —
@@ -93,50 +93,6 @@ object Catalog {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
-  /** Sequential id assignment WITHOUT a global single-task sort — the
-    * two-phase distributed prefix sum of
-    * [[graft.operators.Packing.withPackOffsets]] applied to row
-    * counting: bucket the batch into contiguous key ranges (sampled
-    * map-side boundaries, [[graft.operators.RangeBuckets]]), row_number
-    * WITHIN each bucket (parallel), then offset each bucket by
-    * the running sum of per-bucket counts. The only unpartitioned
-    * window runs over #buckets subtotal rows, never batch rows, so
-    * a million-row novel batch numbers itself across the cluster
-    * instead of sorting in one task. For a unique key order the ids
-    * are exactly `startId+1 .. startId+n` in (orderCols) order —
-    * identical to `row_number() OVER (ORDER BY orderCols)` — for ANY
-    * partition count (range boundaries move work between phases but
-    * never change the global order). The shape is not free: the
-    * boundary sample and the subtotal aggregate are jobs of their own,
-    * each re-evaluating `df`, so the catalog upserts use it only past
-    * `DriverUpsertRows`. */
-  private[graft] def withSequentialIds(
-      df: DataFrame, orderCols: Seq[String], startId: Long): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // the local-rank window and the subtotal aggregate MUST agree on
-    // bucket assignment — `_part` is a pure map-side function of the
-    // key (sampled boundaries frozen as broadcast literals, see
-    // graft.operators.RangeBuckets), so both branches compute
-    // identical buckets under any AQE re-planning, with nothing
-    // persisted. Requires a deterministic `df` (both branches
-    // re-evaluate it) — true of every upsert batch here.
-    val bounds = graft.operators.RangeBuckets.boundaries(df, orderCols, parts)
-    val parted = df.withColumn("_part",
-      graft.operators.RangeBuckets.bucket(orderCols.map(col), bounds))
-    val wLocal = Window.partitionBy("_part").orderBy(orderCols.map(col): _*)
-    val local = parted.withColumn("_rn", row_number().over(wLocal))
-    val wParts = Window.orderBy("_part")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bases = parted.groupBy("_part")
-      .agg(count(lit(1)).as("_n"))
-      .withColumn("_base",
-        coalesce(sum(col("_n")).over(wParts) - col("_n"), lit(0L)))
-      .select("_part", "_base")
-    local.join(broadcast(bases), "_part")
-      .withColumn("id", col("_base") + col("_rn") + lit(startId))
-      .drop("_part", "_rn", "_base")
-  }
-
   /** Largest table, and largest batch, an upsert handles on the
     * driver: a few MB of rows. Either one past it takes the
     * distributed path. */
@@ -187,17 +143,21 @@ object Catalog {
   }
 
   /** [[upsert]] past `DriverUpsertRows`: the same rows and ids from a
-    * null-safe left-anti join and [[withSequentialIds]]. */
+    * null-safe left-anti join and a distributed row count in key order
+    * ([[graft.operators.RangeBuckets.runningSums]] of `lit(1L)`, which
+    * is `row_number()` for a unique key), never a one-task sort. */
   private def upsertDistributed(spark: SparkSession, path: String,
       schema: StructType, batch: DataFrame, keyCols: Seq[String]): DataFrame = {
     val existing = readOrEmpty(spark, path, schema)
     val maxId = existing.agg(coalesce(max("id"), lit(0L))).head().getLong(0)
     val deduped = batch.dropDuplicates(keyCols)
-    val novel = withSequentialIds(
+    val novel = graft.operators.RangeBuckets.runningSums(
         deduped.join(existing,
           keyCols.map(c => deduped(c) <=> existing(c)).reduce(_ && _),
           "left_anti"),
-        keyCols, maxId)
+        Nil, keyCols, Seq("_rn" -> lit(1L)),
+        spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      .withColumn("id", col("_rn") + lit(maxId))
       .select(schema.fieldNames.toIndexedSeq.map(col): _*)
     if (!novel.isEmpty)
       novel.write.mode(SaveMode.Append).parquet(path)

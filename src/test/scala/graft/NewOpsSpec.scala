@@ -165,6 +165,47 @@ class NewOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF and PQ codebooks load back from their _-prefixed dirs without a logged warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val embs = Tables.load(spark, sfDir, "embeddings")
+    val ivf = graft.operators.Ivf.train(embs, "vec_id", "embedding",
+      nlist = 4)
+    val pq = graft.operators.Pq.train(embs, "vec_id", "embedding",
+      m = 8, k = 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft_codebook")
+    val me = Thread.currentThread.getName
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("codebook-load", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN) &&
+            e.getThreadName == me)
+          warnings.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    try {
+      graft.operators.Ivf.saveModel(spark, ivf, s"$dir/ivf/_coarse")
+      graft.operators.Pq.saveModel(spark, pq, s"$dir/pq/_model")
+      appender.start()
+      root.addAppender(appender)
+      val ivfBack = graft.operators.Ivf.loadModel(spark, s"$dir/ivf/_coarse")
+      val pqBack = graft.operators.Pq.loadModel(spark, s"$dir/pq/_model")
+      assert(ivfBack.centroids.map(_.toSeq).toSeq ==
+        ivf.centroids.map(_.toSeq).toSeq)
+      assert(pqBack.codebooks.flatten.flatten.toSeq ==
+        pq.codebooks.flatten.flatten.toSeq)
+      assert(warnings.isEmpty, warnings.toString)
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+      import scala.reflect.io.Directory
+      new Directory(dir.toFile).deleteRecursively()
+    }
+  }
+
   test("PQ ANN: 16x code compression; re-ranked recall vs exact L2 top-k") {
     import org.apache.spark.sql.functions.{asc, col, round, typedLit}
     val embs = Tables.load(spark, sfDir, "embeddings")

@@ -187,15 +187,17 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("catalog upsert assigns ids without a batch-wide unpartitioned window") {
     import spark.implicits._
-    // id assignment over a batch must follow Packing's two-phase shape:
+    // id assignment over a batch is RangeBuckets.runningSums of lit(1):
     // the only unpartitioned Window consumes the per-partition subtotal
     // aggregate (#partitions rows), never batch rows — so a million-row
     // novel-source ingest never sorts in one task
     val batch = (1 to 1000)
       .map(i => (1L, s"author$i", s"title$i", 2000 + i % 30))
       .toDF("model_id", "author", "title", "year")
-    val windows = windowsOf(graft.store.Catalog.withSequentialIds(
-      batch, Seq("model_id", "author", "title", "year"), 0L))
+    val windows = windowsOf(graft.operators.RangeBuckets.runningSums(
+      batch, Nil, Seq("model_id", "author", "title", "year"),
+      Seq("id" -> org.apache.spark.sql.functions.lit(1L)),
+      spark.conf.get("spark.sql.shuffle.partitions").toInt))
     assert(windows.nonEmpty)
     windows.foreach { w =>
       if (w.partitionSpec.isEmpty)

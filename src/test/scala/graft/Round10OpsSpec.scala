@@ -91,24 +91,4 @@ class Round10OpsSpec extends AnyFunSuite {
     }
     Caches.release(spark)
   }
-
-  test("malformed graft.dedup.maxDriverPairs fails with a clear error") {
-    import spark.implicits._
-    val pairs = Seq((1L, 2L)).toDF("a_id", "b_id")
-    spark.conf.set("graft.dedup.maxDriverPairs", "not-a-number")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        graft.operators.Dedup.dupClustersAuto(pairs).collect()
-      }
-      assert(e.getMessage.contains("graft.dedup.maxDriverPairs"))
-      spark.conf.set("graft.dedup.maxDriverPairs", "-3")
-      val e2 = intercept[IllegalArgumentException] {
-        graft.operators.Dedup.dupClustersAuto(pairs).collect()
-      }
-      assert(e2.getMessage.contains("positive"))
-    } finally {
-      spark.conf.unset("graft.dedup.maxDriverPairs")
-      Caches.release(spark)
-    }
-  }
 }

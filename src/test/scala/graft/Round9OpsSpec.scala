@@ -52,11 +52,8 @@ class Round9OpsSpec extends AnyFunSuite {
     val pairs = (0L until 50L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val viaDriver = graft.operators.Dedup.dupClustersAuto(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("graft.dedup.maxDriverPairs", "10")
-    val viaCap =
-      try graft.operators.Dedup.dupClustersAuto(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("graft.dedup.maxDriverPairs")
+    val viaCap = graft.operators.Dedup.dupClustersAuto(pairs, 10L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaDriver == viaCap && viaCap.values.toSet == Set(0L))
     Caches.release(spark)
   }
