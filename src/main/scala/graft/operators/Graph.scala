@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.functions._
 
 import graft.{QuerySpec, Tables}
@@ -10,17 +11,20 @@ import graft.QuerySpec.sql
   * link-structure face of a training-data pipeline (domain authority
   * for source weighting, item graphs for hard-negative mining).
   *
-  * Scale stance: the graph lives as a plain (src, dst) DataFrame. The
-  * degree-weighted edge list is built ONCE, hash-partitioned on src
-  * and persisted (O(E), the iterative-algorithm analogue of GraphX's
-  * materialized edge partitions); every PageRank step then shuffles
-  * only the O(V) rank table to the edges' partitioning plus the
-  * contribution aggregate — the corpus-sized relation never moves
-  * again. Triangle counting orients edges by (degree, id) before the
-  * wedge join, the standard power-law guard (Schank–Wagner; Suri–
-  * Vassilvitskii's MapReduce form): every wedge pivot has
-  * out-degree ≤ O(sqrt(E)), so no reducer sees a heavy hitter's full
-  * neighborhood squared.
+  * Scale stance: the graph lives as a plain (src, dst) DataFrame.
+  * PageRank builds its edge input ONCE ([[rankInputs]]): the (src,
+  * dst) pairs hash-partitioned on dst and persisted (O(E), the
+  * iterative-algorithm analogue of GraphX's materialized edge
+  * partitions) plus the O(V) out-degree table. Every step
+  * ([[rankMass]]) then broadcasts only the O(V) rank-weight side to
+  * the edges, and the dst-keyed mass aggregate reuses the cache's
+  * partitioning — no exchange at all per step while that side fits
+  * Spark's broadcast limits ([[rankSideBroadcasts]]); the corpus-sized
+  * relation never moves again. Triangle counting orients edges by
+  * (degree, id) before the wedge join, the standard power-law guard
+  * (Schank–Wagner; Suri–Vassilvitskii's MapReduce form): every wedge
+  * pivot has out-degree ≤ O(sqrt(E)), so no reducer sees a heavy
+  * hitter's full neighborhood squared.
   */
 object Graph {
 
@@ -42,58 +46,17 @@ object Graph {
       edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int, damping: Double = 0.85): DataFrame = {
     require(iterations >= 0, "iterations must be non-negative")
-    // One-time O(E) build — restructured round 18 (ProfileQ-measured;
-    // the round-17 verdict item): plain (src, dst) pairs,
-    // hash-partitioned on _dst and cached, so every iteration's
-    // contribution aggregate REUSES this partitioning — zero exchange
-    // of any per-edge data per step (before: each step's dst-keyed
-    // mass agg paid its own exchange of O(V) partials plus a whole
-    // extra query stage). The 1/outdeg weight no longer rides the
-    // edges: rank·(1.0/outdeg) is computed per NODE on the O(V)
-    // broadcast side — the same float ops as the old per-edge
-    // rank·_w (V multiplies instead of E), which also drops the
-    // weighted-edge JOIN build and a double column from the cache
-    // (2 longs/row); per-edge step work is hash-probe + add.
-    // Partition count = defaultParallelism (scale-adaptive, not a
-    // local constant); ANY hash partitioning on _dst satisfies the
-    // aggregate's ClusteredDistribution, so the count is a width
-    // choice, not a correctness one.
-    val edgesP = graft.Caches.shared(
-      edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism,
-          col("_dst")))
-    // deg is O(V) with many consumers (N count, uniform start, one
-    // rank-weight build per step) — cached, and derived from the
-    // cached edgesP (round 18) so the caller's edge derivation (often
-    // a union over an expensive pair build) is scanned ONCE, by the
-    // edgesP build, not once more here
-    val deg = graft.Caches.shared(
-      edgesP.groupBy(col("_src").as("id"))
-        .agg(count(lit(1)).as("_deg")))
+    val (edgesP, deg) = rankInputs(edges, srcCol, dstCol)
     // N is a scalar (one small count job over the degree table); the
     // uniform start vector and teleport term need it as a literal
     val n = deg.count()
     // empty graph: the schema-correct empty result, not 1/0 literals
     if (n == 0) return deg.select(col("id"), lit(0.0).as("rank"))
+    val hint = rankSideBroadcasts(edges.sparkSession, n)
     var ranks = deg.select(col("id"), lit(1.0 / n).as("rank"))
     for (i <- 1 to iterations) {
-      // the O(V) rank-weight side rides an EXPLICIT broadcast: the
-      // zero-exchange step shape requires the probe side to stay the
-      // dst-partitioned cache (an AQE demotion to sort-merge would
-      // re-shuffle O(E) per step). Broadcast bounds V at the 8 GB /
-      // 512M-row relation cap, and pageRankConverged and
-      // personalizedPageRank broadcast the same O(V) rank side, so
-      // neither is a way past it: a deployment iterating over a V past
-      // that pre-partitions the edges on _src and drops the hint.
-      val rankw = ranks
-        .join(broadcast(deg), "id")
-        .select(col("id").as("_src"),
-          (col("rank") * (lit(1.0) / col("_deg"))).as("_rw"))
-      val next = edgesP
-        .join(broadcast(rankw), "_src")
-        .groupBy(col("_dst"))
-        .agg(sum(col("_rw")).as("_mass"))
-        .select(col("_dst").as("id"),
+      val next = rankMass(edgesP, deg, ranks, hint)
+        .select(col("id"),
           (lit((1.0 - damping) / n) + lit(damping) * col("_mass")).as("rank"))
       // each iteration's O(V) rank table is cached but NOT forced:
       // AQE materializes every query stage exactly once and reuses
@@ -120,9 +83,7 @@ object Graph {
     *    them from iteration 2 on).
     *  - DANGLING MASS: each step, the rank held by out-edge-less nodes
     *    is redistributed uniformly — the standard correction
-    *    (Page et al. 1999) that keeps Σ rank = 1 on any digraph. The
-    *    mass is a lazy 1-row aggregate broadcast into the step, not a
-    *    driver-side collect.
+    *    (Page et al. 1999) that keeps Σ rank = 1 on any digraph.
     *  - `tol` > 0 terminates when the L1 step delta ≤ tol. The delta
     *    is one O(V) join+agg job per iteration — the honest price of
     *    convergence detection (tol = 0 keeps the fully lazy fixed
@@ -130,8 +91,9 @@ object Graph {
     *  - `checkpointEvery` truncates lineage with an eager
     *    localCheckpoint every k steps: a 100-iteration chain otherwise
     *    accumulates 100 join+agg plan levels, and analysis/codegen
-    *    time grows superlinearly (the `:36` lineage hazard, now
-    *    enforced rather than documented).
+    *    time grows superlinearly.
+    * The loop is [[checkpointedIteration]], shared with
+    * [[personalizedPageRank]].
     *
     * On a symmetric edge list (no dangling nodes, every node a source)
     * the per-step arithmetic is identical to [[pageRank]]'s — the
@@ -152,76 +114,199 @@ object Graph {
       tol: Double = 0.0, checkpointEvery: Int = 20): (DataFrame, Int) = {
     require(maxIterations >= 0, "maxIterations must be non-negative")
     require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    // dst-partitioned like [[pageRank]]'s round-18 shape: the per-step
-    // mass aggregate reuses this partitioning (zero per-edge exchange
-    // per step) and the 1/outdeg weight rides the O(V) broadcast side
-    // instead of a weighted-edge build
-    val e = graft.Caches.shared(
+    val (edgesP, deg) = rankInputs(edges, srcCol, dstCol)
+    val nodes = endpoints(edgesP)
+    val n = nodes.count()
+    if (n == 0) return (nodes.select(col("id"), lit(0.0).as("rank")), 0)
+    checkpointedIteration(edgesP, deg, nodes,
+      nodes.select(col("id"), lit(1.0 / n).as("rank")), n,
+      maxIterations, tol, checkpointEvery) { (mass, danglingMass) =>
+      // the dangling share dm/n is divided on the driver
+      lit((1.0 - damping) / n) + lit(damping) * (mass + lit(danglingMass / n))
+    }
+  }
+
+  /** Personalized PageRank (random walk with restart): the teleport
+    * distribution concentrates on `seeds` instead of being uniform —
+    * r_{t+1}(v) = (1−d)·p(v) + d·(Σ_{(u,v)∈E} r_t(u)/outdeg(u)
+    * + danglingMass·p(v)), with p(v) = 1/|S| for v ∈ S else 0 and
+    * r_0 = p. The seed-proximity score behind "rank the corpus by
+    * closeness to these known-good/known-spam nodes" — quality
+    * propagation, topical authority, graph-based label spreading.
+    *
+    * Same inputs, step and loop as [[pageRankConverged]] (nodes =
+    * src ∪ dst, left-join so in-edge-less nodes keep teleport mass,
+    * state via eager localCheckpoint only, optional L1 tolerance
+    * stop); only the teleport and the dangling restart differ —
+    * dangling mass restarts AT THE SEEDS, the RWR convention. Σ rank =
+    * 1 on any digraph (spec). The _dst-partitioned edge pairs are
+    * built once and cached; each step broadcasts only the O(V)
+    * rank-weight side.
+    *
+    * `seeds` is one `id` column; seeds not present in the graph's node
+    * set are ignored (their teleport share would be unreachable mass).
+    * Requires at least one seed in the graph. */
+  def personalizedPageRank(
+      edges: DataFrame, srcCol: String, dstCol: String, seeds: DataFrame,
+      maxIterations: Int, damping: Double = 0.85,
+      tol: Double = 0.0, checkpointEvery: Int = 20): DataFrame = {
+    require(maxIterations >= 0, "maxIterations must be non-negative")
+    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
+    val (edgesP, deg) = rankInputs(edges, srcCol, dstCol)
+    // every node, with _s set where it is a seed: one count job over
+    // this cached O(V) frame yields both N and |S ∩ nodes|
+    val marked = graft.Caches.shared(
+      endpoints(edgesP).join(
+        seeds.select(col(seeds.columns.head).as("id")).distinct()
+          .withColumn("_s", lit(1)), Seq("id"), "left"))
+    val counts = marked.agg(count(lit(1)), count(col("_s"))).head()
+    val (n, nSeeds) = (counts.getLong(0), counts.getLong(1))
+    require(nSeeds > 0, "personalizedPageRank needs >= 1 seed in the graph")
+    // the personalization vector, the teleport AND dangling-restart
+    // weight of every step
+    val nodesP = marked.select(col("id"),
+      when(col("_s").isNotNull, lit(1.0) / nSeeds)
+        .otherwise(lit(0.0)).as("_p"))
+    checkpointedIteration(edgesP, deg, nodesP,
+      nodesP.select(col("id"), col("_p").as("rank")), n,
+      maxIterations, tol, checkpointEvery) { (mass, danglingMass) =>
+      lit(1.0 - damping) * col("_p") +
+        lit(damping) * (mass + lit(danglingMass) * col("_p"))
+    }._1
+  }
+
+  /** The edge input every PageRank form shares, built once per call
+    * (restructured round 18, ProfileQ-measured): the plain (_src,
+    * _dst) pairs hash-partitioned on _dst and cached, so every step's
+    * mass aggregate REUSES this partitioning — zero exchange of any
+    * per-edge data per step — and the O(V) out-degree table (id,
+    * _deg), cached and derived from that cache, so the caller's edge
+    * derivation (often a union over an expensive pair build) is
+    * scanned ONCE. The 1/outdeg weight does not ride the edges (2
+    * longs per cached row): [[rankMass]] applies it per node on the
+    * O(V) side. Partition count = defaultParallelism (scale-adaptive,
+    * not a local constant); ANY hash partitioning on _dst satisfies
+    * the aggregate's ClusteredDistribution, so the count is a width
+    * choice, not a correctness one. */
+  private def rankInputs(
+      edges: DataFrame, srcCol: String, dstCol: String): (DataFrame, DataFrame) = {
+    val edgesP = graft.Caches.shared(
       edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
         .repartition(edges.sparkSession.sparkContext.defaultParallelism,
           col("_dst")))
-    val nodes = graft.Caches.shared(
-      e.select(col("_src").as("id"))
-        .union(e.select(col("_dst").as("id"))).distinct())
     val deg = graft.Caches.shared(
-      e.groupBy(col("_src").as("id")).agg(count(lit(1)).as("_deg")))
+      edgesP.groupBy(col("_src").as("id"))
+        .agg(count(lit(1)).as("_deg")))
+    (edgesP, deg)
+  }
+
+  /** The cached node set src ∪ dst of [[rankInputs]]' edges: sinks and
+    * nodes without in-edges get a rank too. */
+  private def endpoints(edgesP: DataFrame): DataFrame =
+    graft.Caches.shared(
+      edgesP.select(col("_src").as("id"))
+        .union(edgesP.select(col("_dst").as("id"))).distinct())
+
+  /** One PageRank step's mass, (id, _mass) = Σ_{(u,v)∈E} r(u)/outdeg(u)
+    * for every v with in-edges. rank·(1.0/outdeg) is computed per NODE
+    * on the O(V) side (V multiplies, not E), and that side rides an
+    * EXPLICIT broadcast to the _dst-partitioned edge cache, whose
+    * partitioning the _dst aggregate reuses: no exchange in the step
+    * (PlanShapeSpec pins it). The hint is explicit because an AQE
+    * demotion to sort-merge would re-shuffle O(E) per step. With
+    * `hint` false ([[rankSideBroadcasts]]) the same joins are planned
+    * without hints: O(E) re-shuffled per step, but the step completes
+    * where a broadcast would fail. */
+  private def rankMass(
+      edgesP: DataFrame, deg: DataFrame, ranks: DataFrame,
+      hint: Boolean): DataFrame = {
+    def side(df: DataFrame) = if (hint) broadcast(df) else df
+    val rankw = ranks
+      .join(side(deg), "id")
+      .select(col("id").as("_src"),
+        (col("rank") * (lit(1.0) / col("_deg"))).as("_rw"))
+    edgesP
+      .join(side(rankw), "_src")
+      .groupBy(col("_dst"))
+      .agg(sum(col("_rw")).as("_mass"))
+      .select(col("_dst").as("id"), col("_mass"))
+  }
+
+  /** Whether [[rankMass]]'s O(V) sides over `n` nodes fit Spark's
+    * broadcast limits, decided on the driver before a step is planned:
+    * `BroadcastExchangeExec` fails a build side of 512M rows or more,
+    * and one whose hashed relation reaches
+    * `spark.sql.maxBroadcastTableSize`. The relation size is
+    * over-estimated for an integral id (every caller's; the join key
+    * is then a long): its 1 MiB first page plus a small dense index,
+    * and 128 bytes a row — the 24-byte two-field row and its 8-byte
+    * chain link, doubled for page growth, plus up to four 8-byte
+    * index slots. */
+  private def rankSideBroadcasts(spark: SparkSession, n: Long): Boolean =
+    n < 512000000L &&
+      (2L << 20) + 128L * n < GraftShim.maxBroadcastTableBytes(spark)
+
+  /** The power iteration of [[pageRankConverged]] and
+    * [[personalizedPageRank]]. From `start` (id, rank), each step
+    * left-joins [[rankMass]] onto `base` (id plus the caller's
+    * columns, one row per node, so nodes without in-edges keep a rank)
+    * and sets rank = step(mass, danglingMass), mass coalesced to 0.0.
+    * danglingMass is the rank the out-edge-less nodes of `base` held
+    * after the previous step, summed on the driver from the
+    * checkpointed state (a 1-row O(V) job, only when such nodes exist
+    * — a lazy broadcast-agg would put a SECOND reference to the
+    * previous ranks in the step plan). `tol` > 0 stops once the L1
+    * delta of a step is ≤ tol. Returns the ranks and the steps run.
+    *
+    * Iteration-state discipline — measured, not guessed: chaining
+    * persist() across iterations nests InMemoryRelations, and
+    * Spark's executed-plan STRING (rebuilt per job for the SQL
+    * listener) DOUBLES per nesting level — 106 MB of plan text by
+    * iteration 12, driver OOM by ~17 on a 4-node graph. So the loop
+    * NEVER persists intermediate rank tables. State materializes only
+    * through eager localCheckpoint (a LogicalRDD plan LEAF — resets
+    * both plan depth and lineage): every step when a per-step job
+    * exists anyway (dangling mass / tol delta — the job would
+    * otherwise recompute the whole segment per step), else every
+    * `checkpointEvery` steps, giving one execution of each segment at
+    * its closing checkpoint and plans at most checkpointEvery deep.
+    * A superseded checkpoint's blocks are freed (through
+    * `GraftShim.releaseLocalCheckpoint`: `unpersist` cannot reach a
+    * localCheckpoint) as soon as the next one materializes; the last
+    * one frees with the caller's Caches.release (the house contract
+    * for operator-internal state — a released localCheckpoint cannot
+    * be lazily recomputed, so consume the result before releasing, as
+    * Verify/Bench do). */
+  private def checkpointedIteration(
+      edgesP: DataFrame, deg: DataFrame, base: DataFrame, start: DataFrame,
+      n: Long, maxIterations: Int, tol: Double, checkpointEvery: Int)(
+      step: (Column, Double) => Column): (DataFrame, Int) = {
+    val spark = base.sparkSession
     // dangling = nodes with no out-edges; O(V), two consumers per step
     val dangling = graft.Caches.shared(
-      nodes.join(deg.select("id"), Seq("id"), "left_anti"))
-    val n = nodes.count()
-    if (n == 0) return (nodes.select(col("id"), lit(0.0).as("rank")), 0)
-    val spark = edges.sparkSession
+      base.select("id").join(deg.select("id"), Seq("id"), "left_anti"))
     // One driver count decides the dangling path up front: with no
     // dangling nodes (every symmetric graph) the correction term is
     // identically zero and no per-step mass job ever runs.
     val nDangling = dangling.count()
-    // Iteration-state discipline — measured, not guessed: chaining
-    // persist() across iterations nests InMemoryRelations, and
-    // Spark's executed-plan STRING (rebuilt per job for the SQL
-    // listener) DOUBLES per nesting level — 106 MB of plan text by
-    // iteration 12, driver OOM by ~17 on a 4-node graph. So the loop
-    // NEVER persists intermediate rank tables. State materializes only
-    // through eager localCheckpoint (a LogicalRDD plan LEAF — resets
-    // both plan depth and lineage): every step when a per-step job
-    // exists anyway (dangling mass / tol delta — the job would
-    // otherwise recompute the whole segment per step), else every
-    // `checkpointEvery` steps, giving one execution of each segment at
-    // its closing checkpoint and plans at most checkpointEvery deep.
-    // Superseded checkpoint blocks free as soon as the next checkpoint
-    // materializes; the final state frees with the caller's
-    // Caches.release (the house contract for operator-internal state —
-    // note a released localCheckpoint cannot be lazily recomputed, so
-    // consume the result before releasing, as Verify/Bench do).
+    val hint = rankSideBroadcasts(spark, n)
     val eachStep = nDangling > 0 || tol > 0
-    var live = List.empty[DataFrame]
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-    var itersRun = 0
+    var live = Option.empty[DataFrame]
+    var ranks = start
+    var steps = 0
     var converged = false
-    var i = 1
-    while (i <= maxIterations && !converged) {
-      // dangling mass as a driver scalar from the checkpointed
-      // previous step (1-row O(V) job) — a lazy broadcast-agg would
-      // put a SECOND reference to `ranks` in the step plan
-      val dmOverN: Double =
+    while (steps < maxIterations && !converged) {
+      val danglingMass =
         if (nDangling == 0) 0.0
         else ranks.join(dangling, "id")
           .agg(coalesce(sum("rank"), lit(0.0)))
-          .head().getDouble(0) / n
-      val rankw = ranks
-        .join(broadcast(deg), "id")
-        .select(col("id").as("_src"),
-          (col("rank") * (lit(1.0) / col("_deg"))).as("_rw"))
-      val contribs = e
-        .join(broadcast(rankw), "_src")
-        .groupBy(col("_dst"))
-        .agg(sum(col("_rw")).as("_mass"))
-        .select(col("_dst").as("id"), col("_mass"))
-      val stepped = nodes
-        .join(contribs, Seq("id"), "left")
+          .head().getDouble(0)
+      val stepped = base
+        .join(rankMass(edgesP, deg, ranks, hint), Seq("id"), "left")
         .select(col("id"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("_mass"), lit(0.0)) + lit(dmOverN))).as("rank"))
-      val materialize = eachStep || i % checkpointEvery == 0
+          step(coalesce(col("_mass"), lit(0.0)), danglingMass).as("rank"))
+      steps += 1
+      val materialize = eachStep || steps % checkpointEvery == 0
       val next = if (materialize) stepped.localCheckpoint(true) else stepped
       if (tol > 0) {
         val delta = next.withColumnRenamed("rank", "_r2")
@@ -233,118 +318,14 @@ object Graph {
       if (materialize) {
         // `next` holds its own blocks now — everything older is
         // unreachable by construction (next's plan is a leaf)
-        live.foreach(_.unpersist(blocking = false))
-        live = List(next)
+        live.foreach(GraftShim.releaseLocalCheckpoint)
+        live = Some(next)
       }
       ranks = next
-      itersRun = i
-      i += 1
     }
-    // remaining state frees with the caller's Caches.release, like
-    // every operator-internal persist
-    val remaining = live
-    graft.Caches.registerCleanup(spark)(() =>
-      remaining.foreach(_.unpersist(blocking = false)))
-    (ranks, itersRun)
-  }
-
-  /** Personalized PageRank (random walk with restart): the teleport
-    * distribution concentrates on `seeds` instead of being uniform —
-    * r_{t+1}(v) = (1−d)·p(v) + d·(Σ_{(u,v)∈E} r_t(u)/outdeg(u)
-    * + danglingMass·p(v)), with p(v) = 1/|S| for v ∈ S else 0 and
-    * r_0 = p. The seed-proximity score behind "rank the corpus by
-    * closeness to these known-good/known-spam nodes" — quality
-    * propagation, topical authority, graph-based label spreading.
-    *
-    * Same iteration discipline as [[pageRankConverged]] (nodes =
-    * src ∪ dst, left-join so in-edge-less nodes keep teleport mass,
-    * dangling mass restarts AT THE SEEDS — the RWR convention — state
-    * via eager localCheckpoint only, optional L1 tolerance stop).
-    * Σ rank = 1 on any digraph (spec). The O(E) weighted-edge relation
-    * is built once and cached; each step shuffles only O(V) rank rows.
-    *
-    * `seeds` is one `id` column; seeds not present in the graph's node
-    * set are ignored (their teleport share would be unreachable mass).
-    * Requires at least one seed in the graph. */
-  def personalizedPageRank(
-      edges: DataFrame, srcCol: String, dstCol: String, seeds: DataFrame,
-      maxIterations: Int, damping: Double = 0.85,
-      tol: Double = 0.0, checkpointEvery: Int = 20): DataFrame = {
-    require(maxIterations >= 0, "maxIterations must be non-negative")
-    require(checkpointEvery >= 1, "checkpointEvery must be >= 1")
-    // dst-partitioned like [[pageRank]]'s round-18 shape (zero
-    // per-edge exchange per step; 1/outdeg on the broadcast side)
-    val e = graft.Caches.shared(
-      edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-        .repartition(edges.sparkSession.sparkContext.defaultParallelism,
-          col("_dst")))
-    val nodes = graft.Caches.shared(
-      e.select(col("_src").as("id"))
-        .union(e.select(col("_dst").as("id"))).distinct())
-    val deg = graft.Caches.shared(
-      e.groupBy(col("_src").as("id")).agg(count(lit(1)).as("_deg")))
-    val dangling = graft.Caches.shared(
-      nodes.join(deg.select("id"), Seq("id"), "left_anti"))
-    val inGraph = graft.Caches.shared(
-      seeds.select(col(seeds.columns.head).as("id")).distinct()
-        .join(nodes, "id"))
-    val nSeeds = inGraph.count()
-    require(nSeeds > 0, "personalizedPageRank needs >= 1 seed in the graph")
-    // the personalization vector is O(V), consumed by every step's
-    // teleport term AND the dangling-restart term — cached like deg
-    val nodesP = graft.Caches.shared(
-      nodes.join(inGraph.withColumn("_s", lit(1)), Seq("id"), "left")
-        .select(col("id"),
-          when(col("_s").isNotNull, lit(1.0) / nSeeds)
-            .otherwise(lit(0.0)).as("_p")))
-    val nDangling = dangling.count()
-    val spark = edges.sparkSession
-    val eachStep = nDangling > 0 || tol > 0
-    var live = List.empty[DataFrame]
-    var ranks = nodesP.select(col("id"), col("_p").as("rank"))
-    var converged = false
-    var i = 1
-    while (i <= maxIterations && !converged) {
-      val dm: Double =
-        if (nDangling == 0) 0.0
-        else ranks.join(dangling, "id")
-          .agg(coalesce(sum("rank"), lit(0.0)))
-          .head().getDouble(0)
-      val rankw = ranks
-        .join(broadcast(deg), "id")
-        .select(col("id").as("_src"),
-          (col("rank") * (lit(1.0) / col("_deg"))).as("_rw"))
-      val contribs = e
-        .join(broadcast(rankw), "_src")
-        .groupBy(col("_dst"))
-        .agg(sum(col("_rw")).as("_mass"))
-        .select(col("_dst").as("id"), col("_mass"))
-      val stepped = nodesP
-        .join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1.0 - damping) * col("_p") + lit(damping) *
-            (coalesce(col("_mass"), lit(0.0)) + lit(dm) * col("_p")))
-            .as("rank"))
-      val materialize = eachStep || i % checkpointEvery == 0
-      val next = if (materialize) stepped.localCheckpoint(true) else stepped
-      if (tol > 0) {
-        val delta = next.withColumnRenamed("rank", "_r2")
-          .join(ranks, "id")
-          .agg(sum(abs(col("_r2") - col("rank"))).as("d"))
-          .head().getDouble(0)
-        converged = delta <= tol
-      }
-      if (materialize) {
-        live.foreach(_.unpersist(blocking = false))
-        live = List(next)
-      }
-      ranks = next
-      i += 1
-    }
-    val remaining = live
-    graft.Caches.registerCleanup(spark)(() =>
-      remaining.foreach(_.unpersist(blocking = false)))
-    ranks
+    live.foreach(last => graft.Caches.registerCleanup(spark)(
+      () => GraftShim.releaseLocalCheckpoint(last)))
+    (ranks, steps)
   }
 
   /** HITS — Kleinberg's hubs & authorities over a DIRECTED edge list
@@ -431,7 +412,7 @@ object Graph {
         .localCheckpoint(true)
       val m = keep.count()
       if (m == prevSurvivors) {
-        org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(keep)
+        GraftShim.releaseLocalCheckpoint(keep)
         stable = true
       } else {
         prevSurvivors = m
@@ -439,8 +420,8 @@ object Graph {
           .join(keep.withColumnRenamed("_id", "_s"), Seq("_s"), "left_semi")
           .join(keep.withColumnRenamed("_id", "_d"), Seq("_d"), "left_semi")
           .localCheckpoint(true)
-        org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(live)
-        org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(keep)
+        GraftShim.releaseLocalCheckpoint(live)
+        GraftShim.releaseLocalCheckpoint(keep)
         live = next
         rounds += 1
       }
@@ -450,7 +431,7 @@ object Graph {
       s"kCore did not reach its fixed point in $maxRounds rounds; raise maxRounds")
     val core = live
     graft.Caches.registerCleanup(edges.sparkSession)(
-      () => org.apache.spark.sql.GraftShim.releaseLocalCheckpoint(core))
+      () => GraftShim.releaseLocalCheckpoint(core))
     core.groupBy(col("_s").as("id")).agg(count(lit(1)).as("core_deg"))
   }
 

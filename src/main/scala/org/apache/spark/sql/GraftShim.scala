@@ -26,6 +26,14 @@ object GraftShim {
     case _ => 10L * 1024 * 1024
   }
 
+  /** The session's `spark.sql.maxBroadcastTableSize` in bytes: a
+    * broadcast build side whose hashed relation reaches it fails in
+    * `BroadcastExchangeExec` (a hint does not lift the limit). */
+  def maxBroadcastTableBytes(spark: SparkSession): Long = spark match {
+    case s: classic.SparkSession => s.sessionState.conf.maxBroadcastTableSizeInBytes
+    case _ => 8L << 30
+  }
+
   /** Planned partition count of `df`'s physical plan WITHOUT the
     * `df.rdd` conversion (which appends a to-Row deserialization
     * projection and builds a second RDD lineage just to read a

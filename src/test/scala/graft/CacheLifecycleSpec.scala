@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Graph}
 
 /** The cache-lifecycle contract (graft.Caches): operator-internal
   * persists are registered per session and freed by release(), so a
@@ -61,5 +61,33 @@ class CacheLifecycleSpec extends AnyFunSuite {
     // released clusters DataFrame must fail loudly (truncated lineage),
     // never silently return wrong rows
     intercept[Exception] { clusters.count() }
+  }
+
+  test("pageRankConverged and personalizedPageRank keep one checkpoint; release frees it") {
+    Caches.release(spark)
+    val s = spark
+    import s.implicits._
+    // 0→1→2 with sink 2, 3→0: a dangling digraph, so every step
+    // checkpoints (the per-step dangling-mass job reads the state)
+    val edges = Seq((0L, 1L), (1L, 2L), (3L, 0L)).toDF("src", "dst")
+    def checkpointed = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if rdd.isCheckpointed => id }.toSet
+    val before = checkpointed
+    val pr = Graph.pageRankConverged(edges, "src", "dst", maxIterations = 12)
+    pr.collect()
+    val afterPr = checkpointed -- before
+    assert(afterPr.size <= 1, s"pageRankConverged left ${afterPr.size} checkpoints")
+    val ppr = Graph.personalizedPageRank(edges, "src", "dst",
+      Seq(0L).toDF("id"), maxIterations = 12)
+    ppr.collect()
+    val afterPpr = checkpointed -- before -- afterPr
+    assert(afterPpr.size <= 1,
+      s"personalizedPageRank left ${afterPpr.size} checkpoints")
+    Caches.release(spark)
+    assert((checkpointed -- before).isEmpty, "release must free the last checkpoints")
+    // the results were their last checkpoints: re-collecting fails
+    // loudly instead of silently recomputing
+    intercept[Exception] { pr.collect() }
+    intercept[Exception] { ppr.collect() }
   }
 }

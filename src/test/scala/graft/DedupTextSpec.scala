@@ -232,6 +232,50 @@ class DedupTextSpec extends AnyFunSuite {
     assert(siblings == Set("idx"), s"unexpected leftovers: $siblings")
   }
 
+  test("materializeAtomic: a throwing build leaves nothing; the next call rebuilds") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("matomic_throw").toString
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def marked(path: String) = fs.exists(
+      new org.apache.hadoop.fs.Path(path, graft.store.AnnIndexes.MarkerName))
+    def siblings = fs.listStatus(new org.apache.hadoop.fs.Path(base))
+      .map(_.getPath.getName).toSet
+    def write(tmp: String): Unit = Seq((1L, "x")).toDF("id", "v").write.parquet(tmp)
+    // a build that writes a part file, then throws
+    def failing(tmp: String): Nothing = {
+      write(tmp)
+      throw new IllegalStateException("build failed")
+    }
+    val path = s"$base/idx"
+    val e = intercept[IllegalStateException] {
+      graft.store.AnnIndexes.materializeAtomic(spark, path)(failing)
+    }
+    assert(e.getMessage == "build failed")
+    assert(!marked(path))
+    assert(siblings.isEmpty, s"leftovers of the failed build: $siblings")
+    var builds = 0
+    graft.store.AnnIndexes.materializeAtomic(spark, path) { tmp =>
+      builds += 1
+      write(tmp)
+    }
+    assert(builds == 1 && marked(path))
+    assert(spark.read.parquet(path).count() == 1)
+    assert(siblings == Set("idx"), s"unexpected leftovers: $siblings")
+    // the model memo: a failed build memoizes nothing
+    val mpath = s"$base/model"
+    intercept[IllegalStateException] {
+      graft.store.AnnIndexes.model[String](spark, mpath)(failing)(_ => "loaded")
+    }
+    assert(!marked(mpath))
+    val m = graft.store.AnnIndexes.model[String](spark, mpath) { tmp =>
+      write(tmp)
+      "rebuilt"
+    }(_ => "loaded")
+    assert(m == "rebuilt" && marked(mpath))
+    assert(siblings == Set("idx", "model"), s"unexpected leftovers: $siblings")
+  }
+
   test("compactChunks recovers a store stranded mid-swap") {
     import spark.implicits._
     val path = java.nio.file.Files.createTempDirectory("compact_rec").toString + "/chunks"

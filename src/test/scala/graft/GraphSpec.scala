@@ -298,6 +298,57 @@ class GraphSpec extends AnyFunSuite {
     Caches.release(spark)
   }
 
+  test("PageRank family: rank bits are pinned") {
+    import spark.implicits._
+    // SHA-256 over (id, raw rank bits) in id order, recorded before the
+    // three PageRank forms shared one step and one checkpointed loop
+    def digest(df: org.apache.spark.sql.DataFrame): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
+        .foreach { case (id, v) =>
+          md.update(java.nio.ByteBuffer.allocate(16).putLong(id)
+            .putLong(java.lang.Double.doubleToRawLongBits(v)).array())
+        }
+      md.digest().map("%02x".format(_)).mkString
+    }
+    // sinks 5 and 6; 4 has no in-edges
+    val dangling = Seq((0L, 1L), (1L, 2L), (3L, 0L), (1L, 3L), (4L, 2L),
+      (4L, 5L), (2L, 5L), (0L, 6L)).toDF("src", "dst")
+    val g = sym(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (0L, 2L),
+      (3L, 4L), (4L, 5L)))
+    val (conv, iters) = Graph.pageRankConvergedWithIters(dangling,
+      "src", "dst", maxIterations = 40, tol = 1e-6, checkpointEvery = 3)
+    val got = Seq(
+      s"converged $iters " + digest(conv),
+      "personalized " + digest(Graph.personalizedPageRank(dangling,
+        "src", "dst", Seq(0L, 4L).toDF("id"), maxIterations = 15)),
+      "pageRank " + digest(Graph.pageRank(g, "src", "dst", iterations = 8)),
+      "lazy " + digest(Graph.pageRankConverged(g, "src", "dst",
+        maxIterations = 10, checkpointEvery = 3)))
+    assert(got == Seq(
+      "converged 21 1db0f3b76f181661826f42ec29cc8c3d5cbe5f6c22f301d3d4d7938d214d8e5d",
+      "personalized a05acbe6dce7f28b935d85435930480b7b1a5e1e8f050057a0f60274ba641f93",
+      "pageRank 2abba17ccca3f25963a4ec72c090eed589b6512e0711f95f01ff888d6d4cd6b0",
+      "lazy e0867ad0759e09b745cb8caff7d4654355e6cfe1c83c1821e1bc15c9b70e934d"), got.mkString("\n"))
+    Caches.release(spark)
+  }
+
+  test("the PageRank family has one edge build, one step and one checkpointed loop") {
+    val src = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/main/scala/graft/operators/Graph.scala")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val section = src.substring(
+      src.indexOf("  def pageRank("), src.indexOf("  def hits("))
+    def sites(re: String) = re.r.findAllIn(section).size
+    assert(sites("""\.join\(\w+\(rankw\)""") == 1, "rank-weight step sites")
+    assert(sites("""repartition\([^)]*col\("_dst"\)""") == 1,
+      "_dst repartitions of the PageRank edges")
+    assert(sites("""\.localCheckpoint\(true\)""") == 1, "checkpointed loops")
+    // a localCheckpoint is freed through GraftShim.releaseLocalCheckpoint;
+    // Dataset.unpersist cannot reach its blocks
+    assert(sites("""unpersist\(""") == 0, "unpersist in the PageRank section")
+  }
+
   test("pageRankConverged: 50 checkpointed iterations complete and converge") {
     val n = 6L
     val cycle = sym((0L until n).map(i => (i, (i + 1) % n)))

@@ -803,6 +803,44 @@ class PlanShapeSpec extends AnyFunSuite {
     Caches.release(spark)
   }
 
+  test("g1 pagerank step past the broadcast limit: unhinted joins, the same ranks") {
+    // The rank side of the g1 pin's ring cannot broadcast under a
+    // 64 KiB spark.sql.maxBroadcastTableSize (its hashed relation
+    // alone starts with a 1 MiB page): an explicit hint would make
+    // BroadcastExchangeExec fail the query. The step must drop its
+    // hints instead and still produce the default session's ranks.
+    val s = spark
+    import s.implicits._
+    val ring = (0L until 2000L).map(i => (i, (i + 1) % 2000L))
+    val edges = (ring ++ ring.map(_.swap)).toDF("src", "dst")
+    def ranks(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val expected = ranks(graft.operators.Graph.pageRank(edges, "src", "dst",
+      iterations = 3))
+    Caches.release(spark)
+    val keys = Seq("spark.sql.maxBroadcastTableSize",
+      "spark.sql.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.maxBroadcastTableSize", "64k")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val df = graft.operators.Graph.pageRank(edges, "src", "dst",
+        iterations = 3)
+      val got = ranks(df)
+      val plan = df.queryExecution.executedPlan
+      assert(deepCollect(plan) {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j
+      }.isEmpty, "no broadcast past the limit:\n" + plan.toString.take(2000))
+      assert(got.keySet == expected.keySet)
+      got.foreach { case (id, v) =>
+        assert(math.abs(v - expected(id)) < 1e-12, s"node $id: $v vs ${expected(id)}")
+      }
+    } finally {
+      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      Caches.release(spark)
+    }
+  }
+
   test("p13 mixture sampling: the corpus leg rides a broadcast — its only exchange is the output sort") {
     // the rate table is domain-bounded and must broadcast; the corpus
     // scan's md5 decision is map work, so the ONLY corpus-side
